@@ -109,15 +109,3 @@ def chunk_ids(df: DataFrame, id_col: str, chunk_size: int) -> DataFrame:
         .drop("__pid", "__offset")
     )
 
-
-def batched(iterable, size: int):
-    """Yield lists of ≤ size items — the in-partition batching helper for
-    sink writes (the A4 semantics inside foreachPartition)."""
-    batch: list = []
-    for item in iterable:
-        batch.append(item)
-        if len(batch) >= size:
-            yield batch
-            batch = []
-    if batch:
-        yield batch

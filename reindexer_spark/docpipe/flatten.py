@@ -22,6 +22,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 CORRUPT_COL = "_corrupt_record"
+# set by parse_flagged: true for a row whose payload failed to parse
+QUARANTINE_FLAG = "_quarantined"
 
 # Solr-style dynamic-field suffix per Spark type (README.md:101-103's
 # "suffixes" step; the exact table is ours — argot's is not published).
@@ -71,6 +73,50 @@ def infer_content_schema(
     return T.StructType([f for f in inferred.fields if f.name != CORRUPT_COL])
 
 
+def parse_flagged(
+    df: DataFrame,
+    schema: T.StructType,
+    content_col: str = "content",
+    parsed_col: str = "doc",
+) -> DataFrame:
+    """Permissive JSON parse that keeps every row: adds the parsed struct
+    ``parsed_col`` and the boolean ``QUARANTINE_FLAG`` column, true for a
+    record to quarantine (a non-null payload that fails to parse).
+
+    Carrying the flag instead of splitting the frame lets one pass both
+    count the two outcomes and post the good rows.
+
+    Degenerate case — no payload fields at all (empty input, or a corpus
+    where nothing parsed during inference): every non-null payload is
+    flagged and ``parsed_col`` carries a single null ``_no_payload``
+    marker field so downstream flatten/suffix still compose.
+    """
+    content = F.col(content_col)
+    if not [f for f in schema.fields if f.name != CORRUPT_COL]:
+        return df.withColumn(
+            parsed_col, F.from_json(content, "_no_payload string")
+        ).withColumn(QUARANTINE_FLAG, content.isNotNull())
+
+    schema_with_corrupt = T.StructType(
+        [
+            *[f for f in schema.fields if f.name != CORRUPT_COL],
+            T.StructField(CORRUPT_COL, T.StringType()),
+        ]
+    )
+    parsed = F.from_json(
+        content,
+        schema_with_corrupt,
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
+    )
+    return df.withColumn(parsed_col, parsed).withColumns(
+        {
+            QUARANTINE_FLAG: F.col(f"{parsed_col}.{CORRUPT_COL}").isNotNull()
+            & content.isNotNull(),
+            parsed_col: F.col(parsed_col).dropFields(CORRUPT_COL),
+        }
+    )
+
+
 def parse_content(
     df: DataFrame,
     schema: T.StructType,
@@ -79,44 +125,16 @@ def parse_content(
 ) -> tuple[DataFrame, DataFrame]:
     """Permissive JSON parse; returns (good, quarantine) DataFrames.
 
-    A record is quarantined when it fails to parse (all-null struct with
-    non-null input).  The quarantine frame is the A9 error-channel
-    analogue: persisted/counted by the caller instead of crashing the
-    job.
-
-    Degenerate case — no payload fields at all (empty input, or a corpus
-    where nothing parsed during inference): every non-null payload is
-    quarantined and the good side carries a single null ``_no_payload``
-    marker field so downstream flatten/suffix still compose.
+    A record is quarantined when it fails to parse (see
+    :func:`parse_flagged`).  The quarantine frame is the A9
+    error-channel analogue: the input rows, reported by the caller
+    instead of crashing the job.
     """
-    if not [f for f in schema.fields if f.name != CORRUPT_COL]:
-        quarantine = df.filter(F.col(content_col).isNotNull())
-        good = df.filter(F.col(content_col).isNull()).withColumn(
-            parsed_col,
-            F.from_json(F.col(content_col), "_no_payload string"),
-        )
-        return good, quarantine
-
-    schema_with_corrupt = T.StructType(
-        [
-            *[f for f in schema.fields if f.name != CORRUPT_COL],
-            T.StructField(CORRUPT_COL, T.StringType()),
-        ]
-    )
-    parsed = df.withColumn(
-        parsed_col,
-        F.from_json(
-            F.col(content_col),
-            schema_with_corrupt,
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": CORRUPT_COL},
-        ),
-    )
-    bad = F.col(f"{parsed_col}.{CORRUPT_COL}").isNotNull()
-    good_df = parsed.filter(~bad | F.col(content_col).isNull()).withColumn(
-        parsed_col, F.col(parsed_col).dropFields(CORRUPT_COL)
-    )
-    quarantine = parsed.filter(bad & F.col(content_col).isNotNull()).drop(parsed_col)
-    return good_df, quarantine
+    flagged = parse_flagged(df, schema, content_col, parsed_col)
+    bad = F.col(QUARANTINE_FLAG)
+    good = flagged.filter(~bad).drop(QUARANTINE_FLAG)
+    quarantine = flagged.filter(bad).drop(parsed_col, QUARANTINE_FLAG)
+    return good, quarantine
 
 
 def flatten_struct_columns(

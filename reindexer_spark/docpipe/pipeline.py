@@ -8,20 +8,22 @@ Reference stage → here:
 - resume splice (config.go:29-34)           → resume.apply_resume
 - chunk temp files (driver.go:192-207)      → sink-side batches
 - worker pool + argot exec (driver.go:166-171, ingest.go:27-33)
-    → flatten/suffix/enrich column algebra + SolrSink.foreachPartition
+    → flatten/suffix/enrich column algebra + SolrSink.write
 - error channel (driver.go:160)             → quarantine DataFrame
 - lockfile (driver.go:94-111)               → not ported (scheduler concern)
 
-The whole thing is one action: Spark pipelines scan→shape→sink per
-partition with its own backpressure, which is exactly what the
-reference hand-built with two bounded channels and a WaitGroup.
+``run_reindex`` runs one Spark action, the sink's, over scan → resume →
+parse → flatten → suffix → enrich → post; the only other job is the
+small schema-inference sample.  Each row is read and parsed once: the
+ingested and quarantined counts come from a ``DataFrame.observe`` on
+that same pass, and nothing is persisted.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from reindexer_spark.docpipe.authority import (
@@ -30,9 +32,10 @@ from reindexer_spark.docpipe.authority import (
 )
 from reindexer_spark.docpipe.config import ReindexConfig
 from reindexer_spark.docpipe.flatten import (
+    QUARANTINE_FLAG,
     flatten_struct_columns,
     infer_content_schema,
-    parse_content,
+    parse_flagged,
     suffix_columns,
 )
 from reindexer_spark.docpipe.resume import apply_resume
@@ -93,21 +96,24 @@ def shape_documents(
     deleted_col: str | None = "deleted",
 ) -> tuple[DataFrame, DataFrame]:
     """scan-filter-resume-parse-flatten-suffix-enrich; returns
-    (shaped, quarantine)."""
+    (flagged, quarantine).
+
+    ``flagged`` holds every live row shaped as a Solr document plus the
+    boolean ``QUARANTINE_FLAG`` column, true for a row whose payload
+    failed to parse; ``quarantine`` is those rows in source shape."""
     live = docs
     if deleted_col and deleted_col in docs.columns:
         live = live.filter(~F.col(deleted_col))
     live = apply_resume(live, id_col, conf.start_id, conf.resume_inclusive)
 
-    schema = infer_content_schema(live)
-    good, quarantine = parse_content(live, schema)
-    flat = flatten_struct_columns(
-        good, keep=[c for c in (id_col,) if c in good.columns]
-    )
-    shaped = suffix_columns(flat, exclude=(id_col,))
+    parsed = parse_flagged(live, infer_content_schema(live))
+    quarantine = parsed.filter(F.col(QUARANTINE_FLAG)).drop("doc", QUARANTINE_FLAG)
+    keep = [c for c in (id_col, QUARANTINE_FLAG) if c in parsed.columns]
+    flat = flatten_struct_columns(parsed, keep=keep)
+    flagged = suffix_columns(flat, exclude=(id_col, QUARANTINE_FLAG))
     if authorities is not None and auth_doc_key is not None:
-        shaped = enrich_with_authorities(shaped, authorities, auth_doc_key)
-    return shaped, quarantine
+        flagged = enrich_with_authorities(flagged, authorities, auth_doc_key)
+    return flagged, quarantine
 
 
 def run_reindex(
@@ -118,8 +124,16 @@ def run_reindex(
     auth_doc_key: str | None = None,
     id_col: str = "id",
 ) -> ReindexResult:
-    """The full pipeline; counts via one pass each over the two small
-    outcome frames (no accumulators — deterministic under retries).
+    """The full pipeline as one action: ``sink.write`` runs it, and must
+    run an action over the frame it is given.
+
+    The ingested and quarantined counts are observed on the frame the
+    sink runs, after the enrichment shuffle, so they sit in the job's
+    final stage: Spark applies a result task's metrics once, where a
+    re-run shuffle-map stage would apply them again.  Quarantined rows
+    ride along to that point and are dropped just before the sink
+    encodes.  ``result.shaped`` and ``result.quarantine`` are lazy; using
+    them runs the pipeline again.
 
     Authority enrichment follows the reference's ``-a --redis-url`` flag
     pair (ingest.go:28-30): when ``conf.authorities`` is on and no
@@ -128,23 +142,22 @@ def run_reindex(
     or a live redis:// store where the client exists)."""
     if authorities is None and conf.authorities and conf.redis_url:
         authorities = load_authority_snapshot(docs.sparkSession, conf.redis_url)
-    shaped, quarantine = shape_documents(
+    flagged, quarantine = shape_documents(
         docs, conf, authorities, auth_doc_key, id_col=id_col
     )
-    # Materialize each branch once (optimization r16): the sink write,
-    # the ingested count, and any caller reuse of result.shaped would
-    # otherwise each re-run the whole scan→parse→flatten→suffix
-    # pipeline (3 full passes measured at sf0.1); same for the
-    # quarantine branch.  track() releases both at the next query start.
-    from reindexer_spark.cache import track
-
-    shaped = track(shaped)
-    quarantine = track(quarantine)
+    bad = F.col(QUARANTINE_FLAG)
+    observation = Observation("reindex_counts")
+    observed = flagged.observe(
+        observation,
+        F.count_if(~bad).alias("ingested"),
+        F.count_if(bad).alias("quarantined"),
+    )
     sink = sink or SolrSink(conf.solr_url, batch_size=conf.chunk_size)
-    sink.write(shaped, id_col=id_col)
+    sink.write(observed.filter(~bad).drop(QUARANTINE_FLAG), id_col=id_col)
+    counts = observation.get
     return ReindexResult(
-        ingested=shaped.count(),
-        quarantined=quarantine.count(),
+        ingested=counts["ingested"],
+        quarantined=counts["quarantined"],
         quarantine=quarantine,
-        shaped=shaped,
+        shaped=flagged.filter(~bad).drop(QUARANTINE_FLAG),
     )

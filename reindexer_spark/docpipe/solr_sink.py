@@ -6,35 +6,69 @@ records to Solr; re-running overwrites by document id (README.md:84-87
 relies on that for resume).  Contract: **at-least-once delivery,
 idempotent by id** — exactly-once is explicitly out of scope (SURVEY §7).
 
-Spark-native: ``foreachPartition`` with in-partition batches of
-``batch_size`` (the chunkSize analogue), a pluggable transport, and
-per-batch retry.  The transport is a plain callable so tests inject a
-capture and production injects pysolr (if importable) or the stdlib
-HTTP JSON poster; executors construct transports lazily — connections
-never serialize from the driver.
+How ``SolrSink.write`` runs, as one Spark action:
+
+- every row is encoded JVM-side as one JSON object by
+  ``to_json(struct(*))``: null fields are omitted, timestamps are UTC
+  ISO-8601 ending in ``Z``, dates are midnight UTC in the same form,
+  decimals are JSON numbers and maps are JSON objects;
+- a ``mapInArrow`` over that one string column joins at most
+  ``batch_size`` encoded documents into one JSON-array body,
+  ``[doc,doc,...]``, and hands it to the transport; it yields no rows,
+  so the ``collect()`` that drives it brings nothing back;
+- a transport is a callable ``send(body: bytes)``, built on the
+  executor by ``transport_factory`` so connections never serialize from
+  the driver.  ``http_transport`` posts the body to Solr's JSON update
+  endpoint; ``DirectoryCaptureTransport`` writes it to a file;
+- only transient failures are retried: a 5xx, a connection error or a
+  timeout gets up to ``max_retries`` attempts in all, with a bounded
+  exponential backoff between them.  Any other error, an HTTP 4xx
+  included, fails the write on its first attempt.
 """
 
 from __future__ import annotations
 
 import json
+import urllib.error
 import urllib.request
 from collections.abc import Callable
 from dataclasses import dataclass
+from time import sleep
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PythonException
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
-from reindexer_spark.docpipe.chunker import batched
+# Wait before retry k (k = 1, 2, ...): min(_BACKOFF_S * 2**(k-1), _BACKOFF_MAX_S).
+_BACKOFF_S = 0.1
+_BACKOFF_MAX_S = 5.0
+
+# to_json options that fix the wire form whatever the session's settings.
+_JSON_OPTIONS = {
+    "ignoreNullFields": "true",
+    "timeZone": "UTC",
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSS'Z'",
+    "dateFormat": "yyyy-MM-dd'T00:00:00Z'",
+}
 
 
 def http_transport(solr_url: str):
-    """POST batches to Solr's JSON update endpoint via stdlib (pysolr is
-    not in this container; the wire format is the same)."""
+    """POST JSON-array bodies to Solr's JSON update endpoint via stdlib
+    (pysolr is not in this container; the wire format is the same).
+    Raises ``urllib.error.HTTPError`` on an HTTP error status.
+
+    ``send`` also takes a list of documents as Python objects and
+    encodes it, for callers outside the sink that build documents in
+    Python."""
     endpoint = f"{solr_url.rstrip('/')}/update?commitWithin=10000"
 
-    def send(docs: list[dict]) -> None:
+    def send(body: bytes | list[dict]) -> None:
+        if isinstance(body, list):
+            body = json.dumps(body).encode("utf-8")
         req = urllib.request.Request(
             endpoint,
-            data=json.dumps(docs).encode("utf-8"),
+            data=body,
             headers={"Content-Type": "application/json"},
         )
         with urllib.request.urlopen(req, timeout=60) as resp:
@@ -45,21 +79,37 @@ def http_transport(solr_url: str):
 
 
 class DirectoryCaptureTransport:
-    """Dry-run transport: records each batch as a JSON file under a local
-    directory instead of posting to Solr.  Used by tests and for
-    inspecting exactly what would be submitted (executors share the
-    filesystem in local mode; on a cluster point it at shared storage)."""
+    """Dry-run transport: records each body (a JSON array of documents)
+    as a file under a local directory instead of posting to Solr.  Used
+    by tests and for inspecting exactly what would be submitted
+    (executors share the filesystem in local mode; on a cluster point it
+    at shared storage)."""
 
     def __init__(self, root: str):
         self.root = root
 
-    def __call__(self, docs: list[dict]) -> None:
+    def __call__(self, body: bytes) -> None:
         import tempfile
 
         with tempfile.NamedTemporaryFile(
-            "w", dir=self.root, suffix=".json", delete=False
+            "wb", dir=self.root, suffix=".json", delete=False
         ) as fh:
-            json.dump(docs, fh)
+            fh.write(body)
+
+
+def _send_with_retry(send: Callable[[bytes], None], body: bytes, attempts: int) -> None:
+    """``send(body)``, retrying a transient failure (5xx, connection
+    error, timeout) up to ``attempts`` tries in all; the last failure,
+    or the first other one (an HTTP 4xx included), is raised."""
+    for attempt in range(1, max(attempts, 1) + 1):
+        try:
+            send(body)
+            return
+        except (urllib.error.URLError, TimeoutError, ConnectionError) as exc:
+            client_error = isinstance(exc, urllib.error.HTTPError) and exc.code < 500
+            if client_error or attempt >= attempts:
+                raise
+        sleep(min(_BACKOFF_S * 2 ** (attempt - 1), _BACKOFF_MAX_S))
 
 
 @dataclass
@@ -67,38 +117,47 @@ class SolrSink:
     solr_url: str
     batch_size: int = 1000
     max_retries: int = 3
-    # () -> callable(list[dict]) -> None; defaults to http_transport
+    # () -> callable(bytes) -> None; defaults to http_transport
     transport_factory: Callable | None = None
 
     def write(self, df: DataFrame, id_col: str = "id") -> None:
         """At-least-once batched upsert of ``df`` (one Solr doc per row,
-        nulls dropped, keyed by ``id_col``)."""
+        nulls dropped, keyed by ``id_col``).  A failed delivery raises the
+        failed Spark job's ``Py4JJavaError``."""
         if id_col not in df.columns:
             raise ValueError(f"id column {id_col!r} not in DataFrame")
         factory = self.transport_factory or (
             lambda: http_transport(self.solr_url)
         )
-        batch_size, retries = self.batch_size, self.max_retries
+        batch_size, attempts = self.batch_size, self.max_retries
 
-        def send_partition(rows) -> None:
+        def post_partition(batches):
             send = factory()
-            for batch in batched(rows, batch_size):
-                docs = [
-                    {k: v for k, v in row.asDict(recursive=True).items() if v is not None}
-                    for row in batch
-                ]
-                last: Exception | None = None
-                for _ in range(retries):
-                    try:
-                        send(docs)
-                        last = None
-                        break
-                    except Exception as exc:  # noqa: BLE001
-                        last = exc
-                if last is not None:
-                    raise last
 
-        df.foreachPartition(send_partition)
+            def post(docs: list[str]) -> None:
+                body = ("[" + ",".join(docs) + "]").encode("utf-8")
+                _send_with_retry(send, body, attempts)
+
+            pending: list[str] = []
+            for batch in batches:
+                pending.extend(batch.column(0).to_pylist())
+                while len(pending) >= batch_size:
+                    post(pending[:batch_size])
+                    del pending[:batch_size]
+            if pending:
+                post(pending)
+            yield from ()  # posting is the side effect; the action gets no rows
+
+        docs = df.select(F.to_json(F.struct("*"), _JSON_OPTIONS).alias("doc"))
+        try:
+            docs.mapInArrow(post_partition, "posted long").collect()
+        except PythonException as exc:
+            # pyspark turns a Python-worker failure inside a SQL operator
+            # into PythonException; raise the failed job's Py4JJavaError
+            # instead, the error every other failed docpipe job raises
+            if isinstance(exc.__context__, Py4JJavaError):
+                raise exc.__context__ from None
+            raise
 
 
 class SolrBatchLedger:

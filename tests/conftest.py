@@ -9,7 +9,9 @@ SF_DIR = "/root/testdata/sf0.001"
 def spark():
     from reindexer_spark import get_spark
 
-    spark = get_spark("reindexer-tests", master="local[8]", shuffle_partitions=8)
+    # sized from SPARK_GRAFT_CPUS (default: the host's cores), like every
+    # other session the package builds
+    spark = get_spark("reindexer-tests")
     yield spark
     spark.stop()
 

@@ -266,6 +266,91 @@ def test_solr_sink_requires_id(spofford):
         sink.write(spofford.select("owner"))
 
 
+def test_solr_sink_encodes_dates_decimals_and_maps(spark, tmp_path):
+    """Every column type the suffix table names reaches the wire: dates
+    and timestamps as UTC ISO-8601 ending in Z (whatever the session
+    time zone), decimals as JSON numbers, maps as JSON objects, and
+    null fields dropped."""
+    from datetime import date, datetime, timezone
+    from decimal import Decimal
+
+    cap = str(tmp_path / "cap_types")
+    os.makedirs(cap)
+    df = spark.createDataFrame(
+        [
+            (
+                "d1",
+                date(2024, 2, 29),
+                datetime(2024, 2, 29, 23, 45, 6, 789000, tzinfo=timezone.utc),
+                Decimal("12.50"),
+                {"a": 1, "b": 2},
+                None,
+            )
+        ],
+        "id string, day_dt date, at_dt timestamp, price_f decimal(10,2), "
+        "attrs_m map<string,int>, gone_t string",
+    )
+    sink = SolrSink("http://unused", transport_factory=lambda: CaptureTransport(cap))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        sink.write(df, id_col="id")
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    (path,) = glob.glob(os.path.join(cap, "*.json"))
+    with open(path) as fh:
+        assert json.load(fh) == [
+            {
+                "id": "d1",
+                "day_dt": "2024-02-29T00:00:00Z",
+                "at_dt": "2024-02-29T23:45:06.789Z",
+                "price_f": 12.5,
+                "attrs_m": {"a": 1, "b": 2},
+            }
+        ]
+
+
+@pytest.mark.parametrize("enrich", [True, False], ids=["enriched", "plain"])
+def test_run_reindex_is_one_pass_with_exact_counts(
+    spark, spofford, authorities, tmp_path, enrich
+):
+    """run_reindex leaves no persisted frame behind, and its observed
+    counts match counts taken independently — also when the parsed
+    frame reaches both sides of the array-key enrichment self-join,
+    where a doubled or dropped observation would show."""
+    cap = str(tmp_path / "cap_counts")
+    os.makedirs(cap)
+    conf = ReindexConfig(password="x", solr_url="http://unused", chunk_size=50)
+    sink = SolrSink(
+        conf.solr_url, batch_size=50, transport_factory=lambda: CaptureTransport(cap)
+    )
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    result = run_reindex(
+        spofford,
+        conf,
+        sink=sink,
+        authorities=authorities if enrich else None,
+        auth_doc_key="subjects_uri_a" if enrich else None,
+    )
+    assert set(persisted().keys()) == before
+
+    live = spofford.filter(~F.col("deleted"))
+    n_bad = live.filter(F.col("content").startswith("{not")).count()
+    assert n_bad > 0
+    assert result.quarantined == n_bad
+    assert result.ingested == live.count() - n_bad
+    sent = [
+        d
+        for f in glob.glob(os.path.join(cap, "*.json"))
+        for d in json.load(open(f))
+    ]
+    assert sorted(d["id"] for d in sent) == sorted(
+        r.id for r in live.filter(~F.col("content").startswith("{not")).collect()
+    )
+    assert ("variant_names" in result.shaped.columns) == enrich
+
+
 def test_run_reindex_end_to_end(spofford, authorities, tmp_path):
     """The reference's full main() path: filter deleted → resume → parse
     → flatten → suffix → enrich → batched sink, with quarantine."""

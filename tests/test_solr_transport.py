@@ -20,8 +20,9 @@ from reindexer_spark.docpipe.solr_sink import SolrSink, http_transport
 
 
 class _RecordingHandler(BaseHTTPRequestHandler):
-    """Records every POST; optionally fails the first N requests with a
-    503 (the transient-overload case Solr throws under load)."""
+    """Records every POST; optionally fails the first N requests with
+    ``fail_status``: 503 by default (the transient-overload case Solr
+    throws under load), or a 4xx such as 400 (a rejected document)."""
 
     def do_POST(self):  # noqa: N802 - BaseHTTPRequestHandler contract
         srv = self.server
@@ -35,7 +36,7 @@ class _RecordingHandler(BaseHTTPRequestHandler):
         )
         if srv.fail_remaining > 0:
             srv.fail_remaining -= 1
-            self.send_response(503)
+            self.send_response(srv.fail_status)
             self.end_headers()
             return
         self.send_response(200)
@@ -52,6 +53,7 @@ def live_server():
     srv = HTTPServer(("127.0.0.1", 0), _RecordingHandler)
     srv.requests = []
     srv.fail_remaining = 0
+    srv.fail_status = 503
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     try:
@@ -68,7 +70,7 @@ def _url(srv) -> str:
 def test_http_transport_wire_format(live_server):
     send = http_transport(_url(live_server))
     docs = [{"id": "a1", "title_t": "x"}, {"id": "a2", "n_i": 3}]
-    send(docs)
+    send(json.dumps(docs).encode("utf-8"))
     assert len(live_server.requests) == 1
     req = live_server.requests[0]
     # Solr JSON update endpoint, commitWithin, JSON list-of-docs body.
@@ -81,7 +83,7 @@ def test_http_transport_raises_on_http_error(live_server):
     live_server.fail_remaining = 1
     send = http_transport(_url(live_server))
     with pytest.raises(Exception):
-        send([{"id": "a1"}])
+        send(b'[{"id": "a1"}]')
 
 
 def test_sink_retries_transient_failures_to_success(spark, live_server):
@@ -110,6 +112,62 @@ def test_sink_exhausted_retries_surface_the_error(spark, live_server):
 
     with pytest.raises(Py4JJavaError):
         sink.write(df, id_col="id")
+
+
+def test_sink_fails_fast_on_client_error(spark, live_server):
+    # A 4xx is Solr rejecting the batch itself; re-sending the same body
+    # cannot succeed, so the sink must not retry it.
+    live_server.fail_remaining = 99
+    live_server.fail_status = 400
+    df = spark.createDataFrame([("id1", "t")], "id string, title_t string")
+    sink = SolrSink(_url(live_server), batch_size=10, max_retries=3)
+    from py4j.protocol import Py4JJavaError
+
+    with pytest.raises(Py4JJavaError):
+        sink.write(df, id_col="id")
+    assert len(live_server.requests) == 1
+
+
+def test_retry_backs_off_on_transient_errors_only(monkeypatch):
+    """Connection errors, timeouts and 5xx are retried with a bounded
+    exponential backoff; any other error is raised on its first try."""
+    import urllib.error
+
+    from reindexer_spark.docpipe import solr_sink
+
+    waits: list[float] = []
+    monkeypatch.setattr(solr_sink, "sleep", waits.append)
+
+    def flaky(*errors):
+        calls = []
+
+        def send(body):
+            calls.append(body)
+            if len(calls) <= len(errors):
+                raise errors[len(calls) - 1]
+
+        return send, calls
+
+    http_503 = urllib.error.HTTPError("u", 503, "busy", {}, None)
+    send, calls = flaky(
+        urllib.error.URLError("refused"), TimeoutError(), http_503
+    )
+    solr_sink._send_with_retry(send, b"[]", attempts=10)
+    assert len(calls) == 4
+    assert waits == [0.1, 0.2, 0.4]
+
+    waits.clear()
+    send, calls = flaky(*[ConnectionResetError()] * 20)
+    with pytest.raises(ConnectionResetError):
+        solr_sink._send_with_retry(send, b"[]", attempts=10)
+    assert len(calls) == 10
+    assert max(waits) == solr_sink._BACKOFF_MAX_S
+
+    for error in (urllib.error.HTTPError("u", 400, "bad", {}, None), ValueError()):
+        send, calls = flaky(error)
+        with pytest.raises(type(error)):
+            solr_sink._send_with_retry(send, b"[]", attempts=10)
+        assert len(calls) == 1
 
 
 def test_effectively_once_sink_skips_committed_replays(
