@@ -175,10 +175,8 @@ EXTENDED = [
     "dedup_minhash_incremental",
     "stream_minhash_dedup_live",
     # round 11
-    "video_cabac_decode",
     "webp_lossless_decode",
     # round 12
-    "webp_lossy_decode",
     "video_bslice_decode",
     "dsir_select",
     # round 13
@@ -500,7 +498,7 @@ def main() -> int:
 
 # Floor separating "route bulk decode through LibraryCodec" from "the
 # pure-Python decoder is fine": every entropy-coded format measures
-# <=~3 MB/s (h264 0.05-0.07, webp-vp8 0.22, webp-vp8l 1.5,
+# <=~3 MB/s (h264 0.05-0.07, webp-vp8l 1.5,
 # jpeg-progressive 2.0,
 # jpeg-baseline 2.1, gif 2.8, mjpeg 2.9-3.0, flac 3.0 — the jpeg/
 # mjpeg/flac/gif/vp8l numbers are the round-14 segment+LUT+batched
@@ -530,7 +528,6 @@ def _codec_throughput() -> dict:
 
     from reindexer_spark import codecs as C
     from reindexer_spark import h264 as H
-    from reindexer_spark import vp8 as V8
     from reindexer_spark import vp8l as VL
 
     def px(n: int, tag: bytes) -> bytes:
@@ -584,19 +581,10 @@ def _codec_throughput() -> dict:
             annexb,
             lambda p: H.decode_h264_intra(sps, pps, nals),
         ),
-        "h264-cabac": (
-            H.encode_h264_annexb(vw, vh, vframes, gop="ippp",
-                                 entropy="cabac"),
-            H.decode_h264_annexb_stream,
-        ),
         "webp": (C.encode_webp_fixture(w, h, "vp8x-anim", 3, b"b"), None),
         "webp-vp8l": (
             VL.encode_webp_lossless(w, h, rgb),
             VL.decode_webp_lossless,
-        ),
-        "webp-vp8": (
-            V8.encode_webp_lossy(w, h, rgb, 32)[0],
-            V8.decode_webp_lossy,
         ),
     }
     from reindexer_spark import tiff as T

@@ -5489,8 +5489,8 @@ def mp3_frame_index(payload: bytes) -> dict:
     self-check a transcription against (no prefix-freeness, no Kraft
     sum, no algebraic identity), so a from-memory copy could be
     silently wrong in ways the closed loop cannot catch — the exact
-    failure mode the repo's honesty rules quarantine (vp8.py's
-    probability tables, h264_cabac's §9.3 init tables).  MP3 lanes
+    failure mode the repo's honesty rules quarantine (the reason
+    CABAC and VP8-lossy are probe-only; decode quarantines).  MP3 lanes
     therefore stop at the frame/seek index + Xing checks; bulk PCM
     decode routes through the LibraryCodec seam like every
     library_codec_first format."""
@@ -5703,27 +5703,20 @@ def _webp_has_chunk(payload: bytes, fourcc: bytes) -> bool:
 
 def _decode_image(kind: str, payload: bytes) -> tuple[int, int, bytes]:
     if kind == "webp":
-        # round 11: VP8L (lossless) decodes for real via the vp8l
-        # module; round 12: VP8-lossy decodes through the vp8 module's
-        # provenance gate (PRVN digest must bind the VP8 payload —
-        # external lossy WebP keeps quarantining, see vp8.py's honesty
-        # boundary); round 16: STILL VP8X layouts walk through to
-        # their VP8L chunk, and ANIMATED files decode as the first
-        # composited frame — the GIF still-image convention — via
-        # the VP8X/ANIM/ANMF compositor (lossy subframes quarantine
-        # there, so filler fixtures still refuse)
-        if _webp_has_chunk(payload, b"ANIM"):
-            from reindexer_spark.vp8l import decode_webp_anim
+        # VP8L (lossless) decodes, bare or in a STILL VP8X layout;
+        # ANIMATED files decode as the first composited frame — the
+        # GIF still-image convention.  VP8-lossy is probe-only: its
+        # decode quarantines (decode_webp_lossless raises on a
+        # ``VP8 `` chunk, decode_webp_anim on a lossy subframe).
+        from reindexer_spark.vp8l import (
+            decode_webp_anim,
+            decode_webp_lossless,
+        )
 
+        if _webp_has_chunk(payload, b"ANIM"):
             w, h, _durs, frames = decode_webp_anim(payload)
             return w, h, frames[0]
-        if _webp_has_chunk(payload, b"VP8L"):
-            from reindexer_spark.vp8l import decode_webp_lossless
-
-            return decode_webp_lossless(payload)
-        from reindexer_spark.vp8 import decode_webp_lossy
-
-        return decode_webp_lossy(payload)
+        return decode_webp_lossless(payload)
     if kind == "bmp":
         return decode_bmp(payload)
     if kind == "ppm":
@@ -6721,7 +6714,6 @@ def encode_mp4_coded(
     intra_frames: list[bytes] | None = None,
     qp: int = 26,
     gop: str = "all-intra",
-    entropy: str = "cavlc",
     sync_every: int = 1,
     tier: int = 0,
     chroma_format: int = 1,
@@ -6741,7 +6733,7 @@ def encode_mp4_coded(
         from reindexer_spark.h264 import encode_avcc_samples
 
         avcc, bodies = encode_avcc_samples(
-            width, height, intra_frames, qp, gop=gop, entropy=entropy
+            width, height, intra_frames, qp, gop=gop
         )
         entry_tag, cfg = b"avc1", _box(b"avcC", avcc)
         n_frames = len(bodies)
@@ -6867,7 +6859,6 @@ def encode_mkv_coded(
     level: int | None = None,
     intra_frames: list[bytes] | None = None,
     qp: int = 26,
-    entropy: str = "cavlc",
     sync_every: int = 1,
     tier: int = 0,
     chroma_format: int = 1,
@@ -6885,7 +6876,7 @@ def encode_mkv_coded(
         from reindexer_spark.h264 import encode_avcc_samples
 
         private_intra, intra_bodies = encode_avcc_samples(
-            width, height, intra_frames, qp, gop=gop, entropy=entropy
+            width, height, intra_frames, qp, gop=gop
         )
         codec_id, private = b"V_MPEG4/ISO/AVC", private_intra
         n_frames = len(intra_bodies)

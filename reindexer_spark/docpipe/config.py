@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import json
 import os
-from dataclasses import dataclass, field, fields
+from dataclasses import dataclass
 
 # Validation bounds per /root/reference/config/config.go:52-58.
 CHUNK_SIZE_MIN, CHUNK_SIZE_MAX = 10, 100_000
@@ -118,7 +118,3 @@ class ReindexConfig:
                     raise ConfigError(f"unknown config key: {key!r}")
                 setattr(conf, reverse[key], value)
         return conf.validate()
-
-
-def config_field_names() -> list[str]:
-    return [f.name for f in fields(ReindexConfig)]

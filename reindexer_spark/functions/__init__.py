@@ -60,12 +60,6 @@ def stddev_exact(col: Column, alias: str) -> Column:
     ).alias(alias)
 
 
-def ts_str(col: Column | str, alias: str) -> Column:
-    """Format a timestamp to a canonical string for oracle comparison."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, "yyyy-MM-dd HH:mm:ss").alias(alias)
-
-
 def date_str(col: Column | str, alias: str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.date_format(c, "yyyy-MM-dd").alias(alias)

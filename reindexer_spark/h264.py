@@ -46,10 +46,9 @@ pred_weight_table in B headers, §8.4.2.3.2 unidirectional and bi
 formulas in every B prediction path, encoder fade model per list;
 gated by `video_bweighted`); implicit (idc 2) stays quarantined.
 Still OUTSIDE the subset and quarantined: field/MBAFF coding,
->8 active references.  Round 11: CABAC I/P entropy coding
-lives in the companion module ``h264_cabac`` (provenance-marked
-streams only — see its honesty-boundary docstring);
-externally-encoded CABAC still quarantines here.
+>8 active references, and CABAC entropy coding: CABAC streams are
+probe-only (the probe reads their dims and profile); decode
+quarantines.
 
 Scope — the INTER half (round 10):
 
@@ -88,10 +87,8 @@ Scope — the full INTRA half of H.264 Baseline (round 9):
   Hadamard and 2x2 chroma-DC transforms, (x+32)>>6 reconstruction);
   PPS chroma_qp_index_offset is applied via Table 8-15.
 - What remains OUTSIDE the subset raises MediaFormatError — the
-  quarantine contract, never a wrong frame: external CABAC
-  (h264_cabac decodes only provenance-marked streams; CABAC also
-  stays single-slice and unweighted),
-  field/MBAFF coding, weighted
+  quarantine contract, never a wrong frame: CABAC (probe-only;
+  decode quarantines), field/MBAFF coding, weighted
   BI-prediction (P explicit WP decodes, round 13), non-4:2:0 or
   >8-bit sampling, scaling matrices (multi-slice pictures decode
   since round 13; RPLM incl. long-term selection, the full MMCO
@@ -1137,13 +1134,12 @@ _PCM_BITS = 384 * 8
 
 
 def write_pps(
-    qp: int = DEFAULT_QP, chroma_qp_offset: int = 0, cabac: bool = False,
+    qp: int = DEFAULT_QP, chroma_qp_offset: int = 0,
     weighted_pred: bool = False,
     weighted_bipred: bool = False,
 ) -> bytes:
-    """Minimal PPS: one slice group, deblocking-control present
-    (so slices can legally disable it).  ``cabac`` sets
-    entropy_coding_mode_flag (h264_cabac streams); ``weighted_pred``
+    """Minimal CAVLC PPS: one slice group, deblocking-control present
+    (so slices can legally disable it).  ``weighted_pred``
     sets weighted_pred_flag — P slice headers then carry a
     pred_weight_table (round 13); ``weighted_bipred`` sets
     weighted_bipred_idc 1 (EXPLICIT) — B slice headers then carry a
@@ -1152,7 +1148,7 @@ def write_pps(
     w = _RbspWriter()
     w.ue(0)  # pps_id
     w.ue(0)  # sps_id
-    w.u(1 if cabac else 0, 1)  # entropy_coding_mode
+    w.u(0, 1)  # entropy_coding_mode (CAVLC)
     w.u(0, 1)  # bottom_field_pic_order_in_frame_present
     w.ue(0)  # num_slice_groups_minus1
     w.ue(0)  # num_ref_idx_l0_default_active_minus1
@@ -1169,17 +1165,12 @@ def write_pps(
     return b"\x68" + w.finish()
 
 
-def parse_pps(nal: bytes, allow_cabac: bool = False) -> dict:
+def parse_pps(nal: bytes) -> dict:
     if not nal or (nal[0] & 0x1F) != 8:
         raise MediaFormatError("not an H.264 PPS NAL")
     r = _RbspReader(_unescape_rbsp(nal[1:]))
     out = {"pps_id": r.ue(), "sps_id": r.ue()}
-    out["entropy_coding_mode"] = r.u(1)
-    if out["entropy_coding_mode"] and not allow_cabac:
-        # Default quarantine.  Callers that can verify the h264_cabac
-        # provenance marker (SEI, see h264_cabac.CABAC_MARKER_UUID)
-        # opt in with allow_cabac=True and enforce the marker at the
-        # first CABAC slice — externally-encoded CABAC never decodes.
+    if r.u(1):  # entropy_coding_mode: CABAC is probe-only
         raise MediaFormatError("CABAC stream: decoder is CAVLC-only")
     if r.u(1):
         # adds delta_pic_order_cnt_bottom to slice headers, which the
@@ -1305,7 +1296,7 @@ def _write_slice_header(
     w: _BitWriter, qp: int, pic_init_qp: int, idr_pic_id: int,
     log2_max_frame_num: int, poc_type: int, log2_max_poc_lsb: int,
     deblock: bool = True, slice_type: str = "I", frame_num: int = 0,
-    cabac: bool = False, poc_lsb: int | None = None,
+    poc_lsb: int | None = None,
     num_ref_l0: int = 1, num_ref_l1: int = 1,
     direct_spatial: bool = True, wp: dict | None = None,
     first_mb: int = 0, rplm_l0: list | None = None,
@@ -1387,8 +1378,6 @@ def _write_slice_header(
     else:
         w.u(0, 1)  # no_output_of_prior_pics
         w.u(0, 1)  # long_term_reference_flag
-    if cabac and slice_type != "I":
-        w.ue(0)  # cabac_init_idc (§7.3.3: present in CABAC P slices)
     w.se(qp - pic_init_qp)  # slice_qp_delta
     if deblock:
         w.ue(0)  # disable_deblocking_filter_idc = 0 (filter on)
@@ -1671,9 +1660,6 @@ def _parse_slice_header(
                 if len(ops) > 32:
                     raise MediaFormatError("MMCO op list overlong")
             info["mmco"] = ops
-    if pps.get("entropy_coding_mode") and stype != "I":
-        if r.ue() > 2:  # cabac_init_idc (§7.3.3, CABAC P slices)
-            raise MediaFormatError("invalid cabac_init_idc")
     qp = pps["pic_init_qp"] + r.se()
     if not 0 <= qp <= 51:
         raise MediaFormatError("slice QP out of range")
@@ -1847,8 +1833,7 @@ def _read_chroma_residuals(
 def _intra_mode_estimate(
     st: _FrameState, mbx: int, mby: int, src_y: np.ndarray,
 ):
-    """Shared intra-MB mode decision (CAVLC _encode_mb and the CABAC
-    twin drive ONE copy — round-11 review): the best legal Intra_16x16
+    """Intra-MB mode decision for _encode_mb: the best legal Intra_16x16
     mode by source SAD against closed-loop neighbour predictions, and
     the I_4x4-vs-I_16x16 choice from the open-loop per-block estimate
     (I_4x4 costs ~4+ bits/block of mode signalling, so it must win by
@@ -2165,7 +2150,6 @@ def _decode_i_slice_mbs(
 def decode_frame_nal(
     nal: bytes, sps: dict, pps: dict,
     ref: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
-    cabac_ok: bool = False,
     ref2: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
     col_motion: dict | None = None,
     motion_sink: dict | None = None,
@@ -2180,7 +2164,7 @@ def decode_frame_nal(
     (Y, U, V) planes (coded size; caller crops) — the one-slice
     special case of decode_picture below."""
     return decode_picture(
-        [nal], sps, pps, ref=ref, cabac_ok=cabac_ok, ref2=ref2,
+        [nal], sps, pps, ref=ref, ref2=ref2,
         col_motion=col_motion, motion_sink=motion_sink,
         ref_frame_nums=ref_frame_nums, ref_motions=ref_motions,
         ref_lts=ref_lts,
@@ -2421,7 +2405,6 @@ def _ref_list_order(
 def decode_picture(
     nals: list[bytes], sps: dict, pps: dict,
     ref: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
-    cabac_ok: bool = False,
     ref2: tuple[np.ndarray, np.ndarray, np.ndarray] | None = None,
     col_motion: dict | None = None,
     motion_sink: dict | None = None,
@@ -2442,9 +2425,7 @@ def decode_picture(
     on REFERENCE pictures to capture the motion state the next B
     picture's direct derivation reads, and a shared ``poc_ctx`` so
     _parse_slice_header can reject display-reordered (non-low-delay)
-    streams.  CABAC slices bypass the POC check — they are
-    provenance-gated to this module's own (low-delay, B-free,
-    single-slice) streams already.
+    streams.
 
     MULTI-SLICE pictures (round 13): each slice carries its own QP
     and skip runs; neighbour availability stops at the slice border
@@ -2459,24 +2440,6 @@ def decode_picture(
         raise MediaFormatError("mixed NAL types within one picture")
     if nal_type not in (1, 5):
         raise MediaFormatError(f"unexpected NAL type {nal_type} for slice")
-    if pps.get("entropy_coding_mode"):
-        if not cabac_ok:
-            # the gate is UNSKIPPABLE here, not only at the container
-            # walks: a caller must positively assert it saw the
-            # h264_cabac provenance marker before any CABAC slice
-            # decodes (init-table fidelity is not claimed for external
-            # streams — h264_cabac docstring)
-            raise MediaFormatError(
-                "CABAC slice without the h264_cabac provenance marker: "
-                "decode quarantined"
-            )
-        if len(nals) != 1:
-            raise MediaFormatError(
-                "multi-slice CABAC pictures outside the subset"
-            )
-        from reindexer_spark.h264_cabac import decode_frame_nal_cabac
-
-        return decode_frame_nal_cabac(nals[0], sps, pps, ref=ref)
     st = _FrameState(sps["mb_w"], sps["mb_h"])
     if len(nals) > 1:
         st.slice_id[:] = -1  # nothing decoded yet
@@ -2820,35 +2783,19 @@ def decode_avcc_samples(
 ) -> tuple[int, int, list[bytes]]:
     """avcC config + length-prefixed samples → (w, h, RGB frames).
     One frame per sample; in-band SPS/PPS override the config; SEI/AUD
-    skip (the h264_cabac provenance SEI is recognised); anything
-    outside the subset raises MediaFormatError.  CABAC slices decode
-    ONLY after the provenance marker (module h264_cabac's honesty
-    boundary), whose embedded digest must match the stream's actual
-    slice bytes — external CABAC (marker or not) quarantines."""
-    from reindexer_spark.h264_cabac import cabac_provenance_ok
-
+    skip; anything outside the subset (CABAC included) raises
+    MediaFormatError."""
     sps_nal, pps_nal, length_size = avcc_parameter_sets(avcc_body)
     if pps_nal is None:
         raise MediaFormatError("avcC carries no PPS")
     sps = _parse_sps_slice_fields(sps_nal)
-    pps = parse_pps(pps_nal, allow_cabac=True)
+    pps = parse_pps(pps_nal)
     w, h = sps["width"], sps["height"]
     frames = []
-    # split each sample ONCE: the provenance pre-pass and the decode
-    # loop share the NAL lists (the marker SEI binds a digest of the
-    # coded slices, so it verifies against the whole walk, not
-    # NAL-by-NAL)
-    sample_nals = [
-        split_sample_nals(sample, length_size) for sample in samples
-    ]
-    flat = [n for nals in sample_nals for n in nals]
-    marker_seen = cabac_provenance_ok(
-        [n for n in flat if (n[0] & 0x1F) == 6],
-        [n for n in flat if (n[0] & 0x1F) in (1, 5)],
-    )
     dpb = _Dpb()  # §8.2.5 DPB: shorts recency-first, longs by index
     poc_ctx: dict = {}  # low-delay POC monotonicity + full unwrap
-    for nals in sample_nals:
+    for sample in samples:
+        nals = split_sample_nals(sample, length_size)
         slice_nals_au: list[bytes] = []
         for nal in nals:
             t = nal[0] & 0x1F
@@ -2863,9 +2810,9 @@ def decode_avcc_samples(
                     )
                 sps = new_sps
             elif t == 8:
-                pps = parse_pps(nal, allow_cabac=True)
+                pps = parse_pps(nal)
             elif t in (6, 9):
-                continue  # SEI / AUD (provenance verified in pre-pass)
+                continue  # SEI / AUD
             elif t in (1, 5):
                 # one sample = one access unit: its slice NALs (one
                 # or SEVERAL — multi-slice pictures, round 13) decode
@@ -2886,7 +2833,6 @@ def decode_avcc_samples(
             slice_nals_au, sps, pps,
             ref=refs[0] if refs else None,
             ref2=refs[1] if len(refs) > 1 else None,
-            cabac_ok=marker_seen,
             col_motion=(
                 dpb.motions[1] if len(refs) > 1 else None
             ),
@@ -2903,8 +2849,6 @@ def decode_avcc_samples(
             ref_lts=dpb.lts if refs else None,
         )
         if slice_nals_au[0][0] >> 5:  # reference picture → enters DPB
-            # CABAC pictures bypass the sink (their own module path):
-            # no mmco there, frame_num absent is fine
             cur_lt, reset5 = dpb.apply_marking(
                 sink.get("mmco"), sink.get("frame_num", 0),
                 1 << sps["log2_max_frame_num"],
@@ -2940,33 +2884,20 @@ def decode_avcc_samples(
 
 def encode_avcc_samples(
     width: int, height: int, frames_rgb: list[bytes], qp: int = DEFAULT_QP,
-    gop: str = "all-intra", entropy: str = "cavlc",
+    gop: str = "all-intra",
 ) -> tuple[bytes, list[bytes]]:
     """Frames → (avcC record body, one length-prefixed sample per
     frame) — the container-side encoder seam (mp4 stsd / mkv
     CodecPrivate both carry avcC).  Memoized: fixture lanes mux the
     SAME frames into mp4 AND mkv, and the encoder is deterministic, so
-    the second container reuses the first bitstream.
-    ``entropy="cabac"`` (requires ``gop="ippp"``): Main-profile CABAC
-    samples via h264_cabac; the provenance SEI rides in the first
-    sample so the decode path accepts the stream."""
-    key = (width, height, tuple(frames_rgb), qp, gop, entropy)
+    the second container reuses the first bitstream."""
+    key = (width, height, tuple(frames_rgb), qp, gop)
     hit = _AVCC_CACHE.get(key)
     if hit is not None:
         return hit
     from reindexer_spark.codecs import build_avcc
 
-    prefix_nals: list[bytes] = []
-    if entropy == "cabac":
-        if gop != "ippp":
-            raise ValueError("CABAC fixtures use gop='ippp'")
-        from reindexer_spark.h264_cabac import encode_h264_ippp_cabac
-
-        sps, pps, nals = encode_h264_ippp_cabac(
-            width, height, frames_rgb, qp
-        )
-        prefix_nals, nals = [nals[0]], nals[1:]  # marker SEI
-    elif gop == "ippp":
+    if gop == "ippp":
         sps, pps, nals = encode_h264_ippp(width, height, frames_rgb, qp)
     elif gop == "ipb":
         sps, pps, nals = encode_h264_ipb(width, height, frames_rgb, qp)
@@ -3028,11 +2959,6 @@ def encode_avcc_samples(
         b"".join(len(n).to_bytes(4, "big") + n for n in pic)
         for pic in pics
     ]
-    if prefix_nals:
-        samples[0] = (
-            b"".join(len(n).to_bytes(4, "big") + n for n in prefix_nals)
-            + samples[0]
-        )
     out = (build_avcc(sps, pps), samples)
     if len(_AVCC_CACHE) > 64:
         _AVCC_CACHE.clear()
@@ -3080,21 +3006,12 @@ def split_annexb(data: bytes) -> list[bytes]:
 
 def encode_h264_annexb(
     width: int, height: int, frames_rgb: list[bytes], qp: int = DEFAULT_QP,
-    gop: str = "all-intra", entropy: str = "cavlc",
+    gop: str = "all-intra",
 ) -> bytes:
     """Frames → a raw Annex-B elementary stream (SPS, PPS, then one
     slice per frame, 4-byte start codes).  ``gop="ippp"``: first frame
-    IDR, later frames P (single reference).  ``entropy="cabac"``:
-    Main-profile CABAC with the provenance SEI in-stream."""
-    if entropy == "cabac":
-        if gop != "ippp":
-            raise ValueError("CABAC fixtures use gop='ippp'")
-        from reindexer_spark.h264_cabac import encode_h264_ippp_cabac
-
-        sps, pps, nals = encode_h264_ippp_cabac(
-            width, height, frames_rgb, qp
-        )
-    elif gop == "ippp":
+    IDR, later frames P (single reference)."""
+    if gop == "ippp":
         sps, pps, nals = encode_h264_ippp(width, height, frames_rgb, qp)
     elif gop == "ipb":
         sps, pps, nals = encode_h264_ipb(width, height, frames_rgb, qp)
@@ -3169,19 +3086,12 @@ def probe_annexb(data: bytes) -> dict:
 def decode_h264_annexb_stream(data: bytes) -> tuple[int, int, list[bytes]]:
     """Annex-B stream → (w, h, RGB frames); intra subset only, same
     quarantine contract as the container paths."""
-    from reindexer_spark.h264_cabac import cabac_provenance_ok
-
     sps = pps = None
     frames = []
     w = h = None
     dpb = _Dpb()  # §8.2.5 DPB (round 14: full marking, like avcC)
     poc_ctx: dict = {}  # low-delay POC monotonicity
-    all_nals = split_annexb(data)
-    marker_seen = cabac_provenance_ok(
-        [n for n in all_nals if (n[0] & 0x1F) == 6],
-        [n for n in all_nals if (n[0] & 0x1F) in (1, 5)],
-    )
-    for nal in all_nals:
+    for nal in split_annexb(data):
         t = nal[0] & 0x1F
         if t == 7:
             new_sps = _parse_sps_slice_fields(nal)
@@ -3190,9 +3100,9 @@ def decode_h264_annexb_stream(data: bytes) -> tuple[int, int, list[bytes]]:
             sps = new_sps
             w, h = sps["width"], sps["height"]
         elif t == 8:
-            pps = parse_pps(nal, allow_cabac=True)
+            pps = parse_pps(nal)
         elif t in (6, 9):
-            continue  # SEI / AUD (provenance verified in pre-pass)
+            continue  # SEI / AUD
         elif t in (1, 5):
             if sps is None or pps is None:
                 raise MediaFormatError("slice before SPS/PPS in stream")
@@ -3204,7 +3114,6 @@ def decode_h264_annexb_stream(data: bytes) -> tuple[int, int, list[bytes]]:
                 nal, sps, pps,
                 ref=refs[0] if refs else None,
                 ref2=refs[1] if len(refs) > 1 else None,
-                cabac_ok=marker_seen,
                 col_motion=(
                     dpb.motions[1] if len(refs) > 1 else None
                 ),
@@ -3881,8 +3790,7 @@ def _decode_i4_mb(
 # reference PICTURES (POC identity), not list indices (the encoder
 # signals the filter ON — the spec-realistic default — and both sides
 # run the identical filtered reference loop).  B slices decode since
-# round 12 — see the B section below; CABAC I/P is the h264_cabac
-# module (provenance-marked streams only).
+# round 12 — see the B section below.
 # ---------------------------------------------------------------------------
 
 # Table 9-4, Inter column: codeNum -> coded_block_pattern.  Transcribed
@@ -4552,8 +4460,8 @@ def _p_mb_decide(
     wp: dict | None = None,
 ) -> tuple[str, dict | None]:
     """Entropy-agnostic P-macroblock decision (motion search, partition
-    choice, transform/quant, skip test) — shared by the CAVLC emitter
-    below and the CABAC emitter (h264_cabac).  Returns
+    choice, transform/quant, skip test) for the CAVLC emitter
+    below.  Returns
     ``("intra", None)`` (the caller runs its intra MB encoder),
     ``("skip", None)`` (the caller reconstructs P_Skip), or
     ``("inter", payload)`` with everything the emitter needs.  Does NOT
@@ -6645,10 +6553,8 @@ def decode_h264_stream(
     sequences (single reference: each picture predicts from its
     predecessor's output).  Raises MediaFormatError outside the
     subset."""
-    from reindexer_spark.h264_cabac import cabac_provenance_ok
-
     sps = _parse_sps_slice_fields(sps_nal)
-    pps = parse_pps(pps_nal, allow_cabac=True)
+    pps = parse_pps(pps_nal)
     w, h = sps["width"], sps["height"]
     ct, cl = sps["crop_t"], sps["crop_l"]
     frames = []
@@ -6657,21 +6563,13 @@ def decode_h264_stream(
     # header parse; pictures never referenced simply age out)
     dpb = _Dpb()  # §8.2.5 DPB: shorts recency-first, longs by index
     poc_ctx: dict = {}  # low-delay POC monotonicity + full unwrap
-    marker_seen = cabac_provenance_ok(
-        [n for n in slice_nals if (n[0] & 0x1F) == 6],
-        [n for n in slice_nals if (n[0] & 0x1F) in (1, 5)],
-    )
     # group slice NALs into pictures: a slice with first_mb 0 starts
     # a new access unit (multi-slice pictures, round 13)
     pictures: list[list[bytes]] = []
     for nal in slice_nals:
         if (nal[0] & 0x1F) == 6:
-            continue  # provenance verified in pre-pass
-        if (
-            pictures
-            and not pps.get("entropy_coding_mode")
-            and slice_first_mb(nal) != 0
-        ):
+            continue  # SEI
+        if pictures and slice_first_mb(nal) != 0:
             pictures[-1].append(nal)
         else:
             pictures.append([nal])
@@ -6685,7 +6583,6 @@ def decode_h264_stream(
             pic_nals, sps, pps,
             ref=refs[0] if refs else None,
             ref2=refs[1] if len(refs) > 1 else None,
-            cabac_ok=marker_seen,
             col_motion=dpb.motions[1] if len(refs) > 1 else None,
             motion_sink=sink,
             poc_ctx=poc_ctx,
@@ -6700,8 +6597,6 @@ def decode_h264_stream(
             ref_lts=dpb.lts if refs else None,
         )
         if nal[0] >> 5:  # reference picture → enters the DPB
-            # CABAC pictures bypass the sink (their own module path):
-            # no mmco there, frame_num absent is fine
             cur_lt, reset5 = dpb.apply_marking(
                 sink.get("mmco"), sink.get("frame_num", 0),
                 1 << sps["log2_max_frame_num"],

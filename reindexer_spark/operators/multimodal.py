@@ -2652,10 +2652,9 @@ def video_hevc_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     sweep Main/Main10-class profiles, both tiers, 8/10/12-bit,
     4:2:0/4:2:2/4:4:4 and sync cadences 2..4; the probe's kf list and
     count are cross-checked against BOTH container walks per row.
-    ``decodable=0`` is oracle-pinned: HEVC decode stays quarantined
-    (the CABAC-table class — h264_cabac.py's honesty boundary), the
-    probe funnel still recovers everything a resolution/codec/
-    bit-depth filter needs.
+    ``decodable=0`` is oracle-pinned: like CABAC and VP8-lossy, HEVC
+    is probe-only and its decode quarantines; the probe funnel still
+    recovers everything a resolution/codec/bit-depth filter needs.
 
     Scale shape: one Arrow-batched mapInPandas pass, header bytes per
     object — the same funnel economics as video_sps_probe."""
@@ -4487,173 +4486,6 @@ def video_bweighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-CABAC_DOCS = 10  # bounded: ME + a pure-Python arithmetic coder per doc
-
-
-@query(
-    "video_cabac_decode",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {CABAC_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (16 + s0 % 13) AS INT) AS width,
-      CAST(2 * (16 + s1 % 9) AS INT) AS height,
-      CAST(3 + s2 % 3 AS INT) AS n_frames,
-      CAST(1 AS INT) AS decodable,
-      CAST(77 AS INT) AS profile_idc,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS markerless_quarantined
-    FROM s
-    """,
-)
-def video_cabac_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL CABAC-coded H.264 decode (round-11 VERDICT next #2): the
-    same digest-seeded translating IPPP scenes as video_inter_decode,
-    but entropy-coded with the §9.3 binary arithmetic coder
-    (reindexer_spark.h264_cabac — adaptive contexts, bypass/terminate
-    modes, UEG binarizations, significance-map residuals), muxed into
-    mp4 OR mkv as Main-profile (77) streams, and decoded back.
-
-    Oracle-pinned contract columns (all re-derived from sha256(text)):
-    ``decodable=1`` — the CABAC IPPP chain decodes through the
-    container path; ``profile_idc=77`` — the probe reads the Main
-    profile that signals CABAC; ``only_first_sync=1`` — sync tables
-    still truthful; ``containers_agree=1`` — mp4 and mkv decode
-    bit-identically; ``recon_exact=1`` — decoder ≡ encoder closed loop
-    through deblocked references (the engine/binarization/context
-    conformance claim); ``markerless_quarantined=1`` — the SAME stream
-    with its provenance SEI stripped refuses to decode (the h264_cabac
-    honesty boundary: context-init tables are not claimed
-    spec-faithful, so external CABAC must quarantine, never produce a
-    wrong frame).
-
-    Scale shape: identical to the other video lanes — Arrow-batched
-    mapInPandas, payloads never shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < CABAC_DOCS
-    )
-
-    def build_and_decode(batches):
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-            probe_media,
-        )
-        from reindexer_spark.h264 import (
-            decode_avcc_samples,
-            encode_avcc_samples,
-            split_sample_nals,
-        )
-        from reindexer_spark.h264_cabac import encode_h264_ippp_cabac
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _inter_fixture(
-                    mid, r.text
-                )
-                _s, _p, _nals, recon = encode_h264_ippp_cabac(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp",
-                    entropy="cabac",
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp",
-                    entropy="cabac",
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out, sync = [], []
-                    decodable = 0
-                profile = int(probe_media(payload).get("profile") or 0)
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and sync[0]
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                # the provenance contract: same bitstream, marker SEI
-                # stripped, must refuse to decode
-                avcc, samples = encode_avcc_samples(
-                    w, h, frames, qp, gop="ippp", entropy="cabac"
-                )
-                nals0 = split_sample_nals(samples[0], 4)
-                stripped = b"".join(
-                    len(n).to_bytes(4, "big") + n
-                    for n in nals0
-                    if (n[0] & 0x1F) != 6
-                )
-                try:
-                    decode_avcc_samples(avcc, [stripped] + samples[1:])
-                    quarantined = 0
-                except MediaFormatError:
-                    quarantined = 1
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "decodable": decodable,
-                        "profile_idc": profile,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                        "markerless_quarantined": quarantined,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height", "n_frames",
-                    "decodable", "profile_idc", "only_first_sync",
-                    "containers_agree", "recon_exact",
-                    "markerless_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(CABAC_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, container string, width int, height int, "
-        "n_frames int, decodable int, profile_idc int, "
-        "only_first_sync int, containers_agree int, recon_exact int, "
-        "markerless_quarantined int",
-    )
-
-
 WEBP_DOCS = 24
 
 
@@ -4772,151 +4604,6 @@ def webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         build_and_decode,
         "media_id bigint, width int, height int, subtract_green int, "
         "rgb_md5 string, roundtrip_exact int, lossy_quarantined int",
-    )
-
-
-WEBP_LOSSY_DOCS = 20
-
-
-@query(
-    "webp_lossy_decode",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {WEBP_LOSSY_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
-      FROM base
-    )
-    SELECT media_id,
-      CAST(4 + s0 % 21 AS INT) AS width,
-      CAST(4 + s1 % 15 AS INT) AS height,
-      CAST(8 + s2 % 96 AS INT) AS qi,
-      CASE WHEN media_id % 2 = 0 THEN 'simple' ELSE 'normal' END
-        AS filter_type,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS probe_ok,
-      CAST(1 AS INT) AS markerless_quarantined
-    FROM s
-    """,
-)
-def webp_lossy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL VP8 lossy keyframe decode (round-11 VERDICT next #3): per
-    document, derive an RGB image and a quantizer index from sha256
-    arithmetic BOTH engines can compute, encode it as a VP8 keyframe
-    (reindexer_spark.vp8 — boolean arithmetic coder, token-tree
-    residuals with band/zero-run contexts, Y2 WHT, exact-integer iDCT,
-    intra prediction, and the §15 loop filter: SIMPLE on even docs,
-    NORMAL — HEV branch, 27/18/9 MB-edge taps, chroma included — on
-    odd docs, so both signalled filter types gate every round), wrap
-    in RIFF/WEBP with the PRVN provenance chunk, and decode the pixels
-    back through the production image path (codecs._decode_image).
-
-    Oracle-pinned columns: ``width``/``height``/``qi`` — digest
-    arithmetic (dims deliberately non-multiple-of-16 so MB padding and
-    cropping are exercised); ``recon_exact=1`` — decoder output is
-    byte-equal to the ENCODER'S closed-loop reconstruction through the
-    loop filter (lossy codecs can't round-trip the source; the
-    closed-loop equality is the conformance claim, same contract as
-    video_cabac_decode); ``probe_ok=1`` — the header-only probe reads
-    the same dims from the uncompressed keyframe header;
-    ``markerless_quarantined=1`` — the same container with its PRVN
-    chunk stripped refuses to decode (vp8.py's honesty boundary: house
-    probability tables, so external lossy WebP must quarantine, never
-    produce a wrong pixel).
-
-    Scale shape: Arrow-batched mapInPandas, payloads never shuffle —
-    same as every media lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < WEBP_LOSSY_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-        import struct
-
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            _decode_image,
-            probe_media,
-        )
-        from reindexer_spark.vp8 import encode_webp_lossy
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 4 + int(dg[0:2], 16) % 21
-                h = 4 + int(dg[2:4], 16) % 15
-                qi = 8 + int(dg[4:6], 16) % 96
-                ft = "simple" if mid % 2 == 0 else "normal"
-                n = w * h * 3
-                hexchain = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((n + 31) // 32)
-                )[: 2 * n]
-                rgb = bytes.fromhex(hexchain)
-                webp, recon = encode_webp_lossy(w, h, rgb, qi, ft)
-                dw, dh, out = _decode_image("webp", webp)
-                meta = probe_media(webp)
-                probe_ok = int(
-                    meta.get("width") == w and meta.get("height") == h
-                )
-                # strip the PRVN chunk and require the quarantine
-                pos, keep = 12, b""
-                while pos + 8 <= len(webp):
-                    cid = webp[pos : pos + 4]
-                    size = struct.unpack_from("<I", webp, pos + 4)[0]
-                    end = pos + 8 + size + (size & 1)
-                    if cid != b"PRVN":
-                        keep += webp[pos:end]
-                    pos = end
-                stripped = (
-                    b"RIFF"
-                    + struct.pack("<I", 4 + len(keep))
-                    + b"WEBP"
-                    + keep
-                )
-                try:
-                    _decode_image("webp", stripped)
-                    quarantined = 0
-                except MediaFormatError:
-                    quarantined = 1
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw if dw == w else -dw,
-                        "height": dh if dh == h else -dh,
-                        "qi": qi,
-                        "filter_type": ft,
-                        "recon_exact": int(out == recon),
-                        "probe_ok": probe_ok,
-                        "markerless_quarantined": quarantined,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "qi", "filter_type",
-                    "recon_exact", "probe_ok", "markerless_quarantined",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(WEBP_LOSSY_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, width int, height int, qi int, "
-            "filter_type string, recon_exact int, probe_ok int, "
-            "markerless_quarantined int",
-        )
     )
 
 

@@ -37,6 +37,19 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set (the
+    deployment override), else a quarter of physical RAM, at least 1g.
+    In local mode the driver JVM also runs every task, so a default
+    larger than the host invites the kernel's OOM killer instead of a
+    JVM OutOfMemoryError."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1024, ram // 4 // 2**20)}m"
+
+
 def _scan_confs() -> dict[str, str]:
     """Optional scan-split overrides for cluster profiles (opt-in only).
 
@@ -98,7 +111,7 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])

@@ -632,9 +632,9 @@ def decode_webp_lossless(payload: bytes) -> tuple[int, int, bytes]:
     """RIFF WEBP container → (w, h, RGB) for VP8L payloads — bare, or
     inside a STILL extended (VP8X) layout (round 16: the shape cwebp
     writes when EXIF/ICC/alpha metadata rides along; the VP8X canvas
-    dims must agree with the VP8L stream's).  VP8 lossy keeps
-    quarantining, and ANIMATED files route through decode_webp_anim
-    (raised here by name)."""
+    dims must agree with the VP8L stream's).  VP8-lossy is probe-only:
+    its decode quarantines here.  ANIMATED files route through
+    decode_webp_anim (raised here by name)."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise MediaFormatError("not a WebP payload")
     cpos = 12
@@ -813,7 +813,7 @@ def encode_webp_lossless(
 # to the ANIM background color; alpha-blending uses the integer
 # src-over rule (c*a + d*(255-a) + 127) // 255.  Lossy (VP8) or
 # ALPH-assisted subframes quarantine — only the real VP8L decode
-# feeds pixels (the vp8.py honesty boundary is unchanged).
+# feeds pixels (VP8-lossy is probe-only; decode quarantines).
 
 
 def _le24(v: int) -> bytes:

@@ -2019,7 +2019,7 @@ def test_codec_floor_flags_all_entropy_decoders():
     entropy = {
         "jpeg-baseline", "jpeg-progressive", "gif", "flac",
         "avi-mjpeg", "mp4-mjpeg", "mkv-mjpeg",
-        "h264-intra", "h264-cabac", "webp-vp8", "webp-vp8l",
+        "h264-intra", "webp-vp8l",
     }
     for name in entropy:
         assert out[name]["library_codec_first"] is True, (

@@ -237,6 +237,70 @@ def test_out_of_subset_streams_quarantine():
     assert stype == "I" and on and (a_off, b_off) == (0, 0)
 
 
+def _cabac_pps() -> bytes:
+    """write_pps() with entropy_coding_mode_flag set: same fields, same
+    length, so it can stand in for the CAVLC PPS inside a container."""
+    w = H._RbspWriter()
+    w.ue(0)  # pps_id
+    w.ue(0)  # sps_id
+    w.u(1, 1)  # entropy_coding_mode: CABAC
+    w.u(0, 1)  # bottom_field_pic_order_in_frame_present
+    w.ue(0)  # num_slice_groups_minus1
+    w.ue(0)  # num_ref_idx_l0_default_active_minus1
+    w.ue(0)  # num_ref_idx_l1_default_active_minus1
+    w.u(0, 1)  # weighted_pred
+    w.u(0, 2)  # weighted_bipred_idc
+    w.se(0)  # pic_init_qp_minus26
+    w.se(0)  # pic_init_qs_minus26
+    w.se(0)  # chroma_qp_index_offset
+    w.u(1, 1)  # deblocking_filter_control_present_flag
+    w.u(0, 1)  # constrained_intra_pred
+    w.u(0, 1)  # redundant_pic_cnt_present
+    return b"\x68" + w.finish()
+
+
+def test_cabac_is_probe_only_on_every_decode_path():
+    """CABAC streams are probe-only: every decode path quarantines,
+    while the probe still reads the dims from the SPS.  The same
+    stream with its CAVLC PPS decodes."""
+    rng = np.random.default_rng(5)
+    w, h = 32, 16
+    frames = _rand_frames(rng, w, h, 3)
+    sps, pps, nals = H.encode_h264_ippp(w, h, frames)
+    cabac = _cabac_pps()
+    assert len(cabac) == len(pps) and cabac != pps
+    with pytest.raises(MediaFormatError, match="CABAC"):
+        H.parse_pps(cabac)
+
+    def swap(payload: bytes) -> bytes:
+        assert payload.count(pps) == 1
+        return payload.replace(pps, cabac)
+
+    for build, decode in (
+        (encode_mp4_coded, decode_mp4),
+        (encode_mkv_coded, decode_mkv),
+    ):
+        media = build(w, h, intra_frames=frames, gop="ippp")
+        dw, dh, _durs, out, sync = decode(media)
+        assert (dw, dh, len(out)) == (w, h, 3)
+        assert sync[0] and not any(sync[1:])
+        media = swap(media)
+        with pytest.raises(MediaFormatError):
+            decode(media)
+        p = probe_media(media)
+        assert (p["codec"], p["width"], p["height"]) == ("h264", w, h)
+    avcc, samples = H.encode_avcc_samples(w, h, frames, gop="ippp")
+    with pytest.raises(MediaFormatError):
+        H.decode_avcc_samples(swap(avcc), samples)
+    es = swap(H.encode_h264_annexb(w, h, frames, gop="ippp"))
+    with pytest.raises(MediaFormatError):
+        H.decode_h264_annexb_stream(es)
+    p = probe_media(es)
+    assert (p["codec"], p["width"], p["height"]) == ("h264", w, h)
+    with pytest.raises(MediaFormatError):
+        H.decode_h264_stream(sps, cabac, nals)
+
+
 def test_fuzz_quarantine_contract():
     """Truncations and bit flips over a real intra mp4 must raise
     MediaFormatError (or decode — a flip may land in pixel data),

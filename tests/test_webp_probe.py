@@ -41,7 +41,11 @@ def test_vp8l_14bit_dims():
 
 
 def test_decode_quarantines():
-    p = encode_webp_fixture(8, 8, "vp8")
+    # VP8-lossy is probe-only: the probe reads the dims, decode
+    # quarantines
+    p = encode_webp_fixture(8, 8, "vp8", 1, b"x")
+    m = probe_media(p)
+    assert (m["kind"], m["width"], m["height"]) == ("webp", 8, 8)
     with pytest.raises(MediaFormatError):
         _decode_image("webp", p)
 
