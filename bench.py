@@ -160,7 +160,7 @@ EXTENDED = [
     "crawl_refined_corpus",
     # round 9
     "dedup_ngram_prefix",
-    "video_intra_decode",
+    "video_decode_matrix",
     "video_intra_thumbnail",
     "multimodal_decode_features_sig",
     "video_scene_cuts_sig",
@@ -170,21 +170,17 @@ EXTENDED = [
     "text_encoding_repair_cp1252",
     "corpus_to_webdataset",
     # round 10
-    "video_inter_decode",
     "dedup_lsh_hotcap",
     "dedup_minhash_incremental",
     "stream_minhash_dedup_live",
     # round 11
     "webp_lossless_decode",
     # round 12
-    "video_bslice_decode",
     "dsir_select",
     # round 13
     "stream_dsir_select_live",
     # round 14
-    "video_reflist_mmco",
     "video_hevc_probe",
-    "video_blongterm",
     "dedup_cdc_chunks",
     "image_tiff_decode",
     "image_exif_scrub",
@@ -198,7 +194,6 @@ EXTENDED = [
     # round 15
     "image_tiff_tiled",
     "dedup_cdc_gear",
-    "video_bweighted",
     "audio_mpeg_index",
     "image_tiff_palette",
     "image_exif_scrub_multi",
@@ -207,11 +202,9 @@ EXTENDED = [
     "audio_flac_index",
     # round 16
     "image_tiff_jpeg",
-    "video_bimplicit",
     "webp_anim_decode",
     "image_tiff_ccitt",
     "image_tiff_planar",
-    "video_deepref",
     "image_tiff_mh",
     "image_tiff_g3",
 ]

@@ -6354,6 +6354,12 @@ def build_avcc(sps: bytes, pps: bytes | None = None) -> bytes:
     )
 
 
+def _is_idr_sample(sample: bytes) -> bool:
+    """A 4-byte-length-prefixed h264 sample is a sync sample iff its
+    first NAL is an IDR slice (nal_unit_type 5)."""
+    return sample[4] & 0x1F == 5
+
+
 def build_hvcc(sps: bytes) -> bytes:
     """HEVCDecoderConfigurationRecord (ISO 14496-15 §8.3.3.1) with one
     SPS array."""
@@ -6724,8 +6730,8 @@ def encode_mp4_coded(
     and DUMMY coded samples — the PROBE recovers the construction
     parameters, decode quarantines.  With ``intra_frames`` (RGB bytes,
     h264 only): samples are REAL coded slices from
-    ``reindexer_spark.h264`` — all IDR by default, or IDR + P chain
-    with ``gop="ippp"`` (stss then marks only sample 1 as sync) —
+    ``reindexer_spark.h264`` coded by the ``h264.GOPS`` chain named
+    ``gop`` (all IDR by default); stss marks the IDR samples — and
     decode reconstructs actual pixels."""
     if intra_frames is not None:
         if codec != "h264":
@@ -6785,14 +6791,19 @@ def encode_mp4_coded(
         + b"".join(struct.pack(">I", len(b)) for b in bodies),
     )
     stco = _full_box(b"stco", 0, 0, struct.pack(">II", 1, base))
-    # absent stss = every sample sync (true for all-intra); the IPPP
-    # and IPB chains mark only the IDR; dummy-sample probe fixtures
-    # with sync_every > 1 mark every sync_every-th sample (round 14 —
-    # exercises the header-only keyframe index on coded tracks)
-    if intra_frames is not None and gop in ("ippp", "ipb", "ipb-temporal", "ipb-longterm", "ippp-multiref", "ippp-wp", "ippp-ms2", "ippp-reflist", "ippp-poc1", "ippp-longterm", "ippp-mmco5"):
-        stss = _full_box(b"stss", 0, 0, struct.pack(">II", 1, 1))
-    elif intra_frames is None and sync_every > 1:
+    # stss lists the sync samples; absent = every sample sync.  Coded
+    # samples are sync iff they are IDR; dummy-sample probe fixtures
+    # with sync_every > 1 mark every sync_every-th sample (exercises
+    # the header-only keyframe index on coded tracks)
+    if intra_frames is not None:
+        sync = [i + 1 for i, b in enumerate(bodies) if _is_idr_sample(b)]
+        if len(sync) == n_frames:
+            sync = None  # all-IDR
+    elif sync_every > 1:
         sync = list(range(1, n_frames + 1, sync_every))
+    else:
+        sync = None
+    if sync is not None:
         stss = _full_box(
             b"stss",
             0,
@@ -6868,7 +6879,8 @@ def encode_mkv_coded(
     h264/hevc — CodecID V_MPEG4/ISO/AVC / V_MPEGH/ISO/HEVC with the
     avcC/hvcC record as CodecPrivate.  Default: dummy SimpleBlock
     payloads (probe-only; decode quarantines).  With ``intra_frames``
-    (h264 only): blocks are REAL intra-only IDR samples."""
+    (h264 only): blocks are REAL samples coded by the ``h264.GOPS``
+    chain named ``gop``; the keyframe flag marks the IDR samples."""
     intra_bodies = None
     if intra_frames is not None:
         if codec != "h264":
@@ -6948,22 +6960,15 @@ def encode_mkv_coded(
             _MKV_SIMPLE_BLOCK,
             b"\x81"
             + struct.pack(">h", i * frame_ms)
-            # all-intra: every block keyframe; ippp/ipb: only block 0;
-            # dummy probe fixtures honour sync_every (round 14 — the
-            # keyframe flags must agree with the mp4 twin's stss)
+            # keyframe flag: coded samples iff IDR; dummy probe
+            # fixtures block 0 and, with sync_every > 1, every
+            # sync_every-th block
             + bytes([
                 0x80
                 if (
-                    i == 0
-                    or (
-                        intra_bodies is not None
-                        and gop not in ("ippp", "ipb", "ipb-temporal", "ipb-longterm", "ippp-multiref", "ippp-wp", "ippp-ms2", "ippp-reflist", "ippp-poc1", "ippp-longterm", "ippp-mmco5")
-                    )
-                    or (
-                        intra_bodies is None
-                        and sync_every > 1
-                        and i % sync_every == 0
-                    )
+                    _is_idr_sample(intra_bodies[i])
+                    if intra_bodies is not None
+                    else i == 0 or (sync_every > 1 and i % sync_every == 0)
                 )
                 else 0x00
             ])

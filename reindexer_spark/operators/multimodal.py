@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from reindexer_spark.cache import track
 from reindexer_spark.catalog import load_table
+from reindexer_spark.h264 import GOPS, encode_h264_intra
 from reindexer_spark.operators.banding import (
     banded_pairs,
     banded_pairs_sql,
@@ -2757,9 +2758,8 @@ INTRA_DOCS = 24  # bounded fixture count (constant work at any sf)
 
 
 def _intra_fixture(mid: int, text: str):
-    """Digest-seeded intra-h264 fixture parameters — ONE synthesis rule
-    shared by the decode lane, the thumbnail lane, and their oracles
-    (the sig-twin discipline: lanes sharing a body cannot diverge)."""
+    """Digest-seeded intra-h264 fixture parameters for the thumbnail
+    lane (its oracle re-derives the same dims from sha256(text))."""
     import hashlib
 
     dg = hashlib.sha256(text.encode("utf-8")).digest()
@@ -2774,144 +2774,6 @@ def _intra_fixture(mid: int, text: str):
     ]
     container = "mp4" if mid % 2 == 0 else "mkv"
     return w, h, n_frames, qp, frames, container
-
-
-@query(
-    "video_intra_decode",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {INTRA_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (8 + s0 % 25) AS INT) AS width,
-      CAST(2 * (8 + s1 % 17) AS INT) AS height,
-      CAST(1 + s2 % 3 AS INT) AS n_frames,
-      CAST(2 * (8 + s0 % 25) * 2 * (8 + s1 % 17) * 3 AS BIGINT)
-        AS frame_bytes,
-      CAST(1 AS INT) AS decodable,
-      CAST(0 AS INT) AS inter_decodable,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact
-    FROM s
-    """,
-)
-def video_intra_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL H.264 decode (round-8 VERDICT stretch #8 closed): per
-    document, synthesize digest-seeded RGB frames, encode them as
-    intra-only IDR h264 (reindexer_spark.h264 — I_16x16 DC + CAVLC,
-    QP swept across both §8.5 dequant rounding branches), mux into mp4
-    OR mkv (real avcC / CodecPrivate), and DECODE the pixels back.
-
-    Oracle-pinned contract columns (DuckDB re-derives everything from
-    sha256(text), so each is value-checked, not self-declared):
-    ``decodable=1`` — the intra fixture decodes (the SPS-probe lane's
-    decodable=0 stays pinned for its inter-style dummy fixtures);
-    ``inter_decodable=0`` — the same doc's dummy-sample fixture STILL
-    quarantines, so the subset boundary is honest; ``containers_agree=1``
-    — the same bitstream decodes to BIT-IDENTICAL pixels through the
-    mp4 and mkv container paths; ``recon_exact=1`` — decoder output is
-    BYTE-EXACT against the encoder's closed-loop §8.5 reconstruction
-    (the normative conformance claim, content- and QP-independent);
-    dims (non-multiple-of-16 → SPS cropping on the decode path),
-    frame count, and decoded frame byte size are value-exact.
-
-    Scale shape: task-local Arrow-batched mapInPandas; payloads never
-    shuffle; at 100 TB this is the keyframe-thumbnail pass that runs
-    AFTER the SPS probe filtered by resolution/profile."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INTRA_DOCS
-    )
-
-    def build_and_decode(batches):
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _intra_fixture(
-                    mid, r.text
-                )
-                from reindexer_spark.h264 import encode_h264_intra
-
-                _sps, _pps, _nals, recon = encode_h264_intra(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                mp4 = encode_mp4_coded(w, h, intra_frames=frames, qp=qp)
-                mkv = encode_mkv_coded(w, h, intra_frames=frames, qp=qp)
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                # the same bitstream through the OTHER container
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                # the dummy-sample (inter-style) fixture must quarantine
-                try:
-                    dec(
-                        (encode_mp4_coded if container == "mp4"
-                         else encode_mkv_coded)(w, h, n_frames=n_frames)
-                    )
-                    inter_decodable = 1
-                except MediaFormatError:
-                    inter_decodable = 0
-                recon_exact = int(out == recon)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "frame_bytes": len(out[0]) if out else 0,
-                        "decodable": decodable,
-                        "inter_decodable": inter_decodable,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height", "n_frames",
-                    "frame_bytes", "decodable", "inter_decodable",
-                    "containers_agree", "recon_exact",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(INTRA_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, container string, width int, height int, "
-        "n_frames int, frame_bytes bigint, decodable int, "
-        "inter_decodable int, containers_agree int, recon_exact int",
-    )
 
 
 @query(
@@ -2943,7 +2805,7 @@ def video_intra_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 def video_intra_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The 100 TB media pipeline's payoff composition, hash-green end
     to end: probe-shaped coded video (intra-only h264 in mp4/mkv, the
-    same _intra_fixture rule as video_intra_decode) → REAL H.264
+    _intra_fixture rule) → REAL H.264
     decode of the FIRST keyframe only → nearest-neighbor thumbnail
     through the production resizer (the decoded frame re-enters the
     image path as a BMP) — the keyframe-thumbnail pass that runs after
@@ -3021,1332 +2883,111 @@ def video_intra_thumbnail(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-INTER_DOCS = 16  # bounded fixture count (ME is the priciest encode)
+def _matrix_frames(gop: str) -> int:
+    """Frames a GOPS chain needs for its coding tools to engage: the
+    reference depth plus two (a 10-deep DPB fills by picture 11), nine
+    for the long-term chains (every B shape of the long-term cycle
+    appears), six otherwise."""
+    kwargs = GOPS[gop][1]
+    return max(
+        6, kwargs.get("n_refs", 0) + 2, 9 if kwargs.get("longterm") else 0
+    )
 
 
-def _inter_fixture(mid: int, text: str):
-    """Digest-seeded IPPP fixture: a noise base frame TRANSLATING by a
-    per-document (dx, dy) each frame — real motion, so P slices carry
-    real motion vectors (the np.roll wrap seam keeps a thin band of
-    residual/intra MBs alive in every picture).  One synthesis rule
-    shared by the lane and its oracle."""
+def _matrix_clip(text: str, n_frames: int):
+    """Digest-seeded matrix clip: (w, h, qp, RGB frames).  A noise
+    frame that translates and fades — motion search and the weighted
+    prediction models both engage; 32..48 x 32..44 keeps SPS cropping
+    live."""
     import hashlib
 
     import numpy as np
 
     dg = hashlib.sha256(text.encode("utf-8")).digest()
-    # dims ≥ 32: the np.roll wrap seam (which motion compensation
-    # cannot predict) must stay a thin minority band, so the
-    # p_smaller=1 contract is structural, not luck — an 18x22 frame is
-    # mostly seam and P can lose to intra there (found at the sf0.01
-    # gate, media_id 18)
-    w = 2 * (16 + dg[0] % 13)
-    h = 2 * (16 + dg[1] % 9)
-    n_frames = 3 + dg[2] % 3
-    qp = 20 + dg[3] % 18  # 20..37
-    dx, dy = 1 + dg[4] % 3, 1 + dg[5] % 3
-    # true per-pixel noise (digest-seeded): tiling the 32-byte digest
-    # (the intra lane's trick) degenerates into identical rows, which
-    # intra H-prediction codes almost for free and the p_smaller
-    # contract dies; noise makes intra expensive and MC nearly free —
-    # the regime P slices exist for
+    w = 2 * (16 + dg[0] % 9)
+    h = 2 * (16 + dg[1] % 7)
+    qp = 20 + dg[3] % 18
     rng = np.random.default_rng(int.from_bytes(dg[:8], "big"))
-    base = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
+    base = rng.integers(30, 226, (h, w, 3)).astype(np.float64)
     frames = [
-        np.roll(base, shift=(i * dy, i * dx), axis=(0, 1)).tobytes()
+        np.clip(
+            np.roll(base, shift=(i, 2 * i), axis=(0, 1)) * (1.0 - 0.04 * i)
+            + 3 * i,
+            0,
+            255,
+        )
+        .astype(np.uint8)
+        .tobytes()
         for i in range(n_frames)
     ]
-    container = "mp4" if mid % 2 == 0 else "mkv"
-    return w, h, n_frames, qp, frames, container
+    return w, h, qp, frames
+
+
+_MATRIX_GOPS_SQL = ", ".join(
+    f"({i}, '{g}', {_matrix_frames(g)})" for i, g in enumerate(GOPS)
+)
+_MATRIX_ALL_IDR_SQL = ", ".join(
+    f"'{g}'" for g, (enc, _kw) in GOPS.items() if enc is encode_h264_intra
+)
 
 
 @query(
-    "video_inter_decode",
+    "video_decode_matrix",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {INTER_DOCS}
+    WITH g(media_id, gop, n_frames) AS (VALUES {_MATRIX_GOPS_SQL}),
+    base AS (
+      SELECT g.media_id, g.gop, g.n_frames, sha256(d.text) AS dg
+      FROM documents d JOIN g ON d.doc_id = g.media_id
     ), s AS (
-      SELECT media_id,
+      SELECT media_id, gop, n_frames,
              CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
              CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (16 + s0 % 13) AS INT) AS width,
-      CAST(2 * (16 + s1 % 9) AS INT) AS height,
-      CAST(3 + s2 % 3 AS INT) AS n_frames,
-      CAST(2 * (16 + s0 % 13) * 2 * (16 + s1 % 9) * 3 AS BIGINT)
-        AS frame_bytes,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS p_smaller,
-      CAST(1 AS INT) AS recon_exact
-    FROM s
-    """,
-)
-def video_inter_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL inter-predicted H.264 decode (round-9 VERDICT next #4
-    closed): per document, synthesize a digest-seeded TRANSLATING
-    scene, encode it as an IPPP chain (reindexer_spark.h264 P slices —
-    P_Skip / 16x16 / 16x8 / 8x16 partitions, quarter-pel MC, median MV
-    prediction, single reference), mux into mp4 OR mkv, and decode the
-    pixels back.
-
-    Oracle-pinned contract columns (all re-derived from sha256(text)):
-    ``decodable=1`` — the IPPP chain decodes through the container
-    path; ``only_first_sync=1`` — the container's sync table marks
-    exactly the IDR (stss / SimpleBlock keyframe flags must tell the
-    truth about an inter chain); ``containers_agree=1`` — the same
-    bitstream decodes bit-identically through mp4 AND mkv;
-    ``p_smaller=1`` — the P tail costs fewer bits than the same frames
-    coded all-intra (motion compensation must actually pay);
-    ``recon_exact=1`` — decoder output is BYTE-EXACT against the
-    encoder's closed-loop reconstruction, the §8.4 conformance claim
-    (any mismatch in interpolation, MV prediction, skip inference, or
-    the inter CBP table breaks it).
-
-    Scale shape: identical to video_intra_decode — Arrow-batched
-    mapInPandas, payloads never shuffle; at 100 TB this is the pass
-    that makes real crawl video (overwhelmingly inter-predicted)
-    decodable instead of probe-only."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < INTER_DOCS
-    )
-
-    def build_and_decode(batches):
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-        from reindexer_spark.h264 import encode_h264_intra, encode_h264_ippp
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _inter_fixture(
-                    mid, r.text
-                )
-                _s, _p, p_nals, recon = encode_h264_ippp(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                _s, _p, i_nals = encode_h264_intra(w, h, frames, qp=qp)
-                p_smaller = int(
-                    sum(len(n) for n in p_nals[1:])
-                    < sum(len(n) for n in i_nals[1:])
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out, sync = [], []
-                    decodable = 0
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and sync[0]
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "frame_bytes": len(out[0]) if out else 0,
-                        "decodable": decodable,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "p_smaller": p_smaller,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height", "n_frames",
-                    "frame_bytes", "decodable", "only_first_sync",
-                    "containers_agree", "p_smaller", "recon_exact",
-                ],
-            )
-
-    # each row is seconds of encoder CPU: spread the bounded fixture
-    # set across tasks (the single-file documents scan is 1 partition,
-    # which serialized the whole lane through one core — round 11)
-    return docs.select("doc_id", "text").repartition(INTER_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, container string, width int, height int, "
-        "n_frames int, frame_bytes bigint, decodable int, "
-        "only_first_sync int, containers_agree int, p_smaller int, "
-        "recon_exact int",
-    )
-
-
-BSLICE_DOCS = 12  # bounded: two motion searches per B macroblock
-
-
-@query(
-    "video_bslice_decode",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {BSLICE_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (16 + s0 % 13) AS INT) AS width,
-      CAST(2 * (16 + s1 % 9) AS INT) AS height,
-      CAST(3 + s2 % 3 AS INT) AS n_frames,
-      CAST((3 + s2 % 3 - 1) // 2 AS INT) AS n_b_frames,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS b_smaller,
-      CAST(1 AS INT) AS recon_exact
-    FROM s
-    """,
-)
-def video_bslice_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL bi-predictive H.264 decode (round-11 VERDICT next #4): the
-    same digest-seeded translating scenes as video_inter_decode,
-    encoded as a low-delay IPB chain (reindexer_spark.h264 B slices —
-    two reference lists, B_L0/B_L1/B_Bi 16x16 modes, SPATIAL DIRECT
-    B_Skip/B_Direct_16x16 with the colocated-motion colZeroFlag,
-    per-list median MV prediction, the default bi average,
-    non-reference NALs), muxed into mp4 OR mkv, and decoded back.
-
-    Oracle-pinned contract columns (all re-derived from sha256(text)):
-    ``n_b_frames`` — the chain carries (n-1)//2 non-reference B
-    pictures; ``decodable=1``; ``only_first_sync=1`` — sync tables
-    still mark exactly the IDR; ``containers_agree=1`` — mp4 and mkv
-    decode bit-identically; ``b_smaller=1`` — the B frames cost fewer
-    bits than the same frames coded all-intra (the p_smaller analog;
-    chain-vs-chain stays unpinnable even with B_Skip: on
-    exactly-translating fixtures direct's median prediction can't
-    always match the roll motion, so a B frame occasionally ties its
-    P twin); ``recon_exact=1`` — decoder ≡ encoder closed loop through
-    the per-list §8.7.2.1 deblocking strengths (any mismatch in list
-    construction, per-list MV prediction, the bi average, the spatial
-    direct derivation, or the non-reference DPB rule breaks it).  The
-    bi/L1/direct/skip machinery engagement is pinned in
-    tests/test_h264_bslice.py (per-doc mode histograms are
-    encoder-choice, not digest arithmetic).
-
-    Scale shape: identical to the other video lanes — Arrow-batched
-    mapInPandas, payloads never shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < BSLICE_DOCS
-    )
-
-    def build_and_decode(batches):
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-        from reindexer_spark.h264 import (
-            encode_h264_intra,
-            encode_h264_ipb,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _inter_fixture(
-                    mid, r.text
-                )
-                _s, _p, b_nals, recon = encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                _s, _p, i_nals = encode_h264_intra(w, h, frames, qp=qp)
-                b_idx = [i for i in range(2, n_frames, 2)]
-                n_b = sum(1 for i in b_idx if b_nals[i][0] >> 5 == 0)
-                b_smaller = int(
-                    sum(len(b_nals[i]) for i in b_idx)
-                    < sum(len(i_nals[i]) for i in b_idx)
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out, sync = [], []
-                    decodable = 0
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and sync[0]
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "n_b_frames": n_b,
-                        "decodable": decodable,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "b_smaller": b_smaller,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "n_b_frames", "decodable",
-                    "only_first_sync", "containers_agree", "b_smaller",
-                    "recon_exact",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(BSLICE_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, n_b_frames int, decodable int, "
-            "only_first_sync int, containers_agree int, b_smaller int, "
-            "recon_exact int",
-        )
-    )
-
-
-TDIRECT_DOCS = 10  # bounded: two chains (temporal IPB + multiref) per doc
-
-
-@query(
-    "video_bdirect_temporal",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TDIRECT_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (16 + s0 % 13) AS INT) AS width,
-      CAST(2 * (16 + s1 % 9) AS INT) AS height,
-      CAST(3 + s2 % 3 AS INT) AS n_frames,
-      CAST((3 + s2 % 3 - 1) // 2 AS INT) AS n_b_frames,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS temporal_flag,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS multiref_recon_exact,
-      CAST(1 AS INT) AS multiref_smaller,
-      CAST(1 AS INT) AS ref1_used
-    FROM s
-    """,
-)
-def video_bdirect_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEMPORAL-direct B + MULTI-REFERENCE P decode (round-12 VERDICT
-    next #4): the digest-seeded translating scenes of
-    video_bslice_decode encoded as a temporal-direct IPB chain
-    (§8.4.1.2.3 POC-scaled colocated motion, DPB 3-deep, full list 0
-    per B so the colocated picture's own reference maps in), muxed
-    into mp4 OR mkv (gop="ipb-temporal") and decoded back; plus a
-    FLIP-FLOP clip (two alternating noise scenes — the occlusion
-    pattern multi-reference exists for) coded with n_refs=2
-    (per-partition ref_idx_l0 te(v)) against its single-reference
-    twin.
-
-    Oracle-pinned contract columns (all re-derived from sha256(text)):
-    ``n_b_frames``; ``decodable=1``; ``temporal_flag=1`` — every B
-    slice header in the chain really signals
-    direct_spatial_mv_pred_flag 0 (parse-checked, so the lane cannot
-    silently fall back to spatial); ``containers_agree=1``;
-    ``recon_exact=1`` — decoder ≡ encoder closed loop through the
-    POC-scaled direct derivation, the refIdx-aware MV prediction and
-    the same-reference-PICTURE §8.7.2.1 deblock rule;
-    ``multiref_recon_exact=1`` — the n_refs=2 flip-flop chain decodes
-    byte-exact; ``multiref_smaller=1`` — it codes SMALLER than the
-    single-reference twin (structural: frame i matches frame i-2
-    exactly and i-1 not at all); ``ref1_used=1`` — some decoded P
-    macroblock really predicts from refIdx 1 (the decoder's own
-    motion state, so the te(v) syntax and list indexing are proven
-    live, not just parsed).
-
-    Scale shape: identical to the other video lanes — Arrow-batched
-    mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TDIRECT_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-
-        import numpy as np
-
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            _unescape_rbsp,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-        from reindexer_spark.h264 import (
-            _BitReader,
-            _parse_slice_header,
-            _parse_sps_slice_fields,
-            decode_frame_nal,
-            decode_h264_stream,
-            encode_h264_ipb,
-            encode_h264_ippp,
-            parse_pps,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                w, h, n_frames, qp, frames, container = _inter_fixture(
-                    mid, r.text
-                )
-                sps, pps, b_nals, recon = encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True,
-                    direct="temporal",
-                )
-                n_b = sum(1 for n in b_nals if n[0] >> 5 == 0)
-                # every B header really signals temporal direct
-                sd = _parse_sps_slice_fields(sps)
-                pd_ = parse_pps(pps)
-                tflag = 1
-                for nal in b_nals:
-                    if nal[0] >> 5 != 0:
-                        continue
-                    rr = _BitReader(_unescape_rbsp(nal[1:]))
-                    _s, _q, _d, _a, _b2, info = _parse_slice_header(
-                        rr, sd, pd_, idr=False, nal_ref_idc=0
-                    )
-                    if info["direct_spatial"]:
-                        tflag = 0
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-temporal"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-temporal"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                # --- multi-reference leg: flip-flop clip, n_refs 2 vs 1
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[8:16], "big")
-                )
-                sa = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                sb = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                ff = [(sa, sb)[i % 2].tobytes() for i in range(5)]
-                msps, mpps, mnals, mrec = encode_h264_ippp(
-                    w, h, ff, qp=qp, return_recon=True, n_refs=2
-                )
-                _s1, _p1, snals = encode_h264_ippp(
-                    w, h, ff, qp=qp, n_refs=1
-                )
-                m_smaller = int(
-                    sum(len(n) for n in mnals)
-                    < sum(len(n) for n in snals)
-                )
-                try:
-                    _mw, _mh, mdec = decode_h264_stream(
-                        msps, mpps, mnals
-                    )
-                    m_exact = int(mdec == mrec)
-                except MediaFormatError:
-                    m_exact = 0
-                # ref1 engagement: the decoder's own motion state
-                msd = _parse_sps_slice_fields(msps)
-                mpd = parse_pps(mpps)
-                refs: list = []
-                ref_pocs: list = []
-                poc_ctx: dict = {}
-                ref1_used = 0
-                for nal in mnals:
-                    sink: dict = {}
-                    pl = decode_frame_nal(
-                        nal, msd, mpd,
-                        ref=refs[0] if refs else None,
-                        motion_sink=sink, poc_ctx=poc_ctx,
-                        refs=refs if len(refs) > 1 else None,
-                        ref_pocs=ref_pocs if refs else None,
-                    )
-                    if (
-                        sink.get("ref0") is not None
-                        and sink["ref0"].max() > 0
-                    ):
-                        ref1_used = 1
-                    refs = [pl] + refs[:7]
-                    ref_pocs = [sink.get("poc")] + ref_pocs[:7]
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "n_b_frames": n_b,
-                        "decodable": decodable,
-                        "temporal_flag": tflag,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                        "multiref_recon_exact": m_exact,
-                        "multiref_smaller": m_smaller,
-                        "ref1_used": ref1_used,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "n_b_frames", "decodable",
-                    "temporal_flag", "containers_agree", "recon_exact",
-                    "multiref_recon_exact", "multiref_smaller",
-                    "ref1_used",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(TDIRECT_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, n_b_frames int, decodable int, "
-            "temporal_flag int, containers_agree int, recon_exact int, "
-            "multiref_recon_exact int, multiref_smaller int, "
-            "ref1_used int",
-        )
-    )
-
-
-REFLIST_DOCS = 10  # bounded: two encode chains per doc
-
-
-@query(
-    "video_reflist_mmco",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {REFLIST_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
-      FROM base
-    ), p AS (
-      SELECT media_id, s0, s1,
-             CAST(6 + s2 % 2 AS INT) AS n_frames,
-             CASE media_id % 4 WHEN 0 THEN 'reflist'
-                               WHEN 1 THEN 'poc1'
-                               WHEN 2 THEN 'longterm'
-                               ELSE 'mmco5' END AS variant
-      FROM s
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      variant,
-      CAST(2 * (16 + s0 % 13) AS INT) AS width,
-      CAST(2 * (16 + s1 % 9) AS INT) AS height,
-      n_frames,
-      CAST(CASE WHEN variant = 'reflist' THEN n_frames - 2
-                WHEN variant = 'longterm' THEN 1
-                ELSE 0 END AS INT) AS n_rplm,
-      CAST(CASE WHEN variant = 'reflist' THEN 1
-                WHEN variant = 'longterm' THEN 2
-                WHEN variant = 'mmco5' THEN 1
-                ELSE 0 END AS INT) AS n_mmco,
-      CAST(CASE WHEN variant = 'poc1' THEN 1 ELSE 0 END AS INT)
-        AS poc_type,
-      CAST(CASE WHEN variant = 'longterm' THEN 1 ELSE 0 END AS INT)
-        AS uses_longterm,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact
-    FROM p
-    """,
-)
-def video_reflist_mmco(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REFERENCE-LIST MODIFICATION + ADAPTIVE MARKING (MMCO 1..6) +
-    FRAME_NUM-DERIVED POC
-    (round 14, VERDICT r13 next #2 — the table-free h264 quarantines):
-    digest-seeded translating-noise clips encoded as four chain
-    shapes — ``reflist``: a 3-reference IPPP chain where every
-    multi-reference P slice signals a §7.3.3.1 RPLM that puts the
-    SECOND-most-recent picture first (idc 0 then idc 1, real picNum
-    predictor arithmetic) and one mid-chain picture carries a §7.3.3.3
-    MMCO 1 dropping the OLDEST reference (the DPB develops a hole
-    later PicNum math must respect); ``poc1``: the same IPPP chain
-    under pic_order_cnt_type 1 (§8.2.1.3 — POC derived from frame_num
-    through the SPS offset cycle, no per-slice POC syntax);
-    ``longterm``: picture 1 PINS the IDR as a long-term reference
-    (MMCO 4 opens the index space, MMCO 3 assigns LongTermFrameIdx 0)
-    that then OUTLIVES the 1-deep short-term sliding window — a DPB
-    shape impossible without long-term marking — picture 4 selects it
-    first via RPLM idc 2 (long_term_pic_num) and the second-to-last
-    picture discards it with MMCO 2; ``mmco5``: one mid-chain
-    §8.2.5.4.5 STREAM RESET — every reference marked unused and the
-    carrying picture becomes frame_num/POC origin 0 for the tail —
-    each muxed into mp4 AND mkv and decoded back.
-
-    Oracle-pinned contract columns: ``n_rplm`` — every P header from
-    the third picture on really carries a modification list
-    (parse-checked per header, like the temporal gate's flag);
-    ``n_mmco`` per chain shape; ``poc_type`` as signalled;
-    ``uses_longterm`` — a real MMCO 3 assignment rides the longterm
-    stream; ``recon_exact=1`` — decoder ≡ encoder closed loop, which
-    fails if the §8.2.4.3 reorder, any §8.2.5.4 marking op, or the
-    §8.2.1.3 derivation picks ANY wrong picture (references differ →
-    pixels differ); ``containers_agree=1``; ``only_first_sync=1``.
-    The only remaining marking quarantine is long-term references
-    under B slices (the §8.4.1.2.3 long-term scaling branches are
-    not claimed) — tests/test_h264_reflist.py pins the negatives.
-
-    Scale shape: identical to the other video lanes — Arrow-batched
-    mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < REFLIST_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-
-        import numpy as np
-
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            _unescape_rbsp,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-        from reindexer_spark.h264 import (
-            _BitReader,
-            _parse_slice_header,
-            _parse_sps_slice_fields,
-            encode_h264_ippp,
-            parse_pps,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 13)
-                h = 2 * (16 + dg[1] % 9)
-                n_frames = 6 + dg[2] % 2
-                qp = 20 + dg[3] % 18
-                dx, dy = 1 + dg[4] % 3, 1 + dg[5] % 3
-                variant = (
-                    "reflist", "poc1", "longterm", "mmco5"
-                )[mid % 4]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                frames = [
-                    np.roll(
-                        base, shift=(i * dy, i * dx), axis=(0, 1)
-                    ).tobytes()
-                    for i in range(n_frames)
-                ]
-                kw = {
-                    "reflist": {"n_refs": 3, "reflist": True},
-                    "poc1": {"poc_type": 1},
-                    "longterm": {"longterm": True},
-                    "mmco5": {"mmco5": True},
-                }[variant]
-                sps, pps, nals, recon = encode_h264_ippp(
-                    w, h, frames, qp=qp, return_recon=True, **kw
-                )
-                # parse-check: count headers that REALLY carry RPLM /
-                # MMCO syntax, and confirm the signalled poc_type
-                sd = _parse_sps_slice_fields(sps)
-                pd_ = parse_pps(pps)
-                n_rplm = n_mmco = uses_lt = 0
-                for nal in nals[1:]:
-                    rr = _BitReader(_unescape_rbsp(nal[1:]))
-                    _s, _q, _d, _a, _b2, info = _parse_slice_header(
-                        rr, sd, pd_, idr=False, nal_ref_idc=nal[0] >> 5
-                    )
-                    if info["rplm_l0"]:
-                        n_rplm += 1
-                    if info["mmco"]:
-                        n_mmco += 1
-                        if any(op[0] == 3 for op in info["mmco"]):
-                            uses_lt = 1
-                gop = {
-                    "reflist": "ippp-reflist",
-                    "poc1": "ippp-poc1",
-                    "longterm": "ippp-longterm",
-                    "mmco5": "ippp-mmco5",
-                }[variant]
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop=gop
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop=gop
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    _dw, _dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    out, sync = [], []
-                    decodable = 0
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and bool(sync[0])
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "variant": variant,
-                        "width": w,
-                        "height": h,
-                        "n_frames": n_frames,
-                        "n_rplm": n_rplm,
-                        "n_mmco": n_mmco,
-                        "poc_type": sd["poc_type"],
-                        "uses_longterm": uses_lt,
-                        "decodable": decodable,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "variant", "width",
-                    "height", "n_frames", "n_rplm", "n_mmco",
-                    "poc_type", "uses_longterm", "decodable",
-                    "only_first_sync", "containers_agree",
-                    "recon_exact",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(REFLIST_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, variant string, "
-            "width int, height int, n_frames int, n_rplm int, "
-            "n_mmco int, poc_type int, uses_longterm int, "
-            "decodable int, only_first_sync int, containers_agree "
-            "int, recon_exact int",
-        )
-    )
-
-
-BLT_DOCS = 8  # bounded: one ~10-frame IPB encode + 5 decodes per doc
-
-
-@query(
-    "video_blongterm",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {BLT_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
              CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
       FROM base
     )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(80 + 16 * (s0 % 2) AS INT) AS width,
-      CAST(48 AS INT) AS height,
-      CAST(9 + s2 % 2 AS INT) AS n_frames,
-      CAST(20 + s3 % 14 AS INT) AS qp,
-      CAST(4 AS INT) AS n_b,
-      CAST(1 AS INT) AS b_plain,
-      CAST(1 AS INT) AS b_temporal,
-      CAST(1 AS INT) AS b_lt_l0,
-      CAST(1 AS INT) AS b_lt_l1,
-      CAST(1 AS INT) AS mmco46,
-      CAST(1 AS INT) AS lt_colzero_matters,
-      CAST(1 AS INT) AS lt_unscaled_matters,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS only_first_sync,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS recon_exact
-    FROM s
-    """,
-)
-def video_blongterm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LONG-TERM REFERENCES UNDER B SLICES (late round 14 — the last
-    h264 marking quarantine): digest-seeded clips whose picture 1 pins
-    ITSELF long-term (MMCO 4 + MMCO 6) so every B picture decodes
-    over a [short-terms..., long-term] DPB, coded by the
-    ``ipb-longterm`` chain (h264._encode_ipb_longterm) whose four B
-    shapes exercise: the §8.2.4.2.3 initial lists with a pinned
-    picture (default-list B — the swap puts the LONG-TERM at
-    RefPicList1[0]); a TEMPORAL-direct B whose colocated picture
-    references the long-term (the §8.4.1.2.3 UNSCALED-copy branch);
-    and RPLM idc 2 (long_term_pic_num) on L0 and on L1.  The fixture
-    is a translating 32x32 "mover" (static until the pinned picture)
-    plus a 32-wide "flip" patch that exists only in the pinned
-    picture and P pictures — the long-term is its only predictor, so
-    colocated motion routes through it.
-
-    Oracle-pinned contract columns: ``n_b``/``b_plain``/
-    ``b_temporal``/``b_lt_l0``/``b_lt_l1``/``mmco46`` — parse-checked
-    header syntax really carries each shape; ``recon_exact=1`` —
-    decoder ≡ encoder closed loop; ``containers_agree=1``;
-    ``lt_colzero_matters=1`` — a decoder that lets the LONG-TERM
-    RefPicList1[0]'s motion feed colZeroFlag (§8.4.1.2.2 requires
-    short-term) reconstructs DIFFERENT pixels, asserted by actually
-    decoding with the rule flipped; ``lt_unscaled_matters=1`` — a
-    decoder that POC-scales temporal-direct motion through a
-    long-term RefPicList0 entry likewise differs.  The two *_matters
-    columns make the lane fail if the long-term branches ever stop
-    being load-bearing (e.g. an encoder regression stops coding
-    them).
-
-    Scale shape: identical to the other video lanes — Arrow-batched
-    mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < BLT_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-
-        import numpy as np
-
-        from reindexer_spark import h264 as H
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            _unescape_rbsp,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-
-        def flipped(fname, key, dec, payload):
-            """Decode with the named direct rule's long-term flags
-            hidden (the wrong-decoder simulation); returns frames or
-            None on quarantine."""
-            orig = getattr(H, fname)
-
-            def wrong(st, mbx, mby, ctx):
-                c2 = dict(ctx)
-                c2[key] = None
-                return orig(st, mbx, mby, c2)
-
-            setattr(H, fname, wrong)
-            try:
-                return dec(payload)[3]
-            except MediaFormatError:
-                return None
-            finally:
-                setattr(H, fname, orig)
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 80 + 16 * (dg[0] % 2)
-                h = 48
-                n_frames = 9 + dg[2] % 2
-                qp = 20 + dg[3] % 14
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                bg = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-                mover = rng.integers(0, 256, (32, 32, 3), dtype=np.uint8)
-                flip = rng.integers(0, 256, (24, 32, 3), dtype=np.uint8)
-                frames = []
-                for i in range(n_frames):
-                    f = bg.copy()
-                    mx = 4 + (0 if i <= 1 else 2 * (i - 1))
-                    my = 8 + (0 if i <= 1 else (i - 1))
-                    f[my : my + 32, mx : mx + 32] = mover
-                    if i >= 1:
-                        fx = (w - 32) - 3 * ((i - 1) // 2)
-                        f[24:48, fx : fx + 32] = flip
-                    frames.append(f.tobytes())
-                sps, pps, nals, recon = H.encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True,
-                    longterm=True,
-                )
-                # parse-check: each B shape really rides the headers
-                sd = H._parse_sps_slice_fields(sps)
-                pd_ = H.parse_pps(pps)
-                n_b = b_plain = b_temporal = b_lt_l0 = b_lt_l1 = 0
-                mmco46 = 0
-                for nal in nals[1:]:
-                    rr = H._BitReader(_unescape_rbsp(nal[1:]))
-                    stype, _q, _d, _a, _b2, info = H._parse_slice_header(
-                        rr, sd, pd_, idr=False, nal_ref_idc=nal[0] >> 5
-                    )
-                    if stype == "P":
-                        mm = info.get("mmco") or []
-                        if any(op[0] == 4 for op in mm) and any(
-                            op[0] == 6 for op in mm
-                        ):
-                            mmco46 += 1
-                        continue
-                    n_b += 1
-                    r0, r1 = info["rplm_l0"], info["rplm_l1"]
-                    if not info["direct_spatial"]:
-                        b_temporal += 1
-                    elif r0 and r0[0][0] == 2:
-                        b_lt_l0 += 1
-                    elif r1 and r1[0][0] == 2:
-                        b_lt_l1 += 1
-                    elif not r0 and not r1:
-                        b_plain += 1
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-longterm"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-longterm"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    _dw, _dh, _durs, out, sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    out, sync = [], []
-                    decodable = 0
-                only_first_sync = int(
-                    len(sync) == n_frames
-                    and bool(sync[0])
-                    and not any(sync[1:])
-                )
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    agree = int(
-                        other(mkv if container == "mp4" else mp4)[3]
-                        == out
-                        and len(out) == n_frames
-                    )
-                except MediaFormatError:
-                    agree = 0
-                recon_exact = int(out == recon)
-                cz = flipped("_b_direct_spatial", "l1_lts", dec, payload)
-                un = flipped("_b_direct_temporal", "l0_lts", dec, payload)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": w,
-                        "height": h,
-                        "n_frames": n_frames,
-                        "qp": qp,
-                        "n_b": n_b,
-                        "b_plain": min(b_plain, 1),
-                        "b_temporal": min(b_temporal, 1),
-                        "b_lt_l0": min(b_lt_l0, 1),
-                        "b_lt_l1": min(b_lt_l1, 1),
-                        "mmco46": mmco46,
-                        "lt_colzero_matters": int(cz != recon),
-                        "lt_unscaled_matters": int(un != recon),
-                        "decodable": decodable,
-                        "only_first_sync": only_first_sync,
-                        "containers_agree": agree,
-                        "recon_exact": recon_exact,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "n_b", "b_plain", "b_temporal",
-                    "b_lt_l0", "b_lt_l1", "mmco46",
-                    "lt_colzero_matters", "lt_unscaled_matters",
-                    "decodable", "only_first_sync",
-                    "containers_agree", "recon_exact",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(BLT_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, "
-            "height int, n_frames int, qp int, n_b int, b_plain int, "
-            "b_temporal int, b_lt_l0 int, b_lt_l1 int, mmco46 int, "
-            "lt_colzero_matters int, lt_unscaled_matters int, "
-            "decodable int, only_first_sync int, containers_agree "
-            "int, recon_exact int",
-        )
-    )
-
-
-WPMS_DOCS = 10  # bounded: three encode chains per doc
-
-
-@query(
-    "video_wp_multislice",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {WPMS_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (16 + s0 % 13) AS INT) AS width,
-      CAST(2 * (16 + s1 % 9) AS INT) AS height,
-      CAST(4 + s2 % 3 AS INT) AS n_frames,
+    SELECT CAST(media_id AS BIGINT) AS media_id, gop,
+      CAST(2 * (16 + s0 % 9) AS INT) AS width,
+      CAST(2 * (16 + s1 % 7) AS INT) AS height,
+      CAST(n_frames AS INT) AS n_frames,
       CAST(20 + s3 % 18 AS INT) AS qp,
+      CAST(CASE WHEN gop IN ({_MATRIX_ALL_IDR_SQL}) THEN n_frames ELSE 1 END
+           AS INT) AS n_sync,
       CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS wp_smaller,
-      CAST(1 AS INT) AS wp_recon_exact,
-      CAST(1 AS INT) AS ms_recon_exact,
-      CAST(1 AS INT) AS ms_differs,
-      CAST(1 AS INT) AS containers_agree
-    FROM s
-    """,
-)
-def video_wp_multislice(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WEIGHTED-PREDICTION and MULTI-SLICE H.264 decode (round 13):
-    digest-seeded FADE clips — a global luminance ramp plain motion
-    compensation cannot follow — coded three ways from one fixture:
-    an explicit-weighted IPPP chain (§7.3.3.2 pred_weight_table,
-    §8.4.2.3.2 weighted samples), the same frames as TWO-SLICE
-    pictures (§6.4.9 slice-bounded availability), and the plain
-    single-slice chain as the comparison baseline.
-
-    Oracle-pinned contract columns (re-derived from sha256(text)):
-    ``qp`` — the digest-derived QP really drives all three chains;
-    ``wp_smaller=1`` — the weighted chain codes SMALLER than the
-    plain chain on a fade (structural: the per-reference gain/offset
-    model collapses the ramp residual); ``wp_recon_exact=1`` — the
-    weighted chain decodes byte-exact through its container
-    (mp4 or mkv by parity, gop="ippp-wp"); ``ms_recon_exact=1`` —
-    the two-slice chain decodes byte-exact via decode_picture
-    (annex-b walk); ``ms_differs=1`` — the two-slice reconstruction
-    DIFFERS from the single-slice one (slice borders really cut
-    prediction availability; if this ever fails, availability leaked
-    across the border); ``containers_agree=1`` — the weighted chain
-    through the OTHER container decodes identically.
-
-    Scale shape: identical to the other video lanes — Arrow-batched
-    mapInPandas over a bounded fixture set, payloads never shuffle."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < WPMS_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-
-        import numpy as np
-
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-        from reindexer_spark.h264 import (
-            decode_h264_stream,
-            encode_h264_ippp,
-            encode_h264_multislice,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 13)
-                h = 2 * (16 + dg[1] % 9)
-                n_frames = 4 + dg[2] % 3
-                qp = 20 + dg[3] % 18
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(30, 226, (h, w, 3)).astype(
-                    np.float64
-                )
-                frames = [
-                    np.clip(base * (1.0 - 0.11 * i) + 5 * i, 0, 255)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for i in range(n_frames)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                # --- weighted chain through its container
-                _s, _p, wp_nals, wp_rec = encode_h264_ippp(
-                    w, h, frames, qp=qp, return_recon=True,
-                    weighted=True,
-                )
-                _s, _p, pl_nals = encode_h264_ippp(
-                    w, h, frames, qp=qp
-                )
-                wp_smaller = int(
-                    sum(len(x) for x in wp_nals)
-                    < sum(len(x) for x in pl_nals)
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp-wp"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp-wp"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                wp_recon_exact = int(out == wp_rec)
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2 and len(out) == n_frames)
-                except MediaFormatError:
-                    agree = 0
-                # --- two-slice chain through the annex-b walk
-                msps, mpps, pics, ms_rec = encode_h264_multislice(
-                    w, h, frames, qp=qp, n_slices=2, return_recon=True
-                )
-                flat = [x for p in pics for x in p]
-                try:
-                    _mw, _mh, ms_out = decode_h264_stream(
-                        msps, mpps, flat
-                    )
-                    ms_recon_exact = int(ms_out == ms_rec)
-                except MediaFormatError:
-                    ms_recon_exact = 0
-                _s, _p, _n, ss_rec = encode_h264_ippp(
-                    w, h, frames, qp=qp, return_recon=True
-                )
-                ms_differs = int(ms_rec != ss_rec)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "qp": qp,
-                        "decodable": decodable,
-                        "wp_smaller": wp_smaller,
-                        "wp_recon_exact": wp_recon_exact,
-                        "ms_recon_exact": ms_recon_exact,
-                        "ms_differs": ms_differs,
-                        "containers_agree": agree,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "decodable", "wp_smaller",
-                    "wp_recon_exact", "ms_recon_exact", "ms_differs",
-                    "containers_agree",
-                ],
-            )
-
-    return (
-        docs.select("doc_id", "text")
-        .repartition(WPMS_DOCS)
-        .mapInPandas(
-            build_and_decode,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, qp int, decodable int, wp_smaller int, "
-            "wp_recon_exact int, ms_recon_exact int, ms_differs int, "
-            "containers_agree int",
-        )
-    )
-
-
-BWP_DOCS = 10  # bounded: two IPB encode chains per doc
-
-
-@query(
-    "video_bweighted",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {BWP_DOCS}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (16 + s0 % 13) AS INT) AS width,
-      CAST(2 * (16 + s1 % 9) AS INT) AS height,
-      CAST(5 + s2 % 2 AS INT) AS n_frames,
-      CAST(20 + s3 % 16 AS INT) AS qp,
-      CAST((5 + s2 % 2 - 1) // 2 AS INT) AS n_b,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS wpb_nonidentity,
-      CAST(1 AS INT) AS bwp_smaller,
       CAST(1 AS INT) AS recon_exact,
       CAST(1 AS INT) AS containers_agree
     FROM s
     """,
 )
-def video_bweighted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXPLICIT WEIGHTED BI-PREDICTION decode (round 15 — the last
-    table-free B-slice quarantine closed): digest-seeded FADE clips
-    coded as low-delay IPB with weighted_bipred_idc 1 — every B
-    slice carries a TWO-LIST §7.3.3.2 pred_weight_table and its
-    prediction runs the §8.4.2.3.2 explicit formulas (unidirectional
-    and the bi combine); the P pictures stay unweighted, isolating
-    the B machinery.
+def video_decode_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real H.264 decode of every GOP shape the encoder codes: one row
+    per ``h264.GOPS`` chain (document ``doc_id`` takes the
+    ``doc_id``-th name), a digest-seeded moving, fading clip coded by
+    that chain, muxed into mp4 and mkv and written as an Annex-B
+    stream, and decoded back through all three walkers.
 
-    Oracle-pinned contract columns (re-derived from sha256(text)):
-    ``n_b`` — the non-reference NAL count matches the IPB layout;
-    ``wpb_nonidentity=1`` — the first B header parses back
-    NON-identity fade weights on BOTH lists (the encoder's fade
-    model really engaged); ``bwp_smaller=1`` — the weighted chain
-    codes smaller than the plain IPB chain while its P NALs are
-    byte-IDENTICAL to the plain chain's (only B slices changed);
-    ``recon_exact=1`` — container decode ≡ the encoder's closed-loop
-    reconstruction, byte for byte (if the decoder ignored or
-    mis-applied the weights this fails, because the encoder predicted
-    with them); ``containers_agree=1`` — the same GOP through the
-    other container decodes identically.
+    Oracle-pinned columns (re-derived from ``doc_id`` and
+    sha256(text)): the GOP name, decoded dims (non-multiples of 16:
+    SPS cropping), frame count, qp; ``n_sync`` — the mp4 sync-table
+    count, every frame for the all-IDR chain and only the first
+    otherwise (sync flags follow the coded NAL types);
+    ``decodable=1`` — all three walkers decode; ``recon_exact=1`` —
+    the mp4 decode equals the encoder's closed-loop reconstruction
+    byte for byte; ``containers_agree=1`` — the mkv and Annex-B
+    decodes equal the mp4 decode, and the mkv keyframe flags equal
+    the mp4 sync table.  What each chain's coding tools must engage
+    (motion, references, weights, marking, slices) is pinned by the
+    tests/test_h264_*.py suites.
 
-    Scale shape: identical to the other video lanes — Arrow-batched
-    mapInPandas over a bounded fixture set, payloads never shuffle."""
+    Scale shape: Arrow-batched mapInPandas over a bounded fixture
+    set, one task per row; payloads never shuffle."""
     import pandas as pd
 
+    names = list(GOPS)
     docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < BWP_DOCS
+        F.col("doc_id") < len(names)
     )
 
     def build_and_decode(batches):
-        import hashlib
-
-        import numpy as np
-
         from reindexer_spark.codecs import (
             MediaFormatError,
             decode_mkv,
@@ -4355,133 +2996,74 @@ def video_bweighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             encode_mp4_coded,
         )
         from reindexer_spark.h264 import (
-            _BitReader,
-            _parse_slice_header,
-            _parse_sps_slice_fields,
-            _unescape_rbsp,
-            encode_h264_ipb,
-            parse_pps,
+            decode_h264_annexb_stream,
+            encode_gop,
+            encode_h264_annexb,
         )
 
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
                 mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 13)
-                h = 2 * (16 + dg[1] % 9)
-                n_frames = 5 + dg[2] % 2
-                qp = 20 + dg[3] % 16
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(30, 226, (h, w, 3)).astype(
-                    np.float64
-                )
-                frames = [
-                    np.clip(base * (1.0 - 0.11 * i) + 5 * i, 0, 255)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for i in range(n_frames)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                sps, pps, wn, wrec = encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True,
-                    weighted=True,
-                )
-                _s, _p, pn = encode_h264_ipb(w, h, frames, qp=qp)
-                n_b = sum(1 for n in wn if (n[0] >> 5) == 0)
-                p_identical = all(
-                    a == b
-                    for a, b in zip(wn, pn)
-                    if (a[0] >> 5) != 0
-                )
-                bwp_smaller = int(
-                    p_identical
-                    and sum(len(x) for x in wn)
-                    < sum(len(x) for x in pn)
-                )
-                # parse the first B header back: non-identity weights
-                wpb_ni = 0
+                gop = names[mid]
+                w, h, qp, frames = _matrix_clip(r.text, _matrix_frames(gop))
+                recon = encode_gop(w, h, frames, qp, gop)[3]
                 try:
-                    b_nal = next(n for n in wn if (n[0] >> 5) == 0)
-                    rr = _BitReader(_unescape_rbsp(b_nal[1:]))
-                    _st, _q, _d, _a, _b2, info = _parse_slice_header(
-                        rr, _parse_sps_slice_fields(sps),
-                        parse_pps(pps), idr=False, nal_ref_idc=0,
-                    )
-                    wpb = info.get("wpb") or {}
-                    ident = {"lw": 32, "lo": 0}
-                    wpb_ni = int(
-                        all(
-                            e is not None
-                            and (e["lw"], e["lo"])
-                            != (ident["lw"], ident["lo"])
-                            for e in (wpb.get("w0", [None])[0],
-                                      wpb.get("w1", [None])[0])
+                    dw, dh, _d, out, sync = decode_mp4(
+                        encode_mp4_coded(
+                            w, h, intra_frames=frames, qp=qp, gop=gop
                         )
                     )
-                except MediaFormatError:
-                    wpb_ni = 0
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-wp"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-wp"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
+                    _w, _h, _d, out_mkv, sync_mkv = decode_mkv(
+                        encode_mkv_coded(
+                            w, h, intra_frames=frames, qp=qp, gop=gop
+                        )
+                    )
+                    out_es = decode_h264_annexb_stream(
+                        encode_h264_annexb(w, h, frames, qp, gop)
+                    )[2]
                     decodable = 1
                 except MediaFormatError:
                     dw = dh = 0
-                    out = []
+                    out = out_mkv = out_es = sync = sync_mkv = []
                     decodable = 0
-                recon_exact = int(out == wrec and len(out) == n_frames)
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2)
-                except MediaFormatError:
-                    agree = 0
                 rows.append(
                     {
                         "media_id": mid,
-                        "container": container,
+                        "gop": gop,
                         "width": dw,
                         "height": dh,
                         "n_frames": len(out),
                         "qp": qp,
-                        "n_b": n_b,
+                        "n_sync": sum(map(bool, sync)),
                         "decodable": decodable,
-                        "wpb_nonidentity": wpb_ni,
-                        "bwp_smaller": bwp_smaller,
-                        "recon_exact": recon_exact,
-                        "containers_agree": agree,
+                        "recon_exact": int(out == recon),
+                        "containers_agree": int(
+                            decodable == 1
+                            and out_mkv == out
+                            and out_es == out
+                            and list(map(bool, sync_mkv))
+                            == list(map(bool, sync))
+                        ),
                     }
                 )
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "n_b", "decodable",
-                    "wpb_nonidentity", "bwp_smaller", "recon_exact",
+                    "media_id", "gop", "width", "height", "n_frames",
+                    "qp", "n_sync", "decodable", "recon_exact",
                     "containers_agree",
                 ],
             )
 
     return (
         docs.select("doc_id", "text")
-        .repartition(BWP_DOCS)
+        .repartition(len(names))
         .mapInPandas(
             build_and_decode,
-            "media_id bigint, container string, width int, height int, "
-            "n_frames int, qp int, n_b int, decodable int, "
-            "wpb_nonidentity int, bwp_smaller int, recon_exact int, "
-            "containers_agree int",
+            "media_id bigint, gop string, width int, height int, "
+            "n_frames int, qp int, n_sync int, decodable int, "
+            "recon_exact int, containers_agree int",
         )
     )
 
@@ -4533,8 +3115,8 @@ def webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     equals the digest arithmetic; ``rgb_md5`` — md5 of the DECODED
     pixels' hex equals md5 of the oracle's independently-built chain
     (VP8L is lossless, so decode must return the source bytes);
-    ``roundtrip_exact=1``; ``lossy_quarantined=1`` — a VP8-lossy
-    payload for the same doc still refuses to decode (the probe-only
+    ``roundtrip_exact=1``; ``lossy_quarantined=1`` — an 8x8 VP8-lossy
+    payload still refuses to decode (the probe-only
     quarantine the VP8L path must NOT loosen).
 
     Scale shape: mapInPandas, payloads never shuffle — same as every
@@ -4555,6 +3137,12 @@ def webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         from reindexer_spark.vp8l import encode_webp_lossless
 
+        # the lossy quarantine does not depend on the row: check it once
+        try:
+            _decode_image("webp", encode_webp_fixture(8, 8, "vp8"))
+            lossy_q = 0
+        except MediaFormatError:
+            lossy_q = 1
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
@@ -4572,13 +3160,6 @@ def webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
                     w, h, rgb, subtract_green=bool(mid % 2)
                 )
                 dw, dh, out = _decode_image("webp", payload)
-                try:
-                    _decode_image(
-                        "webp", encode_webp_fixture(8, 8, "vp8")
-                    )
-                    lossy_q = 0
-                except MediaFormatError:
-                    lossy_q = 1
                 rows.append(
                     {
                         "media_id": mid,
@@ -6202,203 +4783,6 @@ def image_tiff_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "video_bimplicit",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {14}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (16 + s0 % 13) AS INT) AS width,
-      CAST(2 * (16 + s1 % 9) AS INT) AS height,
-      CAST(5 + s2 % 2 AS INT) AS n_frames,
-      CAST(20 + s3 % 16 AS INT) AS qp,
-      CAST((5 + s2 % 2 - 1) // 2 AS INT) AS n_b,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS headerless_weights,
-      CAST(1 AS INT) AS implicit_smaller,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS containers_agree
-    FROM s
-    """,
-)
-def video_bimplicit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMPLICIT WEIGHTED BI-PREDICTION decode (round 16 — VERDICT r15
-    ask #3, the weighting two-pass encoders actually default to for
-    fades): digest-seeded FADE clips coded as low-delay IPB with
-    weighted_bipred_idc 2 — B slice headers carry NO
-    pred_weight_table; both the encoder's closed loop and the decoder
-    derive w1 = DistScaleFactor >> 2, w0 = 64 - w1 from pure POC
-    arithmetic (§8.4.2.3.1 — the same tb/td/tx machinery temporal
-    direct runs), falling back to 32/32 on td == 0 / long-term /
-    out-of-range.
-
-    Oracle-pinned contract columns (re-derived from sha256(text)):
-    ``n_b`` — the non-reference NAL count matches the IPB layout;
-    ``headerless_weights=1`` — the first B header parses back the
-    implicit marker and NO table entries (the weights exist only as
-    POC arithmetic); ``implicit_smaller=1`` — the implicit chain
-    codes smaller than the plain IPB chain on a fade while its P NALs
-    are byte-IDENTICAL to the plain chain's; ``recon_exact=1`` —
-    container decode ≡ the encoder's closed-loop reconstruction (a
-    decoder that ignored the weights fails byte-for-byte);
-    ``containers_agree=1`` — the same GOP through the other container
-    decodes identically.
-
-    Reference: ITU-T H.264 §8.4.2.3.1; reference repo delegates video
-    out entirely (SURVEY §0 — ingest.go:17-38).
-
-    Scale shape: Arrow-batched mapInPandas over a bounded fixture
-    set, payloads never shuffle — same as every video lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 14
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-
-        import numpy as np
-
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-        from reindexer_spark.h264 import (
-            _BitReader,
-            _parse_slice_header,
-            _parse_sps_slice_fields,
-            _unescape_rbsp,
-            encode_h264_ipb,
-            parse_pps,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 13)
-                h = 2 * (16 + dg[1] % 9)
-                n_frames = 5 + dg[2] % 2
-                qp = 20 + dg[3] % 16
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(30, 226, (h, w, 3)).astype(
-                    np.float64
-                )
-                frames = [
-                    np.clip(base * (1.0 - 0.16 * i) + 7 * i, 0, 255)
-                    .astype(np.uint8)
-                    .tobytes()
-                    for i in range(n_frames)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                sps, pps, wn, wrec = encode_h264_ipb(
-                    w, h, frames, qp=qp, return_recon=True,
-                    weighted="implicit",
-                )
-                _s, _p, pn = encode_h264_ipb(w, h, frames, qp=qp)
-                n_b = sum(1 for n in wn if (n[0] >> 5) == 0)
-                p_identical = all(
-                    a == b
-                    for a, b in zip(wn, pn)
-                    if (a[0] >> 5) != 0
-                )
-                implicit_smaller = int(
-                    p_identical
-                    and sum(len(x) for x in wn)
-                    < sum(len(x) for x in pn)
-                )
-                # parse the first B header back: the implicit marker,
-                # idc 2 in the PPS, and NO table entries
-                headerless = 0
-                try:
-                    b_nal = next(n for n in wn if (n[0] >> 5) == 0)
-                    rr = _BitReader(_unescape_rbsp(b_nal[1:]))
-                    _st, _q, _d, _a, _b2, info = _parse_slice_header(
-                        rr, _parse_sps_slice_fields(sps),
-                        parse_pps(pps), idr=False, nal_ref_idc=0,
-                    )
-                    headerless = int(
-                        parse_pps(pps)["weighted_bipred"] == 2
-                        and info.get("wpb") == {"implicit": True}
-                    )
-                except MediaFormatError:
-                    headerless = 0
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-wpi"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ipb-wpi"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                recon_exact = int(out == wrec and len(out) == n_frames)
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2)
-                except MediaFormatError:
-                    agree = 0
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "qp": qp,
-                        "n_b": n_b,
-                        "decodable": decodable,
-                        "headerless_weights": headerless,
-                        "implicit_smaller": implicit_smaller,
-                        "recon_exact": recon_exact,
-                        "containers_agree": agree,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "n_b", "decodable",
-                    "headerless_weights", "implicit_smaller",
-                    "recon_exact", "containers_agree",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(14).mapInPandas(
-        build_and_decode,
-        "media_id bigint, container string, width int, height int, "
-        "n_frames int, qp int, n_b int, decodable int, "
-        "headerless_weights int, implicit_smaller int, recon_exact int, "
-        "containers_agree int",
-    )
-
-
 WEBP_ANIM_DOCS = 16
 
 
@@ -7531,188 +5915,4 @@ def image_tiff_planar(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bits int, compression string, predictor int, n_strips int, "
         "rgb_md5 string, roundtrip_exact int, probe_agrees int, "
         "patched_interleaved_quarantined int",
-    )
-
-
-@query(
-    "video_deepref",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {10}
-    ), s AS (
-      SELECT media_id,
-             CAST(('0x' || substr(dg, 1, 2)) AS INT) AS s0,
-             CAST(('0x' || substr(dg, 3, 2)) AS INT) AS s1,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2
-      FROM base
-    )
-    SELECT media_id,
-      CASE WHEN media_id % 2 = 0 THEN 'mp4' ELSE 'mkv' END AS container,
-      CAST(2 * (16 + s0 % 9) AS INT) AS width,
-      CAST(2 * (16 + s1 % 7) AS INT) AS height,
-      CAST(12 AS INT) AS n_frames,
-      CAST(24 + s2 % 8 AS INT) AS qp,
-      CAST(1 AS INT) AS decodable,
-      CAST(1 AS INT) AS recon_exact,
-      CAST(1 AS INT) AS containers_agree,
-      CAST(1 AS INT) AS over_cap_quarantined
-    FROM s
-    """,
-)
-def video_deepref(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEEP-DPB multi-reference decode (round 16 — the 8-reference
-    subset cap widened to the spec's 16-frame DPB ceiling): 12-frame
-    IPPP chains coded against the 10 most recent references
-    (gop="ippp-deepref"), decoded through both containers.
-
-    Oracle-pinned: geometry/qp digest arithmetic; ``recon_exact=1`` —
-    container decode ≡ the encoder's closed loop byte-for-byte
-    (per-partition ref_idx te(v) against a 10-deep sliding window);
-    ``containers_agree=1``; ``over_cap_quarantined=1`` — a slice
-    header demanding num_ref_idx_active 17 refuses by name while 16
-    parses (pinned via the header parser on a synthetic header).
-
-    Scale shape: Arrow-batched mapInPandas over a bounded fixture
-    set, payloads never shuffle — same as every video lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < 10
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-
-        import numpy as np
-
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            decode_mkv,
-            decode_mp4,
-            encode_mkv_coded,
-            encode_mp4_coded,
-        )
-        from reindexer_spark.h264 import encode_h264_ippp
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).digest()
-                w = 2 * (16 + dg[0] % 9)
-                h = 2 * (16 + dg[1] % 7)
-                qp = 24 + dg[2] % 8
-                rng = np.random.default_rng(
-                    int.from_bytes(dg[:8], "big")
-                )
-                base = rng.integers(0, 256, (h, w, 3))
-                frames = [
-                    np.clip(
-                        base + rng.integers(-18, 19, (h, w, 3)), 0, 255
-                    )
-                    .astype(np.uint8)
-                    .tobytes()
-                    for _ in range(12)
-                ]
-                container = "mp4" if mid % 2 == 0 else "mkv"
-                _s, _p, _n, wrec = encode_h264_ippp(
-                    w, h, frames, qp=qp, n_refs=10, return_recon=True
-                )
-                mp4 = encode_mp4_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp-deepref"
-                )
-                mkv = encode_mkv_coded(
-                    w, h, intra_frames=frames, qp=qp, gop="ippp-deepref"
-                )
-                payload = mp4 if container == "mp4" else mkv
-                dec = decode_mp4 if container == "mp4" else decode_mkv
-                try:
-                    dw, dh, _durs, out, _sync = dec(payload)
-                    decodable = 1
-                except MediaFormatError:
-                    dw = dh = 0
-                    out = []
-                    decodable = 0
-                recon_exact = int(out == wrec and len(out) == 12)
-                other = decode_mkv if container == "mp4" else decode_mp4
-                try:
-                    _w2, _h2, _d2, out2, _s2 = other(
-                        mkv if container == "mp4" else mp4
-                    )
-                    agree = int(out == out2)
-                except MediaFormatError:
-                    agree = 0
-                # 16 parses, 17 refuses — pinned on a synthetic header
-                from reindexer_spark.h264 import (
-                    _BitReader,
-                    _parse_slice_header,
-                    _parse_sps_slice_fields,
-                    parse_pps,
-                    write_h264_sps,
-                    write_pps,
-                )
-                from reindexer_spark.h264 import _BitWriter as _BW
-
-                spsd = _parse_sps_slice_fields(
-                    write_h264_sps(w, h, 66, 30, num_ref_frames=16)
-                )
-                ppsd = parse_pps(write_pps(26))
-
-                def p_hdr(nact: int) -> None:
-                    bw = _BW()
-                    bw.ue(0)  # first_mb
-                    bw.ue(0)  # slice_type P
-                    bw.ue(0)  # pps_id
-                    bw.u(0, 4)  # frame_num
-                    bw.u(0, 4)  # poc_lsb
-                    bw.u(1, 1)  # override
-                    bw.ue(nact - 1)
-                    bw.u(0, 1)  # no rplm
-                    bw.se(0)  # slice_qp_delta
-                    bw.ue(1)  # deblock idc 1: filter off, no offsets
-                    bw.u(0, 8)  # pad
-                    _parse_slice_header(
-                        _BitReader(bw.finish()), spsd, ppsd,
-                        idr=False, nal_ref_idc=0,
-                    )
-
-                try:
-                    p_hdr(16)
-                    ok16 = 1
-                except MediaFormatError:
-                    ok16 = 0
-                try:
-                    p_hdr(17)
-                    over_q = 0
-                except MediaFormatError:
-                    over_q = ok16
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "container": container,
-                        "width": dw,
-                        "height": dh,
-                        "n_frames": len(out),
-                        "qp": qp,
-                        "decodable": decodable,
-                        "recon_exact": recon_exact,
-                        "containers_agree": agree,
-                        "over_cap_quarantined": over_q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "container", "width", "height",
-                    "n_frames", "qp", "decodable", "recon_exact",
-                    "containers_agree", "over_cap_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(10).mapInPandas(
-        build_and_decode,
-        "media_id bigint, container string, width int, height int, "
-        "n_frames int, qp int, decodable int, recon_exact int, "
-        "containers_agree int, over_cap_quarantined int",
     )

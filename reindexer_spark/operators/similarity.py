@@ -1088,12 +1088,11 @@ def knn_ivf_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
             [by_idx[i + 1]["mx"] for i in range(EMBED_DIM)],
         )
 
+    inherit = inheritable_thread_target(spark)  # job group and tags
     with ThreadPoolExecutor(max_workers=2) as pool:
-        stats_f = pool.submit(inheritable_thread_target(_stats))
+        stats_f = pool.submit(inherit(_stats))
         seeds_f = pool.submit(
-            inheritable_thread_target(
-                lambda: _collect_vecs(e, max(ADC_COARSE_K, ADC_NQ))
-            )
+            inherit(lambda: _collect_vecs(e, max(ADC_COARSE_K, ADC_NQ)))
         )
         mn, mx = stats_f.result()
         seeds = seeds_f.result()

@@ -4,6 +4,8 @@ oracle parity the driver gate already checks)."""
 
 from __future__ import annotations
 
+import pytest
+
 from reindexer_spark import get_query
 from reindexer_spark.operators.mlprep import SEMDEDUP_TAU
 from reindexer_spark.operators.similarity import ADC_NQ, ADC_TOPK
@@ -28,7 +30,11 @@ def test_semdedup_keep_rule_invariants(spark, sf_dir):
     assert 0 < removed < len(rows) // 2
 
 
+@pytest.mark.filterwarnings("error::UserWarning")
 def test_ivf_adc_recall_contract(spark, sf_dir):
+    # the driver-side threads carry the session: pyspark warns (here:
+    # fails) when a thread target is wrapped without it, and such
+    # threads' jobs lose the query's tags
     rows = get_query("knn_ivf_adc").fn(spark, sf_dir).collect()
     per_q: dict[int, list] = {}
     for r in rows:

@@ -112,13 +112,15 @@ def test_ipb_wpi_recon_exact_and_no_table_bits():
 def test_implicit_weighting_is_load_bearing_and_smaller_on_fades():
     w, h = 48, 32
     frames = _fade_frames(w, h, 6)
-    _, _, _, rec_imp = encode_h264_ipb(
+    _, _, n_imp, rec_imp = encode_h264_ipb(
         w, h, frames, 26, weighted="implicit", return_recon=True
     )
-    _, _, _, rec_def = encode_h264_ipb(
+    _, _, n_def, rec_def = encode_h264_ipb(
         w, h, frames, 26, weighted=False, return_recon=True
     )
     assert any(a != b for a, b in zip(rec_imp, rec_def))
+    # only B NALs differ between the chains (P slices carry no weights)
+    assert [n for n in n_imp if n[0] >> 5] == [n for n in n_def if n[0] >> 5]
     s_imp = encode_h264_annexb(w, h, frames, 26, gop="ipb-wpi")
     s_def = encode_h264_annexb(w, h, frames, 26, gop="ipb")
     assert len(s_imp) < len(s_def)

@@ -79,6 +79,12 @@ def test_bi_prediction_beats_p_only_rate():
     assert sum(len(n) for n in ipb) < sum(len(n) for n in ippp), (
         sum(len(n) for n in ipb), sum(len(n) for n in ippp)
     )
+    # and the B pictures cost less than the same frames coded intra
+    _, _, intra = H.encode_h264_intra(w, h, frames, qp=26)
+    b_idx = [i for i, n in enumerate(ipb) if n[0] >> 5 == 0]
+    assert b_idx and sum(len(ipb[i]) for i in b_idx) < sum(
+        len(intra[i]) for i in b_idx
+    )
 
 
 def test_b_mb_types_exercised():

@@ -72,6 +72,7 @@ def test_poc_type1_chain_closed_loop():
     sps, pps, nals, recons = encode_h264_ippp(
         64, 48, frames, 26, return_recon=True, poc_type=1
     )
+    assert _parse_sps_slice_fields(sps)["poc_type"] == 1
     assert decode_h264_stream(sps, pps, nals)[2] == recons
 
 
@@ -635,3 +636,30 @@ def test_deep_dpb_12_reference_chain_recon_exact():
     dw, dh, out = decode_h264_annexb_stream(stream)
     assert (dw, dh) == (w, h)
     assert [bytes(f) for f in out] == [bytes(f) for f in recons]
+
+    # the cap: a P header with num_ref_idx_active 16 parses, 17 refuses
+    spsd = _parse_sps_slice_fields(
+        write_h264_sps(w, h, 66, 30, num_ref_frames=16)
+    )
+    ppsd = parse_pps(write_pps(DEFAULT_QP))
+
+    def p_header(n_active: int) -> None:
+        bw = _BitWriter()
+        bw.ue(0)  # first_mb_in_slice
+        bw.ue(0)  # slice_type P
+        bw.ue(0)  # pic_parameter_set_id
+        bw.u(0, 4)  # frame_num
+        bw.u(0, 4)  # pic_order_cnt_lsb
+        bw.u(1, 1)  # num_ref_idx_active_override_flag
+        bw.ue(n_active - 1)
+        bw.u(0, 1)  # no reference-list modification
+        bw.se(0)  # slice_qp_delta
+        bw.ue(1)  # disable_deblocking_filter_idc 1: no offsets follow
+        bw.u(0, 8)  # padding
+        _parse_slice_header(
+            _BitReader(bw.finish()), spsd, ppsd, idr=False, nal_ref_idc=0
+        )
+
+    p_header(16)
+    with pytest.raises(MediaFormatError):
+        p_header(17)

@@ -293,22 +293,32 @@ def test_temporal_b_frames_removable():
     assert dec == [recons[0], recons[1], recons[3], recons[4]]
 
 
-@pytest.mark.parametrize("gop", ["ipb-temporal", "ippp-multiref"])
+@pytest.mark.parametrize("gop", list(H.GOPS))
 def test_new_gops_through_containers(gop):
+    """Every GOPS chain decodes to its closed-loop reconstruction
+    through mp4, mkv and Annex-B, and the container sync flags follow
+    the coded NAL types: every sample for the all-IDR chain, only the
+    first otherwise."""
     w, h = 48, 32
     frames = _moving_frames(w, h, 5)
-    if gop == "ipb-temporal":
-        _, _, _, recons = H.encode_h264_ipb(
-            w, h, frames, qp=26, return_recon=True, direct="temporal"
-        )
-    else:
-        _, _, _, recons = H.encode_h264_ippp(
-            w, h, frames, qp=26, return_recon=True, n_refs=3
-        )
+    recons = H.encode_gop(w, h, frames, 26, gop)[3]
     mp4 = encode_mp4_coded(w, h, intra_frames=frames, qp=26, gop=gop)
     mkv = encode_mkv_coded(w, h, intra_frames=frames, qp=26, gop=gop)
     for payload, dec in ((mp4, decode_mp4), (mkv, decode_mkv)):
         dw, dh, _durs, out, sync = dec(payload)
         assert (dw, dh) == (w, h)
         assert out == recons
-        assert sync[0] and not any(sync[1:])
+        if gop == "all-intra":
+            assert all(sync)
+        else:
+            assert sync[0] and not any(sync[1:])
+    es = H.encode_h264_annexb(w, h, frames, 26, gop=gop)
+    assert H.decode_h264_annexb_stream(es) == (w, h, recons)
+
+
+def test_unknown_gop_raises():
+    frames = _moving_frames(16, 16, 2)
+    with pytest.raises(ValueError):
+        H.encode_h264_annexb(16, 16, frames, gop="ippp-ms3")
+    with pytest.raises(ValueError):
+        encode_mp4_coded(16, 16, intra_frames=frames, gop="ippp-ms3")
