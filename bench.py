@@ -64,7 +64,7 @@ HEADLINE = [
 # 31.15 s (stream 2.22 s) vs stream MID-LIST total 31.48 s (stream
 # 2.36 s), post-stream queries flat in both runs.  The round-1 "post-
 # stream stall" was external VM noise; teardown hard-joins the stream
-# thread (runner.run_stream_to_memory).  SPARK_GRAFT_STREAM_POS=mid
+# thread (runner.drive_stream).  SPARK_GRAFT_STREAM_POS=mid
 # reruns the proof: same 27 queries, stream moved to the middle.
 if os.environ.get("SPARK_GRAFT_STREAM_POS") == "mid":
     HEADLINE.remove("stream_tumbling_live")

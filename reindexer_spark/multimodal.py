@@ -30,36 +30,10 @@ At 100 TB the shape is the important part:
 from __future__ import annotations
 
 from collections.abc import Iterator
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-@contextmanager
-def arrow_batch_size(spark, n: int):
-    """Scope ``spark.sql.execution.arrow.maxRecordsPerBatch`` to a block.
-
-    The conf is read at ACTION time, so the decode/resize/sample builders
-    below cannot set it themselves (they return lazy DataFrames — setting
-    it there would leak the value onto the shared session for every later
-    query, and restoring it immediately would mean it never applies).
-    Callers that materialize with a payload-appropriate batch size wrap
-    the action:
-
-        with arrow_batch_size(spark, 64):
-            frames.write.parquet(...)
-    """
-    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, meta map<string,string>"
@@ -164,8 +138,9 @@ def extract_media_features(media: DataFrame, codec=None) -> DataFrame:
     null-feature quarantine row — byte length and checksum are kept so
     the bad payload stays identifiable downstream — rather than failing
     the whole Spark stage (the A9 error-channel contract).
-    Heavy payloads: wrap the consuming ACTION in ``arrow_batch_size`` to
-    cap rows per Arrow batch (session conf, read at execution time).
+    Heavy payloads: cap rows per Arrow batch with the session conf
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``, which is read when
+    the consuming action runs, not when this plan is built.
     """
     codec = codec or FakeCodec()
 
@@ -362,8 +337,8 @@ def resize_thumbnails(
     resize leg of the media pipeline).  Output rows are bounded by
     max_dim², so the stage SHRINKS data — safe to run before a shuffle;
     null payloads pass through as null thumbnails (quarantine-friendly,
-    the A9 error-channel analogue).  Batch-size control: see
-    ``arrow_batch_size``."""
+    the A9 error-channel analogue).  Batch size: the session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` at action time."""
     resizer = resizer or FakeResizer()
 
     def run(batches: Iterator) -> Iterator:
@@ -409,7 +384,8 @@ def sample_video_frames(
     frames-per-row varies with duration, which no fixed-arity UDF can
     express).  Frame count is capped so the output stays bounded per
     input row; rows sort deterministically by (media_id, frame_idx).
-    Batch-size control: see ``arrow_batch_size``."""
+    Batch size: the session's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` at action time."""
     sampler = sampler or FakeFrameSampler()
 
     def run(batches: Iterator) -> Iterator:

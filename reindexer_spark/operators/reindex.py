@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from reindexer_spark.catalog import load_table
+from reindexer_spark.docpipe.resume import apply_resume
 from reindexer_spark.registry import query
 
 # The testdata `documents` table has no `deleted` column (all rows live)
@@ -48,8 +49,7 @@ def reindex_scan_plan(
     out = docs
     if deleted_col is not None:
         out = out.filter(~F.col(deleted_col))
-    if start_id is not None:
-        out = out.filter(F.col(id_col) > F.lit(start_id))
+    out = apply_resume(out, id_col, start_id)
     if ordered:
         out = out.orderBy(id_col)
     return out

@@ -43,7 +43,14 @@ _REGISTRY: dict[str, Query] = {}
 
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     """Register ``fn`` as the named query; ``oracle`` is the DuckDB-equivalent
-    ANSI SQL (omit only for genuinely non-SQL-expressible operators)."""
+    ANSI SQL (omit only for genuinely non-SQL-expressible operators).
+
+    Construction contract: calling the query returns a DataFrame, but
+    building it may already run Spark jobs — ``run_stream_to_memory``
+    runs its stream to completion, some operators collect a driver-side
+    model, and ``banded_pairs`` runs its ``MAX(_bsz)`` probe.  A query
+    may also persist intermediates through ``cache.track``; those live
+    until the next query starts (``release_all`` below)."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in _REGISTRY:

@@ -9,6 +9,7 @@ the streaming-only operators (watermarked late-data handling,
 """
 
 from reindexer_spark.streaming.runner import (
+    drive_stream,
     run_stream_to_memory,
     stream_documents,
     stream_events,
@@ -16,6 +17,7 @@ from reindexer_spark.streaming.runner import (
 from reindexer_spark.streaming.stateful import quota_alerts
 
 __all__ = [
+    "drive_stream",
     "quota_alerts",
     "run_stream_to_memory",
     "stream_documents",

@@ -1,15 +1,22 @@
-"""Streaming execution harness.
+"""Streaming sources and the one stream driver.
 
-``stream_events`` exposes the catalog's ``events`` table as a streaming
-DataFrame (file source; schema supplied explicitly — streaming sources
-cannot infer).  ``run_stream_to_memory`` drives any streaming plan to
-completion synchronously via the memory sink — the local test analogue
-of a Kafka→sink deployment; the transformations are identical, only the
-source/sink formats change in production.
+``stream_events`` / ``stream_documents`` expose the catalog's tables as
+streaming DataFrames (file source; schema supplied explicitly —
+streaming sources cannot infer).  ``maxFilesPerTrigger`` keeps several
+micro-batches flowing, so state (watermarks, dedup, sessions) is
+exercised across batches, not satisfied by one batch holding everything.
 
-``maxFilesPerTrigger`` keeps multiple micro-batches flowing so state
-(watermarks, dedup, sessions) is actually exercised across batches, not
-trivially satisfied by one batch containing everything.
+``drive_stream`` is how every stream in the package runs: availableNow
+trigger, drained synchronously, then stopped, joined and forgotten by
+the session's query manager.  ``spark.sql.shuffle.partitions`` is set to
+the stream's state-partition count for that run only.
+``run_stream_to_memory`` drives a plan into a memory sink and returns
+the result as a batch DataFrame — the local analogue of a Kafka→sink
+deployment; only the source/sink formats change in production.
+
+A stream keeps no state in the session after it returns: no running
+query, no terminated-query record, no temp view, no conf change.
+Streams are assumed to run one at a time on a session.
 """
 
 from __future__ import annotations
@@ -18,6 +25,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 # parquet matches columns by name; `ts` arrives either as a proper
 # TIMESTAMP(MICROS) column (current generator) or as TIMESTAMP(NANOS),
@@ -64,80 +72,11 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
     )
 
 
-# --- state-partition sizing policy (optimization r17) -----------------
-#
-# A stateful query creates one state store PER SHUFFLE PARTITION per
-# stateful operator side, and every micro-batch pays store load/commit
-# per partition — so the partition count should track STATE VOLUME, not
-# CPU count (guide §2.2 applied to state stores; r16 measured the
-# stream-stream join at 8.0 s/batch with 32 stores vs 1.4 s with 8 on
-# identical data).  State volume is bounded above by source volume for
-# every lane here (dedup state = distinct fingerprints, window state =
-# in-flight windows), so the policy sizes stores from the bytes the
-# registered sources will feed the stream:
-#
-#     partitions = clamp(ceil(source_bytes / STATE_STORE_TARGET_BYTES),
-#                        STATE_PARTITIONS_MIN, STATE_PARTITIONS_MAX)
-#
-# STATE_STORE_TARGET_BYTES defaults to 1 GiB — the middle of the
-# 0.5-2 GB/store band HDFS-backed and RocksDB state stores are sized to
-# in production; override via SPARK_GRAFT_STATE_STORE_TARGET_BYTES.  At
-# the local test scales (sources of a few MB) the clamp floor keeps the
-# r16-measured value of 8, so the driver's bench is unchanged; a 100 TB
-# ingest derives ~2048 (the cap — past that, coordination overhead and
-# tiny files dominate; raise SPARK_GRAFT_STREAM_STATE_PARTITIONS
-# explicitly if a deployment really holds >2 TB of live state).
-#
-# The sizing hint comes from the source constructors below, which
-# register their input bytes per application; run_stream_to_memory
-# consumes (and clears) the registration.  Like the shuffle-partition
-# override itself this assumes the harness starts streams serially —
-# the documented contract of this runner (bench/verify are serial); a
-# concurrent-streams deployment must pass state_partitions explicitly.
-# A non-local master with NO sizing information (explicit arg, env, or
-# registered source bytes) fails loudly instead of silently running
-# 8 stores against cluster-scale state.
-
-STATE_STORE_TARGET_BYTES = 1 << 30
-STATE_PARTITIONS_MIN = 8
-STATE_PARTITIONS_MAX = 2048
-
-_PENDING_SOURCE_BYTES: dict[str, int] = {}
-
-
-def state_partitions_for(source_bytes: int | None) -> int:
-    """The state-partition sizing rule (see module comment above)."""
-    import os
-
-    target = int(
-        os.environ.get(
-            "SPARK_GRAFT_STATE_STORE_TARGET_BYTES", STATE_STORE_TARGET_BYTES
-        )
-    )
-    if not source_bytes or source_bytes <= 0:
-        return STATE_PARTITIONS_MIN
-    n = -(-source_bytes // target)
-    return max(STATE_PARTITIONS_MIN, min(STATE_PARTITIONS_MAX, n))
-
-
-def _register_source_bytes(spark, path: str) -> None:
-    """Accumulate the on-disk size of a stream source for the sizing
-    policy (best-effort: unreadable paths register nothing)."""
-    import os
-
-    try:
-        if os.path.isdir(path):
-            n = sum(
-                os.path.getsize(os.path.join(path, f))
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        else:
-            n = os.path.getsize(path)
-    except OSError:
-        return
-    key = spark.sparkContext.applicationId
-    _PENDING_SOURCE_BYTES[key] = _PENDING_SOURCE_BYTES.get(key, 0) + n
+# Shuffle partitions a stream runs with, hence state stores per stateful
+# operator.  Every micro-batch loads and commits each store, so the
+# count tracks state volume, not cores: the stream-stream join measured
+# 8.0 s/batch with 32 stores vs 1.4 s with 8 on identical data.
+STATE_PARTITIONS = 8
 
 
 def _stream_table_source(spark, sf_dir: str, name: str, schema: str,
@@ -153,7 +92,6 @@ def _stream_table_source(spark, sf_dir: str, name: str, schema: str,
         "maxFilesPerTrigger", max_files_per_trigger
     )
     path = os.path.join(sf_dir, f"{name}.parquet")
-    _register_source_bytes(spark, path)
     if os.path.isdir(path):
         return reader.parquet(path)
     return reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
@@ -195,77 +133,52 @@ def stream_documents(
     )
 
 
-def run_stream_to_memory(
-    streaming_df: DataFrame,
-    output_mode: str = "complete",
-    state_partitions: int | None = None,
-) -> DataFrame:
-    """Run a streaming plan to completion into a memory table; returns a
-    batch DataFrame over the final result.
-
-    State parallelism (r16/r17, guide §2.2 applied to state stores):
-    the partition count is DERIVED from the registered source volume
-    via state_partitions_for (see the policy comment above) — r16's
-    constant 8 became the clamp floor, which the local test scales
-    resolve to, so bench numbers are directly comparable.  Precedence:
-    explicit ``state_partitions`` arg > SPARK_GRAFT_STREAM_STATE_PARTITIONS
-    env > derived-from-source-bytes.  A non-local master with none of
-    the three raises rather than running cluster-scale state on the
-    floor value.  Results are partitioning-independent (same state
-    keys, same outputs — every live lane stays oracle-gated); a
-    restarted checkpoint keeps the partition count it was created with
-    (Spark pins it in the offset metadata), so this only shapes NEW
-    streams.
-
-    ``state_partitions`` overrides the default for lanes whose
-    micro-batch cost is PYTHON COMPUTE rather than store bookkeeping
-    (applyInPandasWithState over per-doc work): those pass the session
-    core count, because halving their partitions halves their CPU
-    parallelism — the stream_cdc_dedup_live lane measured 22 s at 8
-    partitions vs 14 s at 32 while the store-bound joins moved the
-    opposite way."""
-    import os
-
-    name = f"stream_out_{uuid.uuid4().hex[:8]}"
-    spark = streaming_df.sparkSession
-    src_bytes = _PENDING_SOURCE_BYTES.pop(
-        spark.sparkContext.applicationId, None
-    )
-    if state_partitions is not None:
-        parts = str(state_partitions)
-    elif os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS"):
-        parts = os.environ["SPARK_GRAFT_STREAM_STATE_PARTITIONS"]
-    else:
-        master = spark.sparkContext.master
-        if src_bytes is None and not master.startswith("local"):
-            raise RuntimeError(
-                "run_stream_to_memory: no state-partition sizing on a "
-                f"non-local master ({master}). Pass state_partitions=, "
-                "set SPARK_GRAFT_STREAM_STATE_PARTITIONS, or read the "
-                "stream through a size-registering source; the sizing "
-                "rule is ceil(state_bytes / 1 GiB) clamped to [8, 2048]."
-            )
-        parts = str(state_partitions_for(src_bytes))
+def drive_stream(
+    writer: DataStreamWriter,
+    spark: SparkSession,
+    state_partitions: int = STATE_PARTITIONS,
+) -> None:
+    """Run ``writer`` (a configured ``writeStream``) once, availableNow,
+    to completion.  ``spark.sql.shuffle.partitions`` is
+    ``state_partitions`` for this stream only (a restarted checkpoint
+    keeps the count it was created with); the query is stopped and
+    joined, and its terminated-query record dropped, whether it finished
+    or failed — a failure re-raises here."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
-        q = (
-            streaming_df.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .trigger(availableNow=True)
-            .start()
-        )
+        q = writer.trigger(availableNow=True).start()
         try:
             q.processAllAvailable()
         finally:
             q.stop()
-            # join the micro-batch thread completely and drop the
-            # terminated query's bookkeeping — the stream leaves nothing
-            # running in the JVM that could interfere with later batch
-            # jobs in this session
-            q.awaitTermination()
-            spark.streams.resetTerminated()
+            try:
+                q.awaitTermination()
+            finally:
+                spark.streams.resetTerminated()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.sql(f"SELECT * FROM {name}")
+
+
+def run_stream_to_memory(
+    streaming_df: DataFrame,
+    output_mode: str = "complete",
+    state_partitions: int = STATE_PARTITIONS,
+) -> DataFrame:
+    """Run a streaming plan to completion into a memory sink; returns a
+    batch DataFrame over the final result.  The sink's temp view is
+    dropped before returning (the frame keeps the rows), so the session
+    catalog ends as it started, also when the stream fails.
+
+    Lanes whose micro-batch cost is Python compute rather than store
+    bookkeeping (applyInPandasWithState over per-doc work) pass the
+    session core count as ``state_partitions``: stream_cdc_dedup_live
+    measured 22 s at 8 partitions vs 14 s at 32."""
+    name = f"stream_out_{uuid.uuid4().hex[:8]}"
+    spark = streaming_df.sparkSession
+    writer = streaming_df.writeStream.outputMode(output_mode).format("memory")
+    try:
+        drive_stream(writer.queryName(name), spark, state_partitions)
+        return spark.sql(f"SELECT * FROM {name}")
+    finally:
+        spark.catalog.dropTempView(name)

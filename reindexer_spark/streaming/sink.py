@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from reindexer_spark.streaming.runner import drive_stream
+
 
 class IdempotentParquetSink:
     """``foreachBatch`` target writing each micro-batch to
@@ -57,15 +59,8 @@ def run_stream_to_parquet(
     """Drive a streaming plan to completion through the idempotent sink
     (availableNow trigger, synchronous)."""
     sink = IdempotentParquetSink(base_path)
-    q = (
+    drive_stream(
         streaming_df.writeStream.foreachBatch(sink.write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        streaming_df.sparkSession,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-        streaming_df.sparkSession.streams.resetTerminated()

@@ -236,6 +236,7 @@ def test_effectively_once_sink_end_to_end_stream(spark, live_server, tmp_path):
         EffectivelyOnceSolrSink,
         SolrSink,
     )
+    from reindexer_spark.streaming import drive_stream
 
     src = tmp_path / "in"
     src.mkdir()
@@ -246,18 +247,13 @@ def test_effectively_once_sink_end_to_end_stream(spark, live_server, tmp_path):
     )
 
     def run_once():
-        q = (
+        drive_stream(
             spark.readStream.schema("id string, t string")
             .json(str(src))
             .writeStream.foreachBatch(sink.write_batch)
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", str(tmp_path / "ckpt")),
+            spark,
         )
-        q.processAllAvailable()
-        q.stop()
-        q.awaitTermination()
-        spark.streams.resetTerminated()
 
     run_once()
     posted = [d for r in live_server.requests for d in r["body"]]

@@ -7,11 +7,17 @@ dropDuplicatesWithinWatermark)."""
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
-from reindexer_spark.streaming import run_stream_to_memory, stream_events
+from reindexer_spark.streaming import (
+    drive_stream,
+    run_stream_to_memory,
+    stream_events,
+)
 
 BASE = dt.datetime(2024, 1, 1, 0, 0, 0)
 
@@ -357,23 +363,14 @@ def test_stateful_rate_limit_on_time_rows_never_flagged(spark, tmp_path):
 
 def _run_checkpointed(streaming_df, out_dir: str, ckpt: str) -> None:
     """Run an append-mode stream into a parquet sink with a durable
-    checkpoint, to completion, then fully stop it — the restartable
-    analogue of run_stream_to_memory."""
-    spark = streaming_df.sparkSession
-    q = (
+    checkpoint — the restartable analogue of run_stream_to_memory."""
+    drive_stream(
         streaming_df.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", ckpt),
+        streaming_df.sparkSession,
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-        q.awaitTermination()
-        spark.streams.resetTerminated()
 
 
 def _append_batch(spark, root: str, idx: int, rows) -> None:
@@ -829,67 +826,129 @@ def test_stateful_cdc_dedup_carries_fingerprints_across_batches(
 
 
 # ---------------------------------------------------------------------------
-# State-partition sizing policy (optimization r17)
+# Stream lifecycle: a run leaves no state in the session
 # ---------------------------------------------------------------------------
 
 
-def test_state_partition_policy_values(monkeypatch):
-    """state_partitions_for sizes stores from source volume: floor 8 at
-    test scale (keeps r16's measured local value — bench comparable),
-    ceil(bytes/1 GiB) in the middle, capped at 2048; the per-store
-    target is env-overridable."""
-    from reindexer_spark.streaming import runner
-
-    monkeypatch.delenv("SPARK_GRAFT_STATE_STORE_TARGET_BYTES", raising=False)
-    assert runner.state_partitions_for(None) == 8
-    assert runner.state_partitions_for(0) == 8
-    assert runner.state_partitions_for(10 << 20) == 8  # local test scale
-    assert runner.state_partitions_for(100 << 30) == 100  # 100 GiB ingest
-    assert runner.state_partitions_for((100 << 30) + 1) == 101  # ceil
-    assert runner.state_partitions_for(100 * 10**12) == 2048  # 100 TB: cap
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE_TARGET_BYTES", str(1 << 20))
-    assert runner.state_partitions_for(64 << 20) == 64
+def _stream_views(spark) -> list[str]:
+    return [
+        t.name
+        for t in spark.catalog.listTables()
+        if t.name.startswith("stream_out_")
+    ]
 
 
-def test_stream_sources_register_bytes_and_runner_consumes(spark, sf_dir):
-    """The file-source constructors register their on-disk size for the
-    sizing policy and run_stream_to_memory consumes (clears) it — one
-    registration never leaks into the next stream."""
-    import os
-
-    from reindexer_spark.streaming import runner
-
-    key = spark.sparkContext.applicationId
-    runner._PENDING_SOURCE_BYTES.pop(key, None)
-    ev = stream_events(spark, sf_dir)
-    got = runner._PENDING_SOURCE_BYTES.get(key)
-    assert got and got > 0
-    path = os.path.join(sf_dir, "events.parquet")
-    if os.path.isfile(path):
-        assert got == os.path.getsize(path)
-    out = run_stream_to_memory(
-        ev.groupBy("event_type").count(), output_mode="complete"
+def _counts(spark, root):
+    return (
+        _read_stream(spark, root)
+        .groupBy("user_id")
+        .agg(F.count("*").alias("n"))
     )
-    assert out.count() > 0
-    # consumed: nothing pending for the next stream
-    assert key not in runner._PENDING_SOURCE_BYTES
 
 
-def test_runner_raises_on_nonlocal_master_without_sizing(monkeypatch):
-    """A non-local master with no explicit/env/registered sizing must
-    fail loudly instead of running cluster-scale state on the floor."""
-    from reindexer_spark.streaming import runner
+_LIFECYCLE_BATCHES = [
+    [(1, 0, 1, "click", 1.0), (2, 1, 2, "view", 1.0)],
+    [(3, 2, 1, "click", 1.0)],
+]
 
-    class _SC:
-        master = "spark://cluster:7077"
-        applicationId = "app-nonlocal-test"
 
-    class _Session:
-        sparkContext = _SC()
+def test_failed_stream_leaves_session_clean(spark, tmp_path):
+    """A stream whose Python UDF raises: run_stream_to_memory raises,
+    and afterwards no memory-sink view, no active or terminated query
+    and no changed shuffle-partition conf remain; the next stream runs
+    correctly."""
+    from pyspark.errors import StreamingQueryException
 
-    class _DF:
-        sparkSession = _Session()
+    root = _mk_files(spark, tmp_path, _LIFECYCLE_BATCHES)
 
-    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
-    with pytest.raises(RuntimeError, match="non-local master"):
-        runner.run_stream_to_memory(_DF())
+    @F.udf("bigint")
+    def boom(x):
+        raise ValueError("boom")
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(StreamingQueryException):
+        run_stream_to_memory(
+            _read_stream(spark, root).select(boom("event_id").alias("x")),
+            output_mode="append",
+        )
+    assert _stream_views(spark) == []
+    assert spark.streams.active == []
+    # the failed query's record was reset: nothing terminated to report
+    assert spark.streams.awaitAnyTermination(0.1) is False
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    got = run_stream_to_memory(_counts(spark, root)).collect()
+    assert sorted(map(tuple, got)) == [(1, 2), (2, 1)]
+
+
+def test_finished_stream_drops_its_view_and_frame_stays_readable(
+    spark, tmp_path
+):
+    """The memory-sink view is gone once run_stream_to_memory returns;
+    the returned frame still collects the same rows, twice."""
+    root = _mk_files(spark, tmp_path, _LIFECYCLE_BATCHES)
+    out = run_stream_to_memory(_counts(spark, root))
+    assert _stream_views(spark) == []
+    first = sorted(map(tuple, out.collect()))
+    assert first == [(1, 2), (2, 1)]
+    assert sorted(map(tuple, out.collect())) == first
+
+
+class _StatePartitionLog(StreamingQueryListener):
+    """``numShufflePartitions`` of each progress report's first state
+    operator, per query name, in the order the queries ran (listener
+    events arrive asynchronously but in order)."""
+
+    def __init__(self):
+        self.runs: dict[str, set[int]] = {}
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        ops = event.progress.stateOperators
+        if ops:
+            self.runs.setdefault(event.progress.name, set()).add(
+                ops[0].numShufflePartitions
+            )
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        pass
+
+    def partitions(self, k: int, timeout: float = 10.0) -> set[int]:
+        """What the k-th query (1-based) reported."""
+        deadline = time.monotonic() + timeout
+        while len(self.runs) < k and time.monotonic() < deadline:
+            time.sleep(0.05)
+        return list(self.runs.values())[k - 1]
+
+
+def test_state_partitions_default_explicit_and_no_cross_sizing(
+    spark, tmp_path, sf_dir
+):
+    """State stores per operator: STATE_PARTITIONS (8) by default, n
+    when state_partitions=n — also for a stream run after two other
+    sources were constructed but never run."""
+    from reindexer_spark.streaming import stream_documents
+    from reindexer_spark.streaming.runner import STATE_PARTITIONS
+
+    assert STATE_PARTITIONS == 8
+    root = _mk_files(spark, tmp_path, _LIFECYCLE_BATCHES)
+    log = _StatePartitionLog()
+    spark.streams.addListener(log)
+    try:
+        run_stream_to_memory(_counts(spark, root))
+        run_stream_to_memory(_counts(spark, root), state_partitions=3)
+        stream_events(spark, sf_dir)
+        stream_documents(spark, sf_dir)
+        run_stream_to_memory(_counts(spark, root), state_partitions=5)
+        stream_events(spark, sf_dir)
+        stream_documents(spark, sf_dir)
+        run_stream_to_memory(_counts(spark, root))
+        assert [log.partitions(k) for k in (1, 2, 3, 4)] == [
+            {8}, {3}, {5}, {8}
+        ]
+    finally:
+        spark.streams.removeListener(log)

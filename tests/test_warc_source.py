@@ -431,6 +431,7 @@ def test_stream_offsets_survive_restart(spark, tmp_path):
         WarcDataSource,
         write_warc_records,
     )
+    from reindexer_spark.streaming import drive_stream
 
     src = tmp_path / "landing"
     src.mkdir()
@@ -453,23 +454,16 @@ def test_stream_offsets_survive_restart(spark, tmp_path):
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     def run():
-        q = (
+        drive_stream(
             spark.readStream.format("warc")
             .load(str(src))
             .select("warc_file", "record_id")
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            spark,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-            spark.streams.resetTerminated()
 
     shard("a.warc", [1, 2])
     run()
@@ -572,6 +566,7 @@ def test_stream_resumes_from_legacy_checkpoint_offset(spark, tmp_path):
         WarcDataSource,
         write_warc_records,
     )
+    from reindexer_spark.streaming import drive_stream
 
     src = tmp_path / "landing"
     src.mkdir()
@@ -594,23 +589,16 @@ def test_stream_resumes_from_legacy_checkpoint_offset(spark, tmp_path):
     out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     def run():
-        q = (
+        drive_stream(
             spark.readStream.format("warc")
             .load(str(src))
             .select("warc_file", "record_id")
             .writeStream.outputMode("append")
             .format("parquet")
             .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", ckpt),
+            spark,
         )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-            q.awaitTermination()
-            spark.streams.resetTerminated()
 
     shard("a.warc", [1, 2])
     run()
