@@ -1139,9 +1139,15 @@ def stream_minhash_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     (applyInPandasWithState) — every arriving document immediately
     pairs against the representatives already resident in its LSH band
     buckets, each bucket carrying its first STREAM_LSH_CAP arrivals as
-    state.  This is crawl-time dedup at 100 TB: the alternative —
-    re-running corpus dedup per landed batch — rescans the corpus;
-    this operator touches O(cap) state per band bucket per arrival.
+    state.  This is crawl-time dedup: the alternative — re-running
+    corpus dedup per landed batch — rescans the corpus.  The band
+    buckets are grouped into ``FINGERPRINT_BUCKETS`` hash buckets: a
+    micro-batch makes one Python call per touched hash bucket and
+    rewrites its whole resident table, so per-batch cost is
+    O(batch) plus O(resident entries the stream has kept): once those
+    run into the millions a per-key layout is cheaper (the CDC
+    operator's measured crossover is in
+    ``stateful._by_fingerprint_bucket``).
 
     Gate: band signatures are md5 Kirsch-Mitzenmacher arithmetic
     computed ROW-WISE (stream-safe: no aggregation before the stateful
@@ -1160,9 +1166,8 @@ def stream_minhash_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     bands = _rowwise_md5_bands(stream_documents(spark, sf_dir))
     pairs = minhash_dedup_stream(bands, cap=STREAM_LSH_CAP)
-    # compute-bound stateful lane: per-row md5-band Python work scales
-    # with partition count, so this one keeps core-count parallelism
-    # (see run_stream_to_memory's state_partitions note)
+    # Python-compute stateful lane: one wave of state tasks (see
+    # run_stream_to_memory's state_partitions note)
     from reindexer_spark.session import default_parallelism
 
     return run_stream_to_memory(
@@ -1376,15 +1381,19 @@ def stream_cdc_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk instance is classified the moment it lands: new fingerprint
     or a duplicate of ``first_doc``.  This is transfer/storage dedup
     at crawl time: a landing page ships only the chunks the corpus
-    lacks, with TWO LONGS of state per distinct fingerprint.
+    lacks.  State is one fingerprint table per hash bucket
+    (``FINGERPRINT_BUCKETS`` of them): each micro-batch makes at most
+    that many Python calls and rewrites the tables it touches, so its
+    cost grows with every fingerprint the stream has kept — past about
+    1-3M of them (more for larger batches) a per-key layout is cheaper
+    (measured in ``stateful._by_fingerprint_bucket``).
 
     Gate: the emitted relation must equal the batch window
     FIRST_VALUE/ROW_NUMBER over (PARTITION BY fingerprint ORDER BY
     doc_id, idx) — DuckDB rebuilds the chunks, fingerprints and
     arrival order independently.  Cross-batch state carry (a chunk
     seen in batch 1 marks arrivals dup in batch 2) is pinned in
-    tests/test_streaming.py; restart safety rides the same checkpoint
-    machinery as the other five stateful lanes."""
+    tests/test_streaming.py, and so is a restart from a checkpoint."""
     from reindexer_spark.operators.dedup import (
         _gear_chunks_from_cuts,
         _md5_cuts_vec,
@@ -1417,9 +1426,9 @@ def stream_cdc_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length("chunk").alias("clen"),
     )
     out = cdc_dedup_stream(ex)
-    # compute-bound stateful lane (per-chunk hashing dominates): keep
-    # core-count parallelism — 8 state partitions measured 22 s vs
-    # 14 s at 32 on identical data, the inverse of the join lanes
+    # Python-compute stateful lane: one wave of state tasks — 4
+    # partitions measured 2.7 s against 3.6 s at the default 8 on a
+    # 4-core host (see run_stream_to_memory's state_partitions note)
     from reindexer_spark.session import default_parallelism
 
     return run_stream_to_memory(

@@ -8,7 +8,8 @@ exercised across batches, not satisfied by one batch holding everything.
 
 ``drive_stream`` is how every stream in the package runs: availableNow
 trigger, drained synchronously, then stopped, joined and forgotten by
-the session's query manager.  ``spark.sql.shuffle.partitions`` is set to
+the session's query manager; it returns the query's recent
+per-micro-batch progress reports.  ``spark.sql.shuffle.partitions`` is set to
 the stream's state-partition count for that run only.
 ``run_stream_to_memory`` drives a plan into a memory sink and returns
 the result as a batch DataFrame — the local analogue of a Kafka→sink
@@ -26,6 +27,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
+from pyspark.sql.streaming.listener import StreamingQueryProgress
 
 # parquet matches columns by name; `ts` arrives either as a proper
 # TIMESTAMP(MICROS) column (current generator) or as TIMESTAMP(NANOS),
@@ -137,13 +139,18 @@ def drive_stream(
     writer: DataStreamWriter,
     spark: SparkSession,
     state_partitions: int = STATE_PARTITIONS,
-) -> None:
+) -> list[StreamingQueryProgress]:
     """Run ``writer`` (a configured ``writeStream``) once, availableNow,
-    to completion.  ``spark.sql.shuffle.partitions`` is
-    ``state_partitions`` for this stream only (a restarted checkpoint
-    keeps the count it was created with); the query is stopped and
-    joined, and its terminated-query record dropped, whether it finished
-    or failed — a failure re-raises here."""
+    to completion, and return the finished query's ``recentProgress``:
+    one report per micro-batch, with its ``durationMs`` phases and each
+    state operator's rows and commit time — the most recent reports
+    only, up to ``spark.sql.streaming.numRecentProgressUpdates`` (100
+    by default), for a stream with more batches than that.
+    ``spark.sql.shuffle.partitions`` is ``state_partitions`` for this
+    stream only (a restarted checkpoint keeps the count it was created
+    with); the query is stopped and joined, and its terminated-query
+    record dropped, whether it finished or failed — a failure re-raises
+    here."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -156,6 +163,7 @@ def drive_stream(
                 q.awaitTermination()
             finally:
                 spark.streams.resetTerminated()
+        return q.recentProgress
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
@@ -171,9 +179,10 @@ def run_stream_to_memory(
     catalog ends as it started, also when the stream fails.
 
     Lanes whose micro-batch cost is Python compute rather than store
-    bookkeeping (applyInPandasWithState over per-doc work) pass the
-    session core count as ``state_partitions``: stream_cdc_dedup_live
-    measured 22 s at 8 partitions vs 14 s at 32."""
+    bookkeeping (the bucketed fingerprint-dedup operators) pass the
+    session core count as ``state_partitions``, so their state tasks run
+    in one wave: on a 4-core host stream_cdc_dedup_live measured 2.7 s
+    at 4 partitions against 3.6 s at the default 8."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     spark = streaming_df.sparkSession
     writer = streaming_df.writeStream.outputMode(output_mode).format("memory")

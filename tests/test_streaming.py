@@ -361,10 +361,11 @@ def test_stateful_rate_limit_on_time_rows_never_flagged(spark, tmp_path):
     ]
 
 
-def _run_checkpointed(streaming_df, out_dir: str, ckpt: str) -> None:
+def _run_checkpointed(streaming_df, out_dir: str, ckpt: str) -> list:
     """Run an append-mode stream into a parquet sink with a durable
-    checkpoint — the restartable analogue of run_stream_to_memory."""
-    drive_stream(
+    checkpoint — the restartable analogue of run_stream_to_memory.
+    Returns the run's per-batch progress reports."""
+    return drive_stream(
         streaming_df.writeStream.outputMode("append")
         .format("parquet")
         .option("path", out_dir)
@@ -446,10 +447,36 @@ def _mk_doc_files(spark, tmp_path, batches):
     root = tmp_path / "doc_stream_src"
     root.mkdir()
     for i, rows in enumerate(batches):
-        spark.createDataFrame(
-            rows, "doc_id bigint, text string"
-        ).coalesce(1).write.parquet(str(root / f"batch_{i:03d}.parquet"))
+        _append_doc_batch(spark, str(root), i, rows)
     return str(root)
+
+
+def _append_doc_batch(spark, root: str, idx: int, rows) -> None:
+    df = spark.createDataFrame(rows, "doc_id bigint, text string")
+    df.coalesce(1).write.parquet(f"{root}/batch_{idx:03d}.parquet")
+
+
+def _doc_stream(spark, root: str):
+    """One micro-batch per file written by _mk_doc_files."""
+    return (
+        spark.readStream.schema("doc_id bigint, text string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{root}/batch_*.parquet")
+    )
+
+
+def _cdc_instances(docs):
+    """(doc_id, idx, h, clen) chunk instances of a (doc_id, text) frame,
+    cut by the row-wise md5 CDC splitter — cdc_dedup_stream's input."""
+    from reindexer_spark.operators.dedup import _cdc_chunks
+
+    return docs.select(
+        "doc_id",
+        F.posexplode(_cdc_chunks(F.col("text"))).alias("idx", "chunk"),
+    ).select(
+        "doc_id", "idx", F.md5("chunk").alias("h"),
+        F.length("chunk").alias("clen"),
+    )
 
 
 def test_stateful_pack_greedy_carries_cursor_across_batches(spark, tmp_path):
@@ -776,9 +803,7 @@ def test_stateful_cdc_dedup_carries_fingerprints_across_batches(
     later arrival of the same content as a duplicate of the ORIGINAL
     document — including arrivals two batches later — while novel
     chunks stay is_new=1."""
-    from reindexer_spark.operators.dedup import _cdc_chunks
     from reindexer_spark.streaming.stateful import cdc_dedup_stream
-    from pyspark.sql import functions as F
 
     shared = "the quick brown fox jumps over the lazy dog " * 4
     def doc(i):
@@ -789,20 +814,9 @@ def test_stateful_cdc_dedup_carries_fingerprints_across_batches(
     docs = [doc(i) for i in range(30)]
     batches = [docs[:10], docs[10:20], docs[20:]]
     root = _mk_doc_files(spark, tmp_path, batches)
-    stream = (
-        spark.readStream.schema("doc_id bigint, text string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{root}/batch_*.parquet")
-    )
-    ex = stream.select(
-        "doc_id",
-        F.posexplode(_cdc_chunks(F.col("text"))).alias("idx", "chunk"),
-    ).select(
-        "doc_id", "idx", F.md5("chunk").alias("h"),
-        F.length("chunk").alias("clen"),
-    )
     out = run_stream_to_memory(
-        cdc_dedup_stream(ex), output_mode="append"
+        cdc_dedup_stream(_cdc_instances(_doc_stream(spark, root))),
+        output_mode="append",
     ).collect()
     by_doc = {}
     for r in out:
@@ -823,6 +837,243 @@ def test_stateful_cdc_dedup_carries_fingerprints_across_batches(
     # chunks tile: per-doc clen sums equal text lengths
     for i, text in docs:
         assert sum(r.clen for r in by_doc[i]) == len(text), i
+
+
+def _unique_text(i: int, words: int = 60) -> str:
+    return " ".join(f"w{i}x{k}" for k in range(words))
+
+
+@pytest.mark.parametrize("cap", [1, 2, 3])
+def test_bucket_steps_match_per_key_reference(monkeypatch, cap):
+    """The two bucketed steps, fed batch after batch through the state
+    round trip (flat bytes out, ``np.frombuffer`` back in), emit exactly
+    what a per-key loop emits — over random fingerprints that grow the
+    key width, hold non-ASCII text and NUL or 0x01 bytes (which
+    fixed-width numpy bytes and pandas string hashing mishandle), and
+    fall into 1, 3 or 64 buckets."""
+    import random
+
+    import numpy as np
+    import pandas as pd
+
+    from reindexer_spark.streaming import stateful
+
+    steps = {}
+    monkeypatch.setattr(
+        stateful,
+        "_by_fingerprint_bucket",
+        lambda df, keys, step, out: steps.__setitem__(keys[-1], step),
+    )
+    stateful.cdc_dedup_stream(None)
+    stateful.minhash_dedup_stream(None, cap=cap)
+    empty = (np.empty(0, "S1"), np.empty(0, np.int64))
+
+    def run(step, batches, columns, n_buckets):
+        tables, outs = {}, []
+        for rows in batches:
+            pdf = pd.DataFrame(rows, columns=columns)
+            pdf = pdf.astype({c: "int32" for c in ("idx", "clen", "band")
+                              if c in columns})
+            key = pdf[columns[2]].map(lambda h: hash(h) % n_buckets)
+            for b, g in pdf.groupby(key):
+                held, vals = tables.get(b, empty)
+                out, held, vals = step(g.reset_index(drop=True), held, vals)
+                tables[b] = (
+                    np.frombuffer(held.tobytes(), held.dtype),
+                    np.frombuffer(vals.tobytes(), np.int64),
+                )
+                outs.extend(map(tuple, out.itertuples(index=False)))
+        return sorted(outs)
+
+    def batches_of(rng, row):
+        doc, out = 0, []
+        for _ in range(rng.randint(1, 4)):
+            rows = []
+            for _ in range(rng.randint(1, 6)):
+                doc += rng.randint(1, 3)
+                rows.extend(row(doc, i) for i in range(rng.randint(1, 5)))
+            rng.shuffle(rows)
+            out.append(rows)
+        return out
+
+    rng = random.Random(cap)
+    for _ in range(100):
+        n_buckets = rng.choice([1, 3, 64])
+        vocab = [
+            rng.choice(
+                ["a", "x", "x\x00", "é", "a\x01", "abc" * rng.randint(1, 4)]
+            )
+            + rng.choice(["", str(rng.randint(0, 30))])
+            for _ in range(40)
+        ]
+        batches = batches_of(rng, lambda d, i: (d, i, rng.choice(vocab), 5))
+        first, want = {}, []
+        for rows in batches:
+            for d, i, h, n in sorted(rows):
+                new = h not in first
+                want.append((d, i, h, n, first.setdefault(h, d), int(new)))
+        got = run(steps["h"], batches, ["doc_id", "idx", "h", "clen"],
+                  n_buckets)
+        assert got == sorted(want)
+
+        batches = batches_of(rng, lambda d, i: (d, i, rng.choice(vocab[:8])))
+        members, want = {}, []
+        for rows in batches:
+            for d, band, sig in sorted(rows):
+                m = members.setdefault((band, sig), [])
+                want.extend((band, x, d) for x in m if x < d)
+                if len(m) < cap:
+                    m.append(d)
+        got = run(steps["sig"], batches, ["doc_id", "band", "sig"], n_buckets)
+        assert got == sorted(want)
+
+
+def test_drive_stream_reports_each_batch_and_cdc_state_is_bucketed(
+    spark, tmp_path
+):
+    """drive_stream returns one progress report per micro-batch, and the
+    CDC operator holds one state row per touched bucket — more than 10x
+    fewer rows (and state-function calls) than distinct fingerprints."""
+    from reindexer_spark.streaming.stateful import (
+        FINGERPRINT_BUCKETS,
+        cdc_dedup_stream,
+    )
+
+    docs = [(i, _unique_text(i)) for i in range(30)]
+    root = _mk_doc_files(spark, tmp_path, [docs[:10], docs[10:20], docs[20:]])
+    progress = drive_stream(
+        cdc_dedup_stream(_cdc_instances(_doc_stream(spark, root)))
+        .writeStream.outputMode("append")
+        .format("noop"),
+        spark,
+    )
+    assert [p.batchId for p in progress] == [0, 1, 2]
+    assert all(p.numInputRows > 0 for p in progress)
+    assert all("addBatch" in p.durationMs for p in progress)
+    ops = progress[-1].stateOperators
+    assert len(ops) == 1 and ops[0].commitTimeMs >= 0
+    distinct = (
+        _cdc_instances(spark.read.parquet(f"{root}/batch_*.parquet"))
+        .select("h").distinct().count()
+    )
+    assert ops[0].numRowsTotal <= FINGERPRINT_BUCKETS
+    assert distinct > 10 * ops[0].numRowsTotal, (distinct, ops[0])
+
+
+def test_cdc_dedup_state_survives_restart(spark, tmp_path):
+    """Four batches, stop, four more batches on the same
+    checkpointLocation: a post-restart copy of a batch-1 document is
+    attributed to the batch-1 doc, the restarted run processes only the
+    new files (batches 4-7), state stays one row per bucket as the
+    table grows, and the whole output equals the batch
+    FIRST_VALUE/ROW_NUMBER window over all eight files."""
+    from pyspark.sql import Window
+
+    from reindexer_spark.streaming.stateful import (
+        FINGERPRINT_BUCKETS,
+        cdc_dedup_stream,
+    )
+
+    docs = [(i, _unique_text(i, 20)) for i in range(20)]
+    root = _mk_doc_files(
+        spark, tmp_path, [docs[k:k + 5] for k in range(0, 20, 5)]
+    )
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run():
+        return _run_checkpointed(
+            cdc_dedup_stream(_cdc_instances(_doc_stream(spark, root))),
+            out_dir,
+            ckpt,
+        )
+
+    assert [p.batchId for p in run()] == [0, 1, 2, 3]
+    later = [
+        [(25, docs[3][1]), (26, _unique_text(26))],
+        [(27, _unique_text(26)), (28, "déjà vu " + docs[17][1])],
+        [(29, docs[12][1]), (30, _unique_text(30, 90))],
+        [(31, _unique_text(30, 90) + " tail"), (32, docs[0][1])],
+    ]
+    for k, rows in enumerate(later, start=4):
+        _append_doc_batch(spark, root, k, rows)
+    progress = run()
+    assert [p.batchId for p in progress] == [4, 5, 6, 7]
+    assert all(
+        p.stateOperators[0].numRowsTotal <= FINGERPRINT_BUCKETS
+        for p in progress
+    )
+    got = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
+    # (idx, first_doc, is_new) per chunk; a short chunk doc 3 shares with
+    # an earlier doc keeps that doc as its first_doc
+    orig = [(r[1], r[4]) for r in got if r[0] == 3]
+    copy = [(r[1], r[4], r[5]) for r in got if r[0] == 25]
+    assert copy == [(i, d, 0) for i, d in orig]
+    assert any(d == 3 for _, d in orig)
+    w = Window.partitionBy("h").orderBy("doc_id", "idx")
+    want = sorted(
+        map(
+            tuple,
+            _cdc_instances(spark.read.parquet(f"{root}/batch_*.parquet"))
+            .select(
+                "doc_id", "idx", "h", "clen",
+                F.first("doc_id").over(w).alias("first_doc"),
+                (F.row_number().over(w) == 1).cast("int").alias("is_new"),
+            )
+            .collect(),
+        )
+    )
+    assert got == want
+
+
+def test_minhash_dedup_state_survives_restart(spark, tmp_path):
+    """Stop after batch 2, restart on the same checkpointLocation: the
+    batch-3 copy of a batch-1 document pairs with the batch-1 doc in
+    every band (cap=1 kept the batch-2 copy out of state), and no
+    pre-restart file is reprocessed (each pair is emitted once)."""
+    from reindexer_spark.operators.dedup import MH_MD5_BANDS
+    from reindexer_spark.operators.windows_time import _rowwise_md5_bands
+    from reindexer_spark.streaming.stateful import minhash_dedup_stream
+
+    text_a = "alpha beta gamma delta epsilon zeta"
+
+    def doc(i):
+        return (i, text_a if i % 10 == 0 else _unique_text(i, 8))
+
+    root = _mk_doc_files(
+        spark, tmp_path, [[doc(i) for i in range(10)],
+                          [doc(i) for i in range(10, 20)]]
+    )
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run():
+        _run_checkpointed(
+            minhash_dedup_stream(
+                _rowwise_md5_bands(_doc_stream(spark, root)), cap=1
+            ),
+            out_dir,
+            ckpt,
+        )
+
+    run()
+    _append_doc_batch(spark, root, 2, [doc(i) for i in range(20, 30)])
+    run()
+    got = sorted(map(tuple, spark.read.parquet(out_dir).collect()))
+    assert got == sorted(
+        (b, 0, d) for b in range(MH_MD5_BANDS) for d in (10, 20)
+    )
+
+
+def test_stream_cdc_dedup_live_twice_on_one_session(spark, sf_dir):
+    """Two runs of the lane on one session return identical rows: each
+    run starts from empty bucket state (its own temporary checkpoint),
+    so the second run still sees every fingerprint as new once."""
+    from reindexer_spark import get_query
+
+    q = get_query("stream_cdc_dedup_live")
+    first = [tuple(r) for r in q.fn(spark, sf_dir).collect()]
+    second = [tuple(r) for r in q.fn(spark, sf_dir).collect()]
+    assert any(r[-1] == 1 for r in first)
+    assert second == first
 
 
 # ---------------------------------------------------------------------------
