@@ -362,16 +362,17 @@ def _by_fingerprint_bucket(
     ~64 distinct keys touches nearly every bucket, so per-batch cost
     grows with all the fingerprints the stream has kept, and the total
     cost of an unbounded stream grows quadratically.  Measured for
-    cdc_dedup_stream on a 4-core host (median batch time), 1,000-row
-    batches: 0.84 s at an empty table, 1.22 s at 1M kept fingerprints,
-    1.72 s at 3M (~0.25 us per kept fingerprint); keyed per
-    fingerprint (one call per distinct key) the same batches took
-    1.6-2.2 s from 0 to 1M kept, flat in the table size.  100-row
-    batches: bucketed 0.93 / 1.00 / 1.64 s at 0 / 1M / 3M kept,
-    per-key 0.94-1.08 s.  The per-key layout therefore wins past about
-    3M kept fingerprints at 1,000-row batches and past about 1.2M at
-    100-row batches.  The grouping key is planned once and fixed into
-    the checkpoint, so a running stream cannot move between the layouts;
+    cdc_dedup_stream on a 4-core host (median of the last 5 of 10
+    batches, 4 state partitions), 1,000-row batches: 0.60 s at an
+    empty table, 0.72 s at 1M kept fingerprints, 1.30 s at 3M (~0.23 us
+    per kept fingerprint); keyed per fingerprint (one call per distinct
+    key) the same batches took 0.97-1.00 s at 0 and 100k kept, flat in
+    the table size.  100-row batches: bucketed 0.54 / 0.72 / 1.22 s at
+    0 / 1M / 3M kept, per-key 0.55-0.60 s.  The per-key layout
+    therefore wins past about 2M kept fingerprints at 1,000-row batches
+    and past about 0.3M at 100-row batches.  The grouping key is
+    planned once and fixed into the checkpoint, so a running stream
+    cannot move between the layouts;
     ``transformWithStateInPandas`` with a ``MapState`` (64 calls and
     O(batch) state traffic per batch) is the route past the crossover
     once its ``google.protobuf`` dependency is installed."""
