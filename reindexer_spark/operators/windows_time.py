@@ -1427,7 +1427,7 @@ def stream_cdc_dedup_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = cdc_dedup_stream(ex)
     # Python-compute stateful lane: one wave of state tasks — 4
-    # partitions measured 1.27 s against 1.57 s at the default 8 on a
+    # partitions measured 0.74 s against 0.87 s at the default 8 on a
     # 4-core host (see run_stream_to_memory's state_partitions note)
     from reindexer_spark.session import default_parallelism
 

@@ -16,11 +16,24 @@ configs are the ones that matter on a 1000-executor cluster at 100 TB:
   (saves ~0.1 s of archive re-reads per Python task; see that module).
   Executors must import ``reindexer_spark``, as the engine's UDFs
   already require.
+- ``file:`` paths served by the engine's local file system
+  (``reindexer_spark/jvm/``, a jar of Hadoop ``LocalFileSystem`` and
+  FileContext ``LocalFs`` subclasses).  Without libhadoop, which pyspark
+  does not ship, stock Hadoop forks ``chmod``, ``ls -ld`` or ``readlink``
+  to set a permission, read a status's permission, owner or group, or
+  read a link: about ten child processes (~30 ms) per offset-log,
+  commit-log or state-store file a stream writes.  The engine's file
+  system makes those calls through java.nio and keeps everything else:
+  Hadoop's ``.crc`` sidecars, Spark's checkpoint file checksums, atomic
+  rename and permission bits.  Local mode runs every task in the
+  driver JVM, so only the driver classpath gets the jar; a non-local
+  master keeps the stock file system.
 
-``spark.python.daemon.module`` is a static conf: only a session that
-``get_spark`` builds gets it, and ``tune`` cannot apply it.  A session a
-host hands in (e.g. to ``__spark_entry__.entry``) keeps pyspark's daemon;
-it gives the same results, without that saving.
+``spark.python.daemon.module`` and ``spark.driver.extraClassPath`` are
+static confs: only a session that ``get_spark`` builds gets them, and
+``tune`` cannot apply them.  A session a host hands in (e.g. to
+``__spark_entry__.entry``) keeps pyspark's daemon and Hadoop's file
+system; it gives the same results, without those savings.
 """
 
 from __future__ import annotations
@@ -28,6 +41,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Hadoop local file system whose permission and link calls go through
+# java.nio (sources and build: reindexer_spark/jvm/, tools/build_jvm.py)
+FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "reindexer-fs.jar")
 
 # Runtime-settable confs applied even when the caller (e.g. the verify
 # driver) hands us an already-built session.
@@ -74,6 +91,24 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def local_fs_confs(master: str, extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """Static confs that mount the engine's local file system on a
+    ``master`` session: the jar appended to the caller's driver classpath,
+    if any, and the two ``file:`` implementations.  Empty for a non-local
+    master, whose executors would not have the jar."""
+    if not master.startswith("local"):
+        return {}
+    classpath = (extra_conf or {}).get("spark.driver.extraClassPath")
+    return {
+        # tasks run in the driver JVM, so the driver classpath is enough
+        "spark.driver.extraClassPath": (
+            f"{classpath}{os.pathsep}{FS_JAR}" if classpath else FS_JAR
+        ),
+        "spark.hadoop.fs.file.impl": "reindexer_spark.jvm.NioLocalFileSystem",
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": "reindexer_spark.jvm.NioLocalFs",
+    }
+
+
 def get_spark(
     app_name: str = "reindexer-spark",
     master: str | None = None,
@@ -92,9 +127,10 @@ def get_spark(
         )
 
     cores = default_parallelism()
+    master = master or f"local[{cores}]"
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cores}]")
+        .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cores))
         .config("spark.driver.memory", default_driver_memory())
         .config("spark.ui.enabled", "false")
@@ -104,7 +140,7 @@ def get_spark(
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**(extra_conf or {}), **local_fs_confs(master, extra_conf)}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -77,7 +77,9 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
 # Shuffle partitions a stream runs with, hence state stores per stateful
 # operator.  Every micro-batch loads and commits each store, so the
 # count tracks state volume, not cores: the stream-stream join measured
-# 8.0 s/batch with 32 stores vs 1.4 s with 8 on identical data.
+# 8.0 s/batch with 32 stores vs 1.4 s with 8 on identical data (on Hadoop's
+# stock local file system, which forked shell commands for every store
+# file; session.py's java.nio one makes each store cheaper).
 STATE_PARTITIONS = 8
 
 
@@ -182,8 +184,10 @@ def run_stream_to_memory(
     bookkeeping (the bucketed fingerprint-dedup operators) pass the
     session core count as ``state_partitions``, so their state tasks run
     in one wave: on a 4-core host stream_cdc_dedup_live at sf0.001
-    measured 1.27 s at 4 partitions against 1.57 s at the default 8
-    (medians of 6 alternating runs in one session)."""
+    measured 0.74 s at 4 partitions against 0.87 s at the default 8
+    (medians of 6 alternating runs after 2 warm-up pairs, one session;
+    1.27 s against 1.57 s while every store commit forked Hadoop's
+    permission shell commands)."""
     name = f"stream_out_{uuid.uuid4().hex[:8]}"
     spark = streaming_df.sparkSession
     writer = streaming_df.writeStream.outputMode(output_mode).format("memory")

@@ -363,11 +363,15 @@ def _by_fingerprint_bucket(
     grows with all the fingerprints the stream has kept, and the total
     cost of an unbounded stream grows quadratically.  Measured for
     cdc_dedup_stream on a 4-core host (median of the last 5 of 10
-    batches, 4 state partitions), 1,000-row batches: 0.60 s at an
-    empty table, 0.72 s at 1M kept fingerprints, 1.30 s at 3M (~0.23 us
-    per kept fingerprint); keyed per fingerprint (one call per distinct
-    key) the same batches took 0.97-1.00 s at 0 and 100k kept, flat in
-    the table size.  100-row batches: bucketed 0.54 / 0.72 / 1.22 s at
+    batches, 4 state partitions) while every state-store commit still
+    forked Hadoop's permission shell commands, ~0.25 s of each batch
+    that session.py's local file system has since removed from both
+    layouts alike (one delta file per state partition either way), so
+    these times are high and the crossovers stale.  1,000-row batches:
+    0.60 s at an empty table, 0.72 s at 1M kept fingerprints, 1.30 s at
+    3M (~0.23 us per kept fingerprint); keyed per fingerprint (one call
+    per distinct key) the same batches took 0.97-1.00 s at 0 and 100k
+    kept, flat in the table size.  100-row batches: bucketed 0.54 / 0.72 / 1.22 s at
     0 / 1M / 3M kept, per-key 0.55-0.60 s.  The per-key layout
     therefore wins past about 2M kept fingerprints at 1,000-row batches
     and past about 0.3M at 100-row batches.  The grouping key is

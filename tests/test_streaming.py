@@ -1025,6 +1025,48 @@ def test_cdc_dedup_state_survives_restart(spark, tmp_path):
     assert got == want
 
 
+def test_cdc_dedup_restart_refuses_a_corrupted_state_file(spark, tmp_path):
+    """One flipped byte in the newest state delta of a finished CDC
+    checkpoint: the restart fails on Spark's checkpoint file checksum
+    instead of loading the corrupt table."""
+    from reindexer_spark.streaming.stateful import cdc_dedup_stream
+
+    docs = [(i, _unique_text(i, 20)) for i in range(10)]
+    root = _mk_doc_files(spark, tmp_path, [docs[:5], docs[5:]])
+    out_dir, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+
+    def run():
+        return _run_checkpointed(
+            cdc_dedup_stream(_cdc_instances(_doc_stream(spark, root))),
+            out_dir,
+            ckpt,
+        )
+
+    assert [p.batchId for p in run()] == [0, 1]
+    deltas = [
+        p for p in (tmp_path / "ckpt" / "state").rglob("*.delta")
+        if p.stat().st_size > 0
+    ]
+    newest = max(int(p.stem) for p in deltas)
+    victim = max(
+        (p for p in deltas if int(p.stem) == newest),
+        key=lambda p: p.stat().st_size,
+    )
+    data = bytearray(victim.read_bytes())
+    data[len(data) // 2] ^= 0xFF
+    victim.write_bytes(bytes(data))
+    _append_doc_batch(spark, root, 2, [(20, _unique_text(20, 20))])
+    with pytest.raises(Exception) as failed:
+        run()
+    # the task's error reaches the driver as text inside the job-abort
+    # message, one link down the JVM cause chain pyspark keeps in _cause
+    messages, err = [], failed.value
+    while err is not None:
+        messages.append(str(err))
+        err = err._cause
+    assert "[CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED]" in "\n".join(messages)
+
+
 def test_minhash_dedup_state_survives_restart(spark, tmp_path):
     """Stop after batch 2, restart on the same checkpointLocation: the
     batch-3 copy of a batch-1 document pairs with the batch-1 doc in
