@@ -182,7 +182,7 @@ EXTENDED = [
     # round 14
     "video_hevc_probe",
     "dedup_cdc_chunks",
-    "image_tiff_decode",
+    "image_tiff_matrix",
     "image_exif_scrub",
     "image_orient_normalize",
     "stream_cdc_dedup_live",
@@ -192,21 +192,14 @@ EXTENDED = [
     "embed_coreset_kcenter",
     "layout_hilbert_key",
     # round 15
-    "image_tiff_tiled",
     "dedup_cdc_gear",
     "audio_mpeg_index",
-    "image_tiff_palette",
     "image_exif_scrub_multi",
     "video_audio_probe",
     "corpus_topic_balance",
     "audio_flac_index",
     # round 16
-    "image_tiff_jpeg",
     "webp_anim_decode",
-    "image_tiff_ccitt",
-    "image_tiff_planar",
-    "image_tiff_mh",
-    "image_tiff_g3",
 ]
 
 

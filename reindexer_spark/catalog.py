@@ -77,7 +77,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
     ``events.ts`` has changed physical type across testdata vintages:
     TIMESTAMP(NANOS) (rejected by Spark's vectorized reader — read as
-    raw nanos under the legacy conf and converted), then TIMESTAMP(MICROS)
+    raw nanos under session.RUNTIME_CONFS' legacy nanosAsLong conf and
+    converted), then TIMESTAMP(MICROS)
     without timezone (read as TIMESTAMP_NTZ — cast to TIMESTAMP so
     downstream ``unix_micros``/interval arithmetic sees one type; the
     session timezone is pinned UTC, so the cast is the identity mapping
@@ -89,7 +90,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if cached is not None:
         return cached
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         df = spark.read.parquet(path)
         from pyspark.sql import functions as F
 

@@ -6733,6 +6733,8 @@ def encode_mp4_coded(
     ``reindexer_spark.h264`` coded by the ``h264.GOPS`` chain named
     ``gop`` (all IDR by default); stss marks the IDR samples — and
     decode reconstructs actual pixels."""
+    if sync_every < 1:
+        raise ValueError("sync_every must be >= 1")
     if intra_frames is not None:
         if codec != "h264":
             raise ValueError("intra_frames requires codec='h264'")
@@ -6878,9 +6880,13 @@ def encode_mkv_coded(
     """Fixture builder: a Matroska file whose video track is coded
     h264/hevc — CodecID V_MPEG4/ISO/AVC / V_MPEGH/ISO/HEVC with the
     avcC/hvcC record as CodecPrivate.  Default: dummy SimpleBlock
-    payloads (probe-only; decode quarantines).  With ``intra_frames``
+    payloads (probe-only; decode quarantines), every ``sync_every``-th
+    one flagged keyframe, as ``encode_mp4_coded``'s stss marks the
+    same samples sync.  With ``intra_frames``
     (h264 only): blocks are REAL samples coded by the ``h264.GOPS``
     chain named ``gop``; the keyframe flag marks the IDR samples."""
+    if sync_every < 1:
+        raise ValueError("sync_every must be >= 1")
     intra_bodies = None
     if intra_frames is not None:
         if codec != "h264":
@@ -6961,14 +6967,13 @@ def encode_mkv_coded(
             b"\x81"
             + struct.pack(">h", i * frame_ms)
             # keyframe flag: coded samples iff IDR; dummy probe
-            # fixtures block 0 and, with sync_every > 1, every
-            # sync_every-th block
+            # fixtures every sync_every-th block, the mp4 stss rule
             + bytes([
                 0x80
                 if (
                     _is_idr_sample(intra_bodies[i])
                     if intra_bodies is not None
-                    else i == 0 or (sync_every > 1 and i % sync_every == 0)
+                    else i % sync_every == 0
                 )
                 else 0x00
             ])

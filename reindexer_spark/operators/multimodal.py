@@ -22,6 +22,7 @@ from reindexer_spark.operators.banding import (
     bstat_sql,
 )
 from reindexer_spark.registry import query
+from reindexer_spark.tiff import TIFF_VARIANTS, encode_tiff_jpeg
 
 
 @query(
@@ -3188,559 +3189,303 @@ def webp_lossless_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TIFF_DOCS = 20
+def _tiff_fixture(text: str, variant: tuple):
+    """Digest fixture for one ``TIFF_VARIANTS`` row → (w, h, writer
+    kwargs, writer data, expected decoded RGB).  17..48 x 17..40 (at
+    least 2x2 tiles) and 5..11 rows per strip come from sha256(text),
+    like every pixel: samples and palette indices from the
+    ``sha256(dg-i)`` chain, the ColorMap from ``sha256(dg-cm-i)`` (high
+    byte exact), the bilevel page from two digest rectangles plus two
+    ``sha256(dg-n-i)`` noise rows.  JPEG rows expect their lossless
+    source."""
+    import hashlib
+
+    import numpy as np
+
+    _encode, kwargs, pixels, _fault = variant
+    dg = hashlib.sha256(text.encode("utf-8")).hexdigest()
+    s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
+    w, h, rps = 17 + s[0] % 32, 17 + s[1] % 24, 5 + s[10] % 7
+    kw = dict(kwargs)
+
+    def chain(tag: str, n: int) -> bytes:
+        return bytes.fromhex("".join(
+            hashlib.sha256(f"{dg}-{tag}{i}".encode()).hexdigest()
+            for i in range((n + 31) // 32)
+        )[: 2 * n])
+
+    if pixels == "palette":  # the writer's two strips: no rows_per_strip
+        idx, cm = chain("", w * h), chain("cm-", 768)
+        kw["colormap"] = [b << 8 for b in cm]
+        lut = np.frombuffer(cm, dtype=np.uint8).reshape(3, 256)
+        rgb = lut[:, np.frombuffer(idx, dtype=np.uint8)].T
+        return w, h, kw, idx, np.ascontiguousarray(rgb).tobytes()
+    kw["rows_per_strip"] = rps
+    if pixels == "page":
+        page = np.zeros((h, w), dtype=np.uint8)
+        for ix, iy, iw, ih in ((2, 4, 3, 5), (6, 8, 7, 9)):
+            x, y = s[ix] % w, s[iy] % h
+            page[y : y + 1 + s[ih] % (h - y), x : x + 1 + s[iw] % (w - x)] = 1
+        # noise rows: one pixel per hex digit of the chain, black if odd
+        nz = np.frombuffer(chain("n-", w), dtype=np.uint8)
+        page[h - 2 :] |= (np.stack([nz >> 4, nz], axis=1) & 1).reshape(2, w)
+        white = np.repeat((1 - page.reshape(-1)) * np.uint8(255), 3)
+        return w, h, kw, bytearray(page.tobytes()), white.tobytes()
+    spp = 1 if kw.get("gray") else 3
+    bits = kw.get("bits", 8)
+    src = chain("", w * h * spp * bits // 8)
+    if spp == 1:  # gray stores luma, exactly the source byte when r=g=b
+        src = bytes(np.repeat(np.frombuffer(src, dtype=np.uint8), 3))
+    if bits == 16:  # decode returns the high byte of each sample
+        order = "<u2" if kw.get("le", True) else ">u2"
+        return w, h, kw, src, (
+            np.frombuffer(src, dtype=order) >> 8
+        ).astype(np.uint8).tobytes()
+    return w, h, kw, src, src
+
+
+_TIFF_VARIANTS_SQL = ", ".join(
+    "({}, '{}', '{}', '{}', {}, {}, {}, {})".format(
+        i,
+        name,
+        pixels,
+        "tiles" if "tile" in kw else "planes" if "planar" in kw else "strips",
+        1 if kw.get("gray") or pixels != "chain" else 3,
+        kw.get("bits", 8),
+        int(kw.get("le", True)),
+        int(enc is encode_tiff_jpeg),
+    )
+    for i, (name, (enc, kw, pixels, _fault)) in enumerate(
+        TIFF_VARIANTS.items()
+    )
+)
+_DIGEST_BYTES_SQL = ", ".join(
+    f"CAST(('0x' || substr(dg, {2 * k + 1}, 2)) AS INT) AS s{k}"
+    for k in range(11)
+)
 
 
 @query(
-    "image_tiff_decode",
+    "image_tiff_matrix",
     oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
-      SELECT media_id, dg,
-             4 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 13 AS w,
-             4 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 9 AS h,
-             CASE WHEN media_id % 3 = 0 THEN 1 ELSE 0 END AS gray
-      FROM base
+    WITH v(media_id, variant, pixels, layout, spp, bits, le, lossy) AS (
+      VALUES {_TIFF_VARIANTS_SQL}
+    ), b AS (
+      SELECT v.*, sha256(d.text) AS dg
+      FROM documents d JOIN v ON d.doc_id = v.media_id
+    ), s AS (
+      SELECT *, {_DIGEST_BYTES_SQL} FROM b
+    ), g AS (
+      SELECT *, 17 + s0 % 32 AS w, 17 + s1 % 24 AS h, 5 + s10 % 7 AS rps
+      FROM s
     ), chain AS (
-      SELECT media_id, w, h, gray,
-             substr(
-               string_agg(sha256(dg || '-' || i), '' ORDER BY i),
-               1,
-               2 * w * h * CASE WHEN gray = 1 THEN 1 ELSE 3 END
-             ) AS hexsrc
-      FROM dims CROSS JOIN range(18) r(i)
-      WHERE i < CEIL(w * h * (CASE WHEN gray = 1 THEN 1 ELSE 3 END)
-                     / 32.0)
-      GROUP BY media_id, w, h, gray, dg
+      -- samples (and palette indices): the sha256(dg-i) hex chain;
+      -- 360 links cover the largest source, 48x40 16-bit RGB
+      SELECT media_id,
+             substr(string_agg(sha256(dg || '-' || i), '' ORDER BY i),
+                    1, 2 * w * h * spp * (bits // 8)) AS hexsrc
+      FROM g CROSS JOIN range(360) r(i)
+      WHERE pixels <> 'page' AND lossy = 0
+        AND i < CEIL(w * h * spp * (bits // 8) / 32.0)
+      GROUP BY media_id, w, h, spp, bits
+    ), px_chain AS (
+      -- decoded RGB: gray triples each byte, 16-bit keeps each
+      -- sample's high byte (the second hex pair on II, the first on MM)
+      SELECT media_id,
+             CASE WHEN bits = 16 THEN array_to_string(list_transform(
+                    range(CAST(w * h * spp AS BIGINT)),
+                    j -> substr(hexsrc, CAST(4 * j + 1 + 2 * le AS INT), 2)
+                  ), '')
+                  WHEN spp = 1 THEN array_to_string(list_transform(
+                    range(CAST(w * h AS BIGINT)),
+                    j -> repeat(substr(hexsrc, CAST(2 * j + 1 AS INT), 2), 3)
+                  ), '')
+                  ELSE hexsrc END AS rgbhex
+      FROM g JOIN chain USING (media_id)
+      WHERE pixels = 'chain'
+    ), px_palette AS (
+      -- index → the ColorMap's R, G and B planes (sha256(dg-cm-i) chain)
+      SELECT media_id, array_to_string(list_transform(
+               list_transform(range(CAST(w * h AS BIGINT)),
+                 j -> CAST(('0x' || substr(hexsrc, CAST(2 * j + 1 AS INT), 2))
+                           AS INT)),
+               k -> substr(cmhex, 2 * k + 1, 2)
+                    || substr(cmhex, 2 * (256 + k) + 1, 2)
+                    || substr(cmhex, 2 * (512 + k) + 1, 2)
+             ), '') AS rgbhex
+      FROM g JOIN chain USING (media_id) JOIN (
+        SELECT media_id,
+               string_agg(sha256(dg || '-cm-' || i), '' ORDER BY i) AS cmhex
+        FROM g CROSS JOIN range(24) r(i)
+        WHERE pixels = 'palette'
+        GROUP BY media_id
+      ) USING (media_id)
+    ), px_page AS (
+      -- two digest rectangles plus two noise rows, black on white
+      SELECT media_id, array_to_string(list_transform(
+               range(CAST(h * w AS BIGINT)), i ->
+               CASE WHEN
+                 ((i // w) >= y1 AND (i // w) < y1 + h1
+                  AND (i % w) >= x1 AND (i % w) < x1 + w1)
+                 OR ((i // w) >= y2 AND (i // w) < y2 + h2
+                  AND (i % w) >= x2 AND (i % w) < x2 + w2)
+                 OR ((i // w) >= h - 2
+                  AND CAST(('0x' || substr(nz,
+                       CAST(((i // w) - (h - 2)) * w + (i % w) + 1 AS INT),
+                       1)) AS INT) % 2 = 1)
+               THEN '000000' ELSE 'ffffff' END), '') AS rgbhex
+      FROM (
+        SELECT media_id, w, h,
+               s2 % w AS x1, s4 % h AS y1,
+               1 + s3 % (w - s2 % w) AS w1, 1 + s5 % (h - s4 % h) AS h1,
+               s6 % w AS x2, s8 % h AS y2,
+               1 + s7 % (w - s6 % w) AS w2, 1 + s9 % (h - s8 % h) AS h2
+        FROM g WHERE pixels = 'page'
+      ) JOIN (
+        SELECT media_id,
+               string_agg(sha256(dg || '-n-' || i), '' ORDER BY i) AS nz
+        FROM g CROSS JOIN range(8) r(i)
+        WHERE pixels = 'page' AND i < CEIL(2 * w / 64.0)
+        GROUP BY media_id
+      ) USING (media_id)
     ), px AS (
-      SELECT media_id, w, h, gray,
-             CASE WHEN gray = 1 THEN
-               array_to_string(
-                 list_transform(
-                   range(CAST(w * h AS BIGINT)),
-                   j -> repeat(substr(hexsrc, CAST(2 * j + 1 AS INT), 2), 3)
-                 ), ''
-               )
-             ELSE hexsrc END AS rgbhex
-      FROM chain
+      SELECT * FROM px_chain
+      UNION ALL SELECT * FROM px_palette
+      UNION ALL SELECT * FROM px_page
     )
-    SELECT media_id,
+    SELECT CAST(media_id AS BIGINT) AS media_id, variant,
            CAST(w AS INT) AS width,
            CAST(h AS INT) AS height,
-           CASE WHEN media_id % 2 = 0 THEN 'II' ELSE 'MM' END
-             AS byte_order,
-           CAST(gray AS INT) AS gray,
-           CASE media_id % 4 WHEN 0 THEN 'none' WHEN 1 THEN 'lzw'
-                             WHEN 2 THEN 'packbits' ELSE 'deflate' END
-             AS compression,
-           CAST(CASE WHEN media_id % 4 IN (1, 3) THEN 2 ELSE 1 END
-                AS INT) AS predictor,
-           CAST(2 AS INT) AS n_strips,
-           md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
+           CAST(CASE WHEN layout = 'tiles' THEN ((w + 15) // 16) * ((h + 15) // 16)
+                     WHEN pixels = 'palette' THEN 2
+                     WHEN layout = 'planes' THEN 3 * ((h + rps - 1) // rps)
+                     ELSE (h + rps - 1) // rps END AS INT) AS n_blocks,
+           md5(px.rgbhex) AS rgb_md5,
+           CAST(1 AS INT) AS decoded_ok,
            CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS ccitt_quarantined
-    FROM px
+           CAST(1 AS INT) AS fault_refused
+    FROM g LEFT JOIN px USING (media_id)
     """,
 )
-def image_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Baseline TIFF decode (round 14 — TIFF joins the image formats;
-    scans/datasets ship it, and a 100 TB crawl funnel must at least
-    probe it): per document, derive pixels from sha256 hex chains
-    BOTH engines can compute, write a real two-strip TIFF
-    (reindexer_spark.tiff — grayscale every third doc, byte order by
-    parity, compression cycling none / LZW+Predictor2 / PackBits /
-    Deflate+Predictor2 by media_id%4), and decode it back through the
-    production image path (codecs._decode_image).
+def image_tiff_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Real TIFF decode of every shape the writers produce: one row per
+    ``tiff.TIFF_VARIANTS`` entry (document ``doc_id`` takes the
+    ``doc_id``-th name) — strips, 16x16 tiles and planar strips over
+    the four lossless codecs, palette color, JPEG-in-TIFF with and
+    without JPEGTables, and CCITT G4 / Modified Huffman / G3 pages in
+    both fill orders — written from a digest fixture
+    (``_tiff_fixture``) and decoded back through ``decode_tiff``.
 
-    Oracle-pinned columns: geometry/compression/predictor from the
-    digest arithmetic; ``rgb_md5`` — md5 of the DECODED pixels' hex
-    equals the oracle's independently built chain across ALL FOUR
-    compression schemes (gray docs store luma which is EXACTLY the
-    source byte for r=g=b inputs, so the oracle triples each chain
-    byte); ``roundtrip_exact=1``; ``probe_agrees=1`` — the
-    headers-only probe reports the decoder's geometry;
-    ``ccitt_quarantined=1`` — the same fixture with its Compression
-    tag flipped to CCITT Group 3 refuses to DECODE while the probe
-    still reads its dims (probe-first funnel: metadata recovered,
-    pixels never guessed).
+    Oracle-pinned columns (re-derived from ``doc_id`` and
+    sha256(text)): the variant name, the digest geometry, ``n_blocks``
+    — IFD0's strip or tile count; ``rgb_md5`` — md5 of the decoded
+    pixels' hex, NULL on the lossy JPEG rows; ``decoded_ok=1`` — the
+    decode equals the source byte for byte, or on JPEG rows is within
+    mean |err| < 25 of it and the JPEGTables layout decodes identically
+    to the inline one; ``probe_agrees=1`` — the headers-only probe reads
+    the decoded dims and strip count; ``fault_refused=1`` — the
+    variant's fault patch makes decode refuse while the probe still
+    reads the dims.  What each codec must engage (LZW width schedule,
+    CCITT modes, JPEGTables splice, planar predictor rows) is pinned by
+    tests/test_tiff.py and tests/test_ccitt.py.
 
-    Scale shape: mapInPandas, payloads never shuffle — same as every
-    media lane."""
+    Scale shape: Arrow-batched mapInPandas over a bounded fixture set,
+    one task per row; payloads never shuffle."""
     import pandas as pd
 
+    names = list(TIFF_VARIANTS)
     docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
+        F.col("doc_id") < len(names)
     )
 
     def build_and_decode(batches):
         import hashlib
-        import struct as st
-
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            _decode_image,
-            probe_media,
-        )
-        from reindexer_spark.tiff import TAG_COMPRESSION, encode_tiff
-
-        def with_ccitt_tag(payload: bytes) -> bytes:
-            le = payload[:2] == b"II"
-            f = "<" if le else ">"
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from(f + "I", buf, 4)
-            (n,) = st.unpack_from(f + "H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from(f + "H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into(f + "H", buf, e + 8, 2)  # CCITT G3
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 4 + int(dg[0:2], 16) % 13
-                h = 4 + int(dg[2:4], 16) % 9
-                gray = mid % 3 == 0
-                le = mid % 2 == 0
-                comp, cname, pred = (
-                    (1, "none", 1),
-                    (5, "lzw", 2),
-                    (32773, "packbits", 1),
-                    (8, "deflate", 2),
-                )[mid % 4]
-                n = w * h * (1 if gray else 3)
-                hexsrc = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((n + 31) // 32)
-                )[: 2 * n]
-                src = bytes.fromhex(hexsrc)
-                if gray:
-                    rgb = b"".join(bytes((v, v, v)) for v in src)
-                else:
-                    rgb = src
-                payload = encode_tiff(
-                    w, h, rgb, le=le, gray=gray,
-                    compression=comp, predictor=pred,
-                )
-                dw, dh, out = _decode_image("tiff", payload)
-                pm = probe_media(payload)
-                agrees = int(
-                    pm["kind"] == "tiff"
-                    and pm["width"] == dw
-                    and pm["height"] == dh
-                )
-                ccitt = with_ccitt_tag(payload)
-                try:
-                    _decode_image("tiff", ccitt)
-                    ccitt_q = 0
-                except MediaFormatError:
-                    ccitt_q = int(probe_media(ccitt)["width"] == dw)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "byte_order": "II" if le else "MM",
-                        "gray": int(gray),
-                        "compression": cname,
-                        "predictor": pred,
-                        "n_strips": 2,
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": int(out == rgb),
-                        "probe_agrees": agrees,
-                        "ccitt_quarantined": ccitt_q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "byte_order",
-                    "gray", "compression", "predictor", "n_strips",
-                    "rgb_md5", "roundtrip_exact",
-                    "probe_agrees", "ccitt_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, width int, height int, byte_order string, "
-        "gray int, compression string, predictor int, n_strips int, "
-        "rgb_md5 string, roundtrip_exact int, "
-        "probe_agrees int, ccitt_quarantined int",
-    )
-
-
-@query(
-    "image_tiff_tiled",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
-      SELECT media_id, dg,
-             17 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 32 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 24 AS h,
-             CASE WHEN media_id % 2 = 0 THEN 16 ELSE 8 END AS bits,
-             CASE WHEN media_id % 3 <> 0 THEN 1 ELSE 0 END AS le
-      FROM base
-    ), chain AS (
-      SELECT media_id, w, h, bits, le,
-             substr(
-               string_agg(sha256(dg || '-' || i), '' ORDER BY i),
-               1,
-               2 * w * h * 3 * (bits // 8)
-             ) AS hexsrc
-      FROM dims CROSS JOIN range(600) r(i)
-      WHERE i < CEIL(w * h * 3 * (bits // 8) / 32.0)
-      GROUP BY media_id, w, h, bits, le, dg
-    ), px AS (
-      -- decoded pixels are the HIGH byte of each sample: for 8-bit
-      -- the chain itself; for 16-bit the first (MM) or second (II)
-      -- byte of each 2-byte sample
-      SELECT media_id, w, h, bits, le,
-             CASE WHEN bits = 8 THEN hexsrc
-                  WHEN le = 1 THEN array_to_string(
-                    list_transform(
-                      range(CAST(w * h * 3 AS BIGINT)),
-                      j -> substr(hexsrc, CAST(4 * j + 3 AS INT), 2)
-                    ), '')
-                  ELSE array_to_string(
-                    list_transform(
-                      range(CAST(w * h * 3 AS BIGINT)),
-                      j -> substr(hexsrc, CAST(4 * j + 1 AS INT), 2)
-                    ), '')
-             END AS rgbhex
-      FROM chain
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CASE WHEN le = 1 THEN 'II' ELSE 'MM' END AS byte_order,
-           CAST(bits AS INT) AS bits,
-           CASE media_id % 4 WHEN 0 THEN 'none' WHEN 1 THEN 'lzw'
-                             WHEN 2 THEN 'packbits' ELSE 'deflate' END
-             AS compression,
-           CAST(CASE WHEN media_id % 4 IN (1, 3) THEN 2 ELSE 1 END
-                AS INT) AS predictor,
-           CAST(((w + 15) // 16) * ((h + 15) // 16) AS INT) AS n_tiles,
-           md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS misaligned_quarantined
-    FROM px
-    """,
-)
-def image_tiff_tiled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tiled + 16-bit TIFF decode (round 15 — the §15 layout
-    scanned-document and scientific crawls actually use): per
-    document, derive SAMPLES from sha256 hex chains both engines can
-    compute (8-bit RGB on odd media_ids, full 16-bit samples in the
-    file's byte order on even ones), write a real 16x16-tiled TIFF
-    (edge tiles zero-padded, compression cycling none / LZW+Pred2 /
-    PackBits / Deflate+Pred2; for 16-bit, Predictor 2 differences
-    whole 16-bit sample values), and decode it back through the
-    production image path.
-
-    Oracle-pinned columns: geometry/bits/compression from the digest
-    arithmetic; ``n_tiles`` — the §15 grid count; ``rgb_md5`` — md5
-    of the decoded pixels' hex, which for 16-bit sources is the HIGH
-    byte of each sample (the oracle picks the first or second hex
-    pair of each sample by byte order); ``roundtrip_exact=1``;
-    ``probe_agrees=1``; ``misaligned_quarantined=1`` — the same
-    fixture with TileWidth patched to a non-multiple-of-16 refuses
-    to decode while the probe still reads its dims.
-
-    Scale shape: mapInPandas, payloads never shuffle — same as every
-    media lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-        import struct as st
 
         import numpy as np
 
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            _decode_image,
-            probe_media,
+        from reindexer_spark.codecs import MediaFormatError
+        from reindexer_spark.tiff import (
+            TAG_STRIP_OFFSETS,
+            TAG_TILE_OFFSETS,
+            _tiff_header,
+            decode_tiff,
+            patch_entry,
+            probe_tiff,
+            read_ifd,
         )
-        from reindexer_spark.tiff import TAG_TILE_WIDTH, encode_tiff
-
-        def with_misaligned_tile(payload: bytes) -> bytes:
-            le = payload[:2] == b"II"
-            f = "<" if le else ">"
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from(f + "I", buf, 4)
-            (n,) = st.unpack_from(f + "H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from(f + "H", buf, e)[0] == TAG_TILE_WIDTH:
-                    st.pack_into(f + "H", buf, e + 8, 20)  # not %16
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a TileWidth tag")
 
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
                 mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 17 + int(dg[0:2], 16) % 32
-                h = 17 + int(dg[2:4], 16) % 24
-                bits = 16 if mid % 2 == 0 else 8
-                le = mid % 3 != 0
-                comp, cname, pred = (
-                    (1, "none", 1),
-                    (5, "lzw", 2),
-                    (32773, "packbits", 1),
-                    (8, "deflate", 2),
-                )[mid % 4]
-                nbytes = w * h * 3 * (bits // 8)
-                hexsrc = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((nbytes + 31) // 32)
-                )[: 2 * nbytes]
-                src = bytes.fromhex(hexsrc)
-                if bits == 16:
-                    dt = "<u2" if le else ">u2"
-                    hi = (
-                        np.frombuffer(src, dtype=dt).astype(np.uint16)
-                        >> 8
-                    ).astype(np.uint8)
-                    expected = hi.tobytes()
-                else:
-                    expected = src
-                payload = encode_tiff(
-                    w, h, src, le=le, bits=bits,
-                    compression=comp, predictor=pred, tile=(16, 16),
-                )
-                dw, dh, out = _decode_image("tiff", payload)
-                pm = probe_media(payload)
-                agrees = int(
-                    pm["kind"] == "tiff"
-                    and pm["width"] == dw
-                    and pm["height"] == dh
-                )
-                bad = with_misaligned_tile(payload)
+                variant = TIFF_VARIANTS[names[mid]]
+                encode, _kw, _pixels, fault = variant
+                w, h, kw, data, expected = _tiff_fixture(r.text, variant)
+                payload = encode(w, h, data, **kw)
+                lossy = encode is encode_tiff_jpeg
                 try:
-                    _decode_image("tiff", bad)
-                    mis_q = 0
+                    dw, dh, out = decode_tiff(payload)
+                    if lossy:
+                        twin = encode(
+                            w, h, data,
+                            **{**kw, "tables_mode": not kw["tables_mode"]},
+                        )
+                        err = np.abs(
+                            np.frombuffer(out, dtype=np.uint8).astype(np.int16)
+                            - np.frombuffer(expected, dtype=np.uint8)
+                        ).mean()
+                        ok = err < 25 and decode_tiff(twin)[2] == out
+                    else:
+                        ok = out == expected
                 except MediaFormatError:
-                    mis_q = int(probe_media(bad)["width"] == dw)
+                    dw, dh, out, ok = 0, 0, b"", False
+                le, ifd0 = _tiff_header(payload)
+                ent, _next = read_ifd(payload, ifd0, le)
+                strips = ent.get(TAG_STRIP_OFFSETS, {"count": 0})["count"]
+                tiles = ent.get(TAG_TILE_OFFSETS, {"count": 0})["count"]
+                pm = probe_tiff(payload)
+                bad = patch_entry(payload, *fault)
+                try:
+                    decode_tiff(bad)
+                    refused = False
+                except MediaFormatError:
+                    pb = probe_tiff(bad)
+                    refused = (pb["width"], pb["height"]) == (w, h)
                 rows.append(
                     {
                         "media_id": mid,
+                        "variant": names[mid],
                         "width": dw,
                         "height": dh,
-                        "byte_order": "II" if le else "MM",
-                        "bits": bits,
-                        "compression": cname,
-                        "predictor": pred,
-                        "n_tiles": ((w + 15) // 16) * ((h + 15) // 16),
-                        "rgb_md5": hashlib.md5(
+                        "n_blocks": strips + tiles,
+                        "rgb_md5": None if lossy else hashlib.md5(
                             out.hex().encode()
                         ).hexdigest(),
-                        "roundtrip_exact": int(out == expected),
-                        "probe_agrees": agrees,
-                        "misaligned_quarantined": mis_q,
+                        "decoded_ok": int(ok),
+                        "probe_agrees": int(
+                            (pm["width"], pm["height"], pm["n_strips"])
+                            == (dw, dh, strips) == (w, h, strips)
+                        ),
+                        "fault_refused": int(refused),
                     }
                 )
             yield pd.DataFrame(
                 rows,
                 columns=[
-                    "media_id", "width", "height", "byte_order",
-                    "bits", "compression", "predictor", "n_tiles",
-                    "rgb_md5", "roundtrip_exact",
-                    "probe_agrees", "misaligned_quarantined",
+                    "media_id", "variant", "width", "height", "n_blocks",
+                    "rgb_md5", "decoded_ok", "probe_agrees", "fault_refused",
                 ],
             )
 
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, width int, height int, byte_order string, "
-        "bits int, compression string, predictor int, n_tiles int, "
-        "rgb_md5 string, roundtrip_exact int, "
-        "probe_agrees int, misaligned_quarantined int",
-    )
-
-
-@query(
-    "image_tiff_palette",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
-      SELECT media_id, dg,
-             9 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 24 AS w,
-             9 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 16 AS h
-      FROM base
-    ), idxc AS (
-      SELECT media_id, dg, w, h,
-             substr(
-               string_agg(sha256(dg || '-' || i), '' ORDER BY i),
-               1, 2 * w * h
-             ) AS idxhex
-      FROM dims CROSS JOIN range(24) r(i)
-      WHERE i < CEIL(w * h / 32.0)
-      GROUP BY media_id, dg, w, h
-    ), cmc AS (
-      SELECT media_id, w, h, idxhex,
-             string_agg(sha256(dg || '-cm-' || i), '' ORDER BY i)
-               AS cmhex
-      FROM idxc CROSS JOIN range(24) r(i)
-      GROUP BY media_id, w, h, idxhex
-    ), px AS (
-      SELECT media_id, w, h,
-        array_to_string(
-          list_transform(
-            range(CAST(w * h AS BIGINT)),
-            j -> substr(cmhex,
-                   2 * CAST(('0x' || substr(idxhex,
-                        CAST(2 * j + 1 AS INT), 2)) AS INT) + 1, 2)
-              || substr(cmhex,
-                   2 * (256 + CAST(('0x' || substr(idxhex,
-                        CAST(2 * j + 1 AS INT), 2)) AS INT)) + 1, 2)
-              || substr(cmhex,
-                   2 * (512 + CAST(('0x' || substr(idxhex,
-                        CAST(2 * j + 1 AS INT), 2)) AS INT)) + 1, 2)
-          ), ''
-        ) AS rgbhex
-      FROM cmc
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CASE media_id % 4 WHEN 0 THEN 'none' WHEN 1 THEN 'lzw'
-                             WHEN 2 THEN 'packbits' ELSE 'deflate' END
-             AS compression,
-           md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS short_cmap_quarantined
-    FROM px
-    """,
-)
-def image_tiff_palette(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PALETTE-COLOR TIFF decode (round 15): PhotometricInterpretation
-    3 — 8-bit indices through a 3x256 16-bit ColorMap (the layout old
-    scanned-document crawls actually carry).  Per document, indices
-    AND the colormap derive from sha256 hex chains both engines can
-    compute: colormap values are high-byte-exact (hb << 8), so the
-    decoded pixel bytes are pure chain lookups the oracle replays
-    with substr arithmetic.
-
-    Oracle-pinned columns: geometry/compression from the digest;
-    ``rgb_md5`` — md5 of the decoded RGB hex (index → R,G,B high
-    bytes) across all four compression schemes;
-    ``short_cmap_quarantined=1`` — the same fixture with its ColorMap
-    count patched short refuses to decode while the probe still reads
-    its dims.
-
-    Scale shape: mapInPandas, payloads never shuffle — same as every
-    media lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-        import struct as st
-
-        from reindexer_spark.codecs import (
-            MediaFormatError,
-            _decode_image,
-            probe_media,
+    return (
+        docs.select("doc_id", "text")
+        .repartition(len(names))
+        .mapInPandas(
+            build_and_decode,
+            "media_id bigint, variant string, width int, height int, "
+            "n_blocks int, rgb_md5 string, decoded_ok int, "
+            "probe_agrees int, fault_refused int",
         )
-        from reindexer_spark.tiff import TAG_COLORMAP, encode_tiff_palette
-
-        def with_short_cmap(payload: bytes) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COLORMAP:
-                    st.pack_into("<I", buf, e + 4, 300)  # count cut
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a ColorMap tag")
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 9 + int(dg[0:2], 16) % 24
-                h = 9 + int(dg[2:4], 16) % 16
-                comp, cname = (
-                    (1, "none"), (5, "lzw"), (32773, "packbits"),
-                    (8, "deflate"),
-                )[mid % 4]
-                idxhex = "".join(
-                    hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                    for i in range((w * h + 31) // 32)
-                )[: 2 * w * h]
-                idx = bytes.fromhex(idxhex)
-                cmbytes = bytes.fromhex("".join(
-                    hashlib.sha256(f"{dg}-cm-{i}".encode()).hexdigest()
-                    for i in range(24)
-                ))
-                colormap = [b << 8 for b in cmbytes]
-                payload = encode_tiff_palette(
-                    w, h, idx, colormap, le=True, compression=comp
-                )
-                dw, dh, out = _decode_image("tiff", payload)
-                pm = probe_media(payload)
-                agrees = int(
-                    pm["kind"] == "tiff"
-                    and pm["width"] == dw
-                    and pm["height"] == dh
-                )
-                bad = with_short_cmap(payload)
-                try:
-                    _decode_image("tiff", bad)
-                    cq = 0
-                except MediaFormatError:
-                    cq = int(probe_media(bad)["width"] == dw)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "compression": cname,
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "probe_agrees": agrees,
-                        "short_cmap_quarantined": cq,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "compression",
-                    "rgb_md5", "probe_agrees",
-                    "short_cmap_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, width int, height int, compression string, "
-        "rgb_md5 string, probe_agrees int, short_cmap_quarantined int",
     )
 
 
@@ -4612,177 +4357,6 @@ def image_orient_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@query(
-    "image_tiff_jpeg",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
-      SELECT media_id,
-             21 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 28 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 24 AS h,
-             5 + CAST(('0x' || substr(dg, 5, 2)) AS INT) % 11 AS rps,
-             75 + CAST(('0x' || substr(dg, 7, 2)) AS INT) % 20 AS q
-      FROM base
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST(rps AS INT) AS rows_per_strip,
-           CAST(q AS INT) AS quality,
-           CAST((h + rps - 1) // rps AS INT) AS n_strips,
-           CASE WHEN media_id % 2 = 0 THEN 'tables' ELSE 'inline' END
-             AS layout,
-           CAST(1 AS INT) AS splice_matches_inline,
-           CAST(1 AS INT) AS lossy_close,
-           CAST(1 AS INT) AS tables_smaller,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS old_style_quarantined
-    FROM dims
-    """,
-)
-def image_tiff_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """New-style JPEG-in-TIFF decode (round 16 — Compression 7, TIFF
-    Technical Note 2): per document, derive digest RGB + a digest
-    strip/quality geometry, write BOTH layouts — shared DQT/DHT hoisted
-    into a JPEGTables (347) abbreviated stream, and self-contained
-    per-strip streams — and decode through the production TIFF path
-    (tiff.py:_decode_tiff_jpeg → codecs.decode_jpeg_baseline per
-    strip).
-
-    JPEG output bytes are not SQL-computable (lossy DCT), so the
-    oracle pins the INVARIANTS the decode must satisfy instead of a
-    pixel hash — the house pattern for every lossy lane:
-    ``splice_matches_inline=1`` (the JPEGTables splice decodes
-    byte-identically to the same strips with tables inlined — this
-    ties the splice path to decode_jpeg_baseline, whose own
-    correctness is held by the multimodal_*_sig byte-identity gates
-    and tools/jpeg_ab.py), ``lossy_close=1`` (mean |err| < 25 vs the
-    digest source at q>=75), ``tables_smaller=1`` (the layout's
-    raison d'être), ``probe_agrees=1``, and
-    ``old_style_quarantined=1`` (the same fixture patched to
-    Compression 6 refuses by name while the probe still reads dims).
-    Geometry columns are digest arithmetic both engines compute.
-
-    Reference surface: the reference shells media work out to external
-    tooling (SURVEY §0 — ingest.go:17-38); this is the native
-    scanned-document-crawl format those pipelines hit constantly.
-
-    Scale shape: mapInPandas, payloads never shuffle — same as every
-    media lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-        import struct as st
-
-        import numpy as np
-
-        from reindexer_spark.codecs import MediaFormatError
-        from reindexer_spark.tiff import (
-            TAG_COMPRESSION,
-            decode_tiff,
-            encode_tiff_jpeg,
-            probe_tiff,
-        )
-
-        def with_compression(payload: bytes, val: int) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into("<H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 21 + int(dg[0:2], 16) % 28
-                h = 17 + int(dg[2:4], 16) % 24
-                rps = 5 + int(dg[4:6], 16) % 11
-                q = 75 + int(dg[6:8], 16) % 20
-                nbytes = w * h * 3
-                src = bytes.fromhex(
-                    "".join(
-                        hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                        for i in range((nbytes + 31) // 32)
-                    )[: 2 * nbytes]
-                )
-                p_tab = encode_tiff_jpeg(
-                    w, h, src, quality=q, rows_per_strip=rps,
-                    tables_mode=True,
-                )
-                p_inl = encode_tiff_jpeg(
-                    w, h, src, quality=q, rows_per_strip=rps,
-                    tables_mode=False,
-                )
-                mine = p_tab if mid % 2 == 0 else p_inl
-                dw, dh, out = decode_tiff(mine)
-                splice_ok = int(
-                    decode_tiff(p_tab) == decode_tiff(p_inl)
-                )
-                a = np.frombuffer(out, dtype=np.uint8).astype(np.int64)
-                b = np.frombuffer(src, dtype=np.uint8).astype(np.int64)
-                close = int(float(np.abs(a - b).mean()) < 25.0)
-                pm = probe_tiff(mine)
-                agrees = int(
-                    pm["compression"] == 7
-                    and pm["width"] == dw == w
-                    and pm["height"] == dh == h
-                    and pm["n_strips"] == (h + rps - 1) // rps
-                )
-                old = with_compression(mine, 6)
-                try:
-                    decode_tiff(old)
-                    old_q = 0
-                except MediaFormatError:
-                    old_q = int(probe_tiff(old)["width"] == w)
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "rows_per_strip": rps,
-                        "quality": q,
-                        "n_strips": (h + rps - 1) // rps,
-                        "layout": "tables" if mid % 2 == 0 else "inline",
-                        "splice_matches_inline": splice_ok,
-                        "lossy_close": close,
-                        "tables_smaller": int(len(p_tab) < len(p_inl)),
-                        "probe_agrees": agrees,
-                        "old_style_quarantined": old_q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "rows_per_strip",
-                    "quality", "n_strips", "layout",
-                    "splice_matches_inline", "lossy_close",
-                    "tables_smaller", "probe_agrees",
-                    "old_style_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, width int, height int, rows_per_strip int, "
-        "quality int, n_strips int, layout string, "
-        "splice_matches_inline int, lossy_close int, tables_smaller int, "
-        "probe_agrees int, old_style_quarantined int",
-    )
-
-
 WEBP_ANIM_DOCS = 16
 
 
@@ -5032,887 +4606,4 @@ def webp_anim_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "duration_ms bigint, total_ms bigint, mid_frame_idx int, "
             "rgb_md5 string, lossy_quarantined int, still_rejected int",
         )
-    )
-
-
-@query(
-    "image_tiff_ccitt",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), g AS (
-      SELECT media_id, dg,
-             21 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 40 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 20 AS h,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6,
-             CAST(('0x' || substr(dg, 15, 2)) AS INT) AS s7,
-             CAST(('0x' || substr(dg, 17, 2)) AS INT) AS s8,
-             CAST(('0x' || substr(dg, 19, 2)) AS INT) AS s9,
-             CAST(('0x' || substr(dg, 21, 2)) AS INT) AS s10
-      FROM base
-    ), r AS (
-      SELECT media_id, dg, w, h, s10,
-             s2 % w AS x1, s4 % h AS y1,
-             1 + s3 % (w - s2 % w) AS w1,
-             1 + s5 % (h - s4 % h) AS h1,
-             s6 % w AS x2, s8 % h AS y2,
-             1 + s7 % (w - s6 % w) AS w2,
-             1 + s9 % (h - s8 % h) AS h2
-      FROM g
-    ), nchain AS (
-      SELECT media_id,
-             string_agg(sha256(dg || '-n-' || i), '' ORDER BY i) AS nz
-      FROM r CROSS JOIN range(8) rr(i)
-      WHERE i < CEIL(2 * w / 64.0)
-      GROUP BY media_id
-    ), px AS (
-      SELECT r.media_id, r.w, r.h, r.s10,
-        array_to_string(
-          list_transform(range(CAST(r.h * r.w AS BIGINT)), i ->
-            CASE WHEN
-              ((i // r.w) >= r.y1 AND (i // r.w) < r.y1 + r.h1
-               AND (i % r.w) >= r.x1 AND (i % r.w) < r.x1 + r.w1)
-              OR
-              ((i // r.w) >= r.y2 AND (i // r.w) < r.y2 + r.h2
-               AND (i % r.w) >= r.x2 AND (i % r.w) < r.x2 + r.w2)
-              OR
-              ((i // r.w) >= r.h - 2
-               AND CAST(('0x' || substr(nchain.nz,
-                    CAST(((i // r.w) - (r.h - 2)) * r.w + (i % r.w)
-                         + 1 AS INT), 1)) AS INT) % 2 = 1)
-            THEN '000000' ELSE 'ffffff' END), '') AS rgbhex
-      FROM r JOIN nchain ON nchain.media_id = r.media_id
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST((h + (5 + s10 % 7) - 1) // (5 + s10 % 7) AS INT)
-             AS n_strips,
-           CASE WHEN media_id % 2 = 0 THEN 'msb' ELSE 'lsb' END
-             AS fillorder,
-           md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS g4_smaller,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS g3_quarantined
-    FROM px
-    """,
-)
-def image_tiff_ccitt(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCITT GROUP 4 TIFF decode (round 16 — VERDICT r15 ask #6, THE
-    fax/scanned-document compression): per document, derive a bilevel
-    page — two digest rectangles (the V/P-mode content fax pages are
-    made of) over a white canvas plus two digest-noise rows (H-mode
-    coverage) — write it as a real Compression-4 TIFF (per-strip T.6
-    streams restarting against the all-white reference line,
-    FillOrder alternating MSB/LSB), and decode through the production
-    TIFF path (tiff.py:_decode_tiff_g4 → ccitt.g4_decode).
-
-    Value-exact oracle: T.6 is lossless and the page is digest
-    arithmetic, so DuckDB recomputes every decoded pixel
-    (``rgb_md5``), the strip count, and the geometry.
-    ``roundtrip_exact=1`` (decoded bits == the source page);
-    ``g4_smaller=1`` (summed strip bytes < the packed 1-bit raster —
-    the reason fax uses it); ``probe_agrees=1``;
-    ``g3_quarantined=1`` (the same fixture patched to Compression 3
-    refuses — its T.6 strip bytes are not an EOL-framed G3 stream —
-    while the probe still reads dims; G3 proper DECODES since late
-    round 16, see ``image_tiff_g3``).  The T.4/T.6
-    table transcription itself is externally pinned by
-    tests/test_ccitt.py (published codewords + prefix/Kraft
-    structure).
-
-    Reference surface: the reference delegates image handling to
-    external tooling (SURVEY §0); scanned-document crawls hit G4
-    constantly (the round-15 VERDICT's top media-gap list).
-
-    Scale shape: mapInPandas, payloads never shuffle — same as every
-    media lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-        import struct as st
-
-        import numpy as np
-
-        from reindexer_spark.codecs import MediaFormatError
-        from reindexer_spark.tiff import (
-            TAG_COMPRESSION,
-            decode_tiff,
-            encode_tiff_g4,
-            probe_tiff,
-        )
-
-        def with_compression(payload: bytes, val: int) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into("<H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
-
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                mid = int(rr.doc_id)
-                dg = hashlib.sha256(rr.text.encode("utf-8")).hexdigest()
-                s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
-                w = 21 + s[0] % 40
-                h = 17 + s[1] % 20
-                x1, y1 = s[2] % w, s[4] % h
-                w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
-                x2, y2 = s[6] % w, s[8] % h
-                w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
-                rps = 5 + s[10] % 7
-                page = np.zeros((h, w), dtype=np.uint8)
-                page[y1 : y1 + h1, x1 : x1 + w1] = 1
-                page[y2 : y2 + h2, x2 : x2 + w2] = 1
-                nz = "".join(
-                    hashlib.sha256(f"{dg}-n-{i}".encode()).hexdigest()
-                    for i in range((2 * w + 63) // 64)
-                )
-                for j in range(2 * w):
-                    if int(nz[j], 16) % 2:
-                        page[h - 2 + j // w, j % w] = 1
-                flat = bytearray(page.reshape(-1).tolist())
-                fo = 1 if mid % 2 == 0 else 2
-                payload = encode_tiff_g4(
-                    w, h, flat, rows_per_strip=rps, fillorder=fo
-                )
-                dw, dh, rgb = decode_tiff(payload)
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
-                exact = int(np.array_equal(decoded_bits, page))
-                pm = probe_tiff(payload)
-                n_strips = (h + rps - 1) // rps
-                agrees = int(
-                    pm["compression"] == 4
-                    and pm["width"] == dw == w
-                    and pm["height"] == dh == h
-                    and pm["bits"] == 1
-                    and pm["n_strips"] == n_strips
-                )
-                # strip bytes vs the packed 1-bit raster
-                from reindexer_spark.ccitt import g4_encode
-
-                strip_bytes = sum(
-                    len(
-                        g4_encode(
-                            flat[r0 * w : min(r0 + rps, h) * w],
-                            w,
-                            min(rps, h - r0),
-                            fillorder=fo,
-                        )
-                    )
-                    for r0 in range(0, h, rps)
-                )
-                smaller = int(strip_bytes < ((w + 7) // 8) * h)
-                try:
-                    decode_tiff(with_compression(payload, 3))
-                    g3q = 0
-                except MediaFormatError:
-                    g3q = int(
-                        probe_tiff(with_compression(payload, 3))["width"]
-                        == w
-                    )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "n_strips": n_strips,
-                        "fillorder": "msb" if fo == 1 else "lsb",
-                        "rgb_md5": hashlib.md5(
-                            rgb.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": exact,
-                        "g4_smaller": smaller,
-                        "probe_agrees": agrees,
-                        "g3_quarantined": g3q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_strips",
-                    "fillorder", "rgb_md5", "roundtrip_exact",
-                    "g4_smaller", "probe_agrees", "g3_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, width int, height int, n_strips int, "
-        "fillorder string, rgb_md5 string, roundtrip_exact int, "
-        "g4_smaller int, probe_agrees int, g3_quarantined int",
-    )
-
-
-@query(
-    "image_tiff_mh",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), g AS (
-      SELECT media_id, dg,
-             21 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 40 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 20 AS h,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6,
-             CAST(('0x' || substr(dg, 15, 2)) AS INT) AS s7,
-             CAST(('0x' || substr(dg, 17, 2)) AS INT) AS s8,
-             CAST(('0x' || substr(dg, 19, 2)) AS INT) AS s9,
-             CAST(('0x' || substr(dg, 21, 2)) AS INT) AS s10
-      FROM base
-    ), r AS (
-      SELECT media_id, dg, w, h, s10,
-             s2 % w AS x1, s4 % h AS y1,
-             1 + s3 % (w - s2 % w) AS w1,
-             1 + s5 % (h - s4 % h) AS h1,
-             s6 % w AS x2, s8 % h AS y2,
-             1 + s7 % (w - s6 % w) AS w2,
-             1 + s9 % (h - s8 % h) AS h2
-      FROM g
-    ), nchain AS (
-      SELECT media_id,
-             string_agg(sha256(dg || '-n-' || i), '' ORDER BY i) AS nz
-      FROM r CROSS JOIN range(8) rr(i)
-      WHERE i < CEIL(2 * w / 64.0)
-      GROUP BY media_id
-    ), px AS (
-      SELECT r.media_id, r.w, r.h, r.s10,
-        array_to_string(
-          list_transform(range(CAST(r.h * r.w AS BIGINT)), i ->
-            CASE WHEN
-              ((i // r.w) >= r.y1 AND (i // r.w) < r.y1 + r.h1
-               AND (i % r.w) >= r.x1 AND (i % r.w) < r.x1 + r.w1)
-              OR
-              ((i // r.w) >= r.y2 AND (i // r.w) < r.y2 + r.h2
-               AND (i % r.w) >= r.x2 AND (i % r.w) < r.x2 + r.w2)
-              OR
-              ((i // r.w) >= r.h - 2
-               AND CAST(('0x' || substr(nchain.nz,
-                    CAST(((i // r.w) - (r.h - 2)) * r.w + (i % r.w)
-                         + 1 AS INT), 1)) AS INT) % 2 = 1)
-            THEN '000000' ELSE 'ffffff' END), '') AS rgbhex
-      FROM r JOIN nchain ON nchain.media_id = r.media_id
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST((h + (5 + s10 % 7) - 1) // (5 + s10 % 7) AS INT)
-             AS n_strips,
-           CASE WHEN media_id % 2 = 0 THEN 'msb' ELSE 'lsb' END
-             AS fillorder,
-           md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS mh_smaller,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS g3_quarantined
-    FROM px
-    """,
-)
-def image_tiff_mh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCITT 1-D MODIFIED-HUFFMAN TIFF decode (round 16 — TIFF
-    Compression 2, the RLE layer under G3 that legacy fax archives
-    carry): the same digest bilevel page as ``image_tiff_ccitt`` —
-    two rectangles plus two noise rows — written as per-strip T.4
-    1-D run sequences with BYTE-ALIGNED rows (TIFF 6.0 §10) over the
-    identical transcribed run tables, alternating MSB/LSB FillOrder,
-    decoded through the production path
-    (tiff.py:_decode_tiff_g4 → ccitt.mh_decode).
-
-    Value-exact oracle: MH is lossless, so DuckDB recomputes every
-    decoded pixel (``rgb_md5``) plus the geometry;
-    ``g3_quarantined=1`` pins that the fixture patched to
-    Compression 3 refuses (MH rows are not EOL-framed);
-    ``mh_smaller=1`` compares the summed
-    strip bytes against the packed 1-bit raster.  The table
-    transcription shares tests/test_ccitt.py's external pins with
-    the G4 lane.
-
-    Scale shape: mapInPandas, payloads never shuffle — same as every
-    media lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-        import struct as st
-
-        import numpy as np
-
-        from reindexer_spark.codecs import MediaFormatError
-        from reindexer_spark.tiff import (
-            TAG_COMPRESSION,
-            decode_tiff,
-            encode_tiff_g4,
-            probe_tiff,
-        )
-
-        def with_compression(payload: bytes, val: int) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into("<H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
-
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                mid = int(rr.doc_id)
-                dg = hashlib.sha256(rr.text.encode("utf-8")).hexdigest()
-                s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
-                w = 21 + s[0] % 40
-                h = 17 + s[1] % 20
-                x1, y1 = s[2] % w, s[4] % h
-                w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
-                x2, y2 = s[6] % w, s[8] % h
-                w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
-                rps = 5 + s[10] % 7
-                page = np.zeros((h, w), dtype=np.uint8)
-                page[y1 : y1 + h1, x1 : x1 + w1] = 1
-                page[y2 : y2 + h2, x2 : x2 + w2] = 1
-                nz = "".join(
-                    hashlib.sha256(f"{dg}-n-{i}".encode()).hexdigest()
-                    for i in range((2 * w + 63) // 64)
-                )
-                for j in range(2 * w):
-                    if int(nz[j], 16) % 2:
-                        page[h - 2 + j // w, j % w] = 1
-                flat = bytearray(page.reshape(-1).tolist())
-                fo = 1 if mid % 2 == 0 else 2
-                payload = encode_tiff_g4(
-                    w, h, flat, rows_per_strip=rps, fillorder=fo,
-                    compression=2,
-                )
-                dw, dh, rgb = decode_tiff(payload)
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
-                exact = int(np.array_equal(decoded_bits, page))
-                pm = probe_tiff(payload)
-                n_strips = (h + rps - 1) // rps
-                agrees = int(
-                    pm["compression"] == 2
-                    and pm["width"] == dw == w
-                    and pm["height"] == dh == h
-                    and pm["bits"] == 1
-                    and pm["n_strips"] == n_strips
-                )
-                # strip bytes vs the packed 1-bit raster
-                from reindexer_spark.ccitt import mh_encode
-
-                strip_bytes = sum(
-                    len(
-                        mh_encode(
-                            flat[r0 * w : min(r0 + rps, h) * w],
-                            w,
-                            min(rps, h - r0),
-                            fillorder=fo,
-                        )
-                    )
-                    for r0 in range(0, h, rps)
-                )
-                smaller = int(strip_bytes < ((w + 7) // 8) * h)
-                try:
-                    decode_tiff(with_compression(payload, 3))
-                    g3q = 0
-                except MediaFormatError:
-                    g3q = int(
-                        probe_tiff(with_compression(payload, 3))["width"]
-                        == w
-                    )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "n_strips": n_strips,
-                        "fillorder": "msb" if fo == 1 else "lsb",
-                        "rgb_md5": hashlib.md5(
-                            rgb.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": exact,
-                        "mh_smaller": smaller,
-                        "probe_agrees": agrees,
-                        "g3_quarantined": g3q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_strips",
-                    "fillorder", "rgb_md5", "roundtrip_exact",
-                    "mh_smaller", "probe_agrees", "g3_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, width int, height int, n_strips int, "
-        "fillorder string, rgb_md5 string, roundtrip_exact int, "
-        "mh_smaller int, probe_agrees int, g3_quarantined int",
-    )
-
-
-@query(
-    "image_tiff_g3",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), g AS (
-      SELECT media_id, dg,
-             21 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 40 AS w,
-             17 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 20 AS h,
-             CAST(('0x' || substr(dg, 5, 2)) AS INT) AS s2,
-             CAST(('0x' || substr(dg, 7, 2)) AS INT) AS s3,
-             CAST(('0x' || substr(dg, 9, 2)) AS INT) AS s4,
-             CAST(('0x' || substr(dg, 11, 2)) AS INT) AS s5,
-             CAST(('0x' || substr(dg, 13, 2)) AS INT) AS s6,
-             CAST(('0x' || substr(dg, 15, 2)) AS INT) AS s7,
-             CAST(('0x' || substr(dg, 17, 2)) AS INT) AS s8,
-             CAST(('0x' || substr(dg, 19, 2)) AS INT) AS s9,
-             CAST(('0x' || substr(dg, 21, 2)) AS INT) AS s10
-      FROM base
-    ), r AS (
-      SELECT media_id, dg, w, h, s10,
-             s2 % w AS x1, s4 % h AS y1,
-             1 + s3 % (w - s2 % w) AS w1,
-             1 + s5 % (h - s4 % h) AS h1,
-             s6 % w AS x2, s8 % h AS y2,
-             1 + s7 % (w - s6 % w) AS w2,
-             1 + s9 % (h - s8 % h) AS h2
-      FROM g
-    ), nchain AS (
-      SELECT media_id,
-             string_agg(sha256(dg || '-n-' || i), '' ORDER BY i) AS nz
-      FROM r CROSS JOIN range(8) rr(i)
-      WHERE i < CEIL(2 * w / 64.0)
-      GROUP BY media_id
-    ), px AS (
-      SELECT r.media_id, r.w, r.h, r.s10,
-        array_to_string(
-          list_transform(range(CAST(r.h * r.w AS BIGINT)), i ->
-            CASE WHEN
-              ((i // r.w) >= r.y1 AND (i // r.w) < r.y1 + r.h1
-               AND (i % r.w) >= r.x1 AND (i % r.w) < r.x1 + r.w1)
-              OR
-              ((i // r.w) >= r.y2 AND (i // r.w) < r.y2 + r.h2
-               AND (i % r.w) >= r.x2 AND (i % r.w) < r.x2 + r.w2)
-              OR
-              ((i // r.w) >= r.h - 2
-               AND CAST(('0x' || substr(nchain.nz,
-                    CAST(((i // r.w) - (r.h - 2)) * r.w + (i % r.w)
-                         + 1 AS INT), 1)) AS INT) % 2 = 1)
-            THEN '000000' ELSE 'ffffff' END), '') AS rgbhex
-      FROM r JOIN nchain ON nchain.media_id = r.media_id
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST((h + (5 + s10 % 7) - 1) // (5 + s10 % 7) AS INT)
-             AS n_strips,
-           CASE WHEN media_id % 2 = 0 THEN 'msb' ELSE 'lsb' END
-             AS fillorder,
-           md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS eol_framed,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS g3_quarantined
-    FROM px
-    """,
-)
-def image_tiff_g3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CCITT GROUP 3 PROPER TIFF decode (late round 16 — TIFF
-    Compression 3, the EOL-framed T.4 layer, completing the CCITT
-    family): the same digest bilevel page as ``image_tiff_ccitt``,
-    written as per-strip Group-3 streams — EOL before every line,
-    and on even media_ids T4Options bit 0 turns on the per-line
-    1-D/2-D mode tags (2-D lines share the T.6 vertical/horizontal/
-    pass machinery, K-factor 4 resync) — decoded through the
-    production path (tiff.py:_decode_tiff_g4 → ccitt.g3_decode).
-
-    Value-exact oracle: G3 is lossless, so DuckDB recomputes every
-    decoded pixel (``rgb_md5``) plus the geometry;
-    ``g3_quarantined=1`` here pins the OPTION boundary — the same
-    fixture with T4Options' uncompressed-mode bit set refuses by
-    name while the probe still reads dims.  The run/mode tables
-    share tests/test_ccitt.py's external pins.
-
-    Scale shape: mapInPandas, payloads never shuffle — same as every
-    media lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-        import struct as st
-
-        import numpy as np
-
-        from reindexer_spark.codecs import MediaFormatError
-        from reindexer_spark.tiff import (
-            TAG_COMPRESSION,
-            decode_tiff,
-            encode_tiff_g4,
-            probe_tiff,
-        )
-
-        def with_compression(payload: bytes, val: int) -> bytes:
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from("<I", buf, 4)
-            (n,) = st.unpack_from("<H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from("<H", buf, e)[0] == TAG_COMPRESSION:
-                    st.pack_into("<H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a Compression tag")
-
-        for pdf in batches:
-            rows = []
-            for rr in pdf.itertuples(index=False):
-                mid = int(rr.doc_id)
-                dg = hashlib.sha256(rr.text.encode("utf-8")).hexdigest()
-                s = [int(dg[2 * i : 2 * i + 2], 16) for i in range(11)]
-                w = 21 + s[0] % 40
-                h = 17 + s[1] % 20
-                x1, y1 = s[2] % w, s[4] % h
-                w1, h1 = 1 + s[3] % (w - x1), 1 + s[5] % (h - y1)
-                x2, y2 = s[6] % w, s[8] % h
-                w2, h2 = 1 + s[7] % (w - x2), 1 + s[9] % (h - y2)
-                rps = 5 + s[10] % 7
-                page = np.zeros((h, w), dtype=np.uint8)
-                page[y1 : y1 + h1, x1 : x1 + w1] = 1
-                page[y2 : y2 + h2, x2 : x2 + w2] = 1
-                nz = "".join(
-                    hashlib.sha256(f"{dg}-n-{i}".encode()).hexdigest()
-                    for i in range((2 * w + 63) // 64)
-                )
-                for j in range(2 * w):
-                    if int(nz[j], 16) % 2:
-                        page[h - 2 + j // w, j % w] = 1
-                flat = bytearray(page.reshape(-1).tolist())
-                fo = 1 if mid % 2 == 0 else 2
-                payload = encode_tiff_g4(
-                    w, h, flat, rows_per_strip=rps, fillorder=fo,
-                    compression=3, t4_2d=(mid % 2 == 0),
-                )
-                dw, dh, rgb = decode_tiff(payload)
-                a = np.frombuffer(rgb, dtype=np.uint8).reshape(h, w, 3)
-                decoded_bits = (a[:, :, 0] == 0).astype(np.uint8)
-                exact = int(np.array_equal(decoded_bits, page))
-                pm = probe_tiff(payload)
-                n_strips = (h + rps - 1) // rps
-                agrees = int(
-                    pm["compression"] == 3
-                    and pm["width"] == dw == w
-                    and pm["height"] == dh == h
-                    and pm["bits"] == 1
-                    and pm["n_strips"] == n_strips
-                )
-                # strip bytes vs the packed 1-bit raster
-                # the G3 signature: every strip opens with (fill+)EOL
-                first_off = None
-                buf0 = payload
-                (ifd0,) = st.unpack_from("<I", buf0, 4)
-                (n0,) = st.unpack_from("<H", buf0, ifd0)
-                for i0 in range(n0):
-                    e0 = ifd0 + 2 + 12 * i0
-                    if st.unpack_from("<H", buf0, e0)[0] == 273:
-                        (voff0,) = st.unpack_from("<I", buf0, e0 + 8)
-                        (first_off,) = st.unpack_from("<I", buf0, voff0)
-                        break
-                sb = payload[first_off : first_off + 2]
-                if fo == 2:
-                    sb = bytes(
-                        int(f"{b:08b}"[::-1], 2) for b in sb
-                    )
-                bits16 = (sb[0] << 8) | sb[1]
-                # first 12 bits must be 000000000001 (no leading fill
-                # in this encoder's output)
-                smaller = int(bits16 >> 4 == 1)
-                from reindexer_spark.tiff import TAG_T4_OPTIONS
-
-                def with_t4opts(p2: bytes, val: int) -> bytes:
-                    buf = bytearray(p2)
-                    (ifd,) = st.unpack_from("<I", buf, 4)
-                    (n2,) = st.unpack_from("<H", buf, ifd)
-                    for i2 in range(n2):
-                        e2 = ifd + 2 + 12 * i2
-                        if st.unpack_from("<H", buf, e2)[0] == TAG_T4_OPTIONS:
-                            st.pack_into("<I", buf, e2 + 8, val)
-                            return bytes(buf)
-                    raise MediaFormatError("fixture lacks T4Options")
-
-                try:
-                    decode_tiff(with_t4opts(payload, 2))
-                    g3q = 0
-                except MediaFormatError:
-                    g3q = int(
-                        probe_tiff(with_t4opts(payload, 2))["width"] == w
-                    )
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "n_strips": n_strips,
-                        "fillorder": "msb" if fo == 1 else "lsb",
-                        "rgb_md5": hashlib.md5(
-                            rgb.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": exact,
-                        "eol_framed": smaller,
-                        "probe_agrees": agrees,
-                        "g3_quarantined": g3q,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "n_strips",
-                    "fillorder", "rgb_md5", "roundtrip_exact",
-                    "eol_framed", "probe_agrees", "g3_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, width int, height int, n_strips int, "
-        "fillorder string, rgb_md5 string, roundtrip_exact int, "
-        "eol_framed int, probe_agrees int, g3_quarantined int",
-    )
-
-
-@query(
-    "image_tiff_planar",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id AS media_id, sha256(text) AS dg
-      FROM documents WHERE doc_id < {TIFF_DOCS}
-    ), dims AS (
-      SELECT media_id, dg,
-             15 + CAST(('0x' || substr(dg, 1, 2)) AS INT) % 24 AS w,
-             11 + CAST(('0x' || substr(dg, 3, 2)) AS INT) % 18 AS h,
-             CASE WHEN media_id % 2 = 0 THEN 16 ELSE 8 END AS bits,
-             CASE WHEN media_id % 3 <> 0 THEN 1 ELSE 0 END AS le,
-             4 + CAST(('0x' || substr(dg, 5, 2)) AS INT) % 6 AS rps
-      FROM base
-    ), chain AS (
-      SELECT media_id, w, h, bits, le, rps,
-             substr(
-               string_agg(sha256(dg || '-' || i), '' ORDER BY i),
-               1,
-               2 * w * h * 3 * (bits // 8)
-             ) AS hexsrc
-      FROM dims CROSS JOIN range(600) r(i)
-      WHERE i < CEIL(w * h * 3 * (bits // 8) / 32.0)
-      GROUP BY media_id, w, h, bits, le, rps, dg
-    ), px AS (
-      -- decoded pixels are the HIGH byte of each sample (the tiled
-      -- lane's convention): for 8-bit the chain itself; for 16-bit
-      -- the first (MM) or second (II) byte of each 2-byte sample
-      SELECT media_id, w, h, bits, le, rps,
-             CASE WHEN bits = 8 THEN hexsrc
-                  WHEN le = 1 THEN array_to_string(
-                    list_transform(
-                      range(CAST(w * h * 3 AS BIGINT)),
-                      j -> substr(hexsrc, CAST(4 * j + 3 AS INT), 2)
-                    ), '')
-                  ELSE array_to_string(
-                    list_transform(
-                      range(CAST(w * h * 3 AS BIGINT)),
-                      j -> substr(hexsrc, CAST(4 * j + 1 AS INT), 2)
-                    ), '')
-             END AS rgbhex
-      FROM chain
-    )
-    SELECT media_id,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CASE WHEN le = 1 THEN 'II' ELSE 'MM' END AS byte_order,
-           CAST(bits AS INT) AS bits,
-           CASE media_id % 4 WHEN 0 THEN 'none' WHEN 1 THEN 'lzw'
-                             WHEN 2 THEN 'packbits' ELSE 'deflate' END
-             AS compression,
-           CAST(CASE WHEN media_id % 4 IN (1, 3) THEN 2 ELSE 1 END
-                AS INT) AS predictor,
-           CAST(3 * ((h + rps - 1) // rps) AS INT) AS n_strips,
-           md5(rgbhex) AS rgb_md5,
-           CAST(1 AS INT) AS roundtrip_exact,
-           CAST(1 AS INT) AS probe_agrees,
-           CAST(1 AS INT) AS patched_interleaved_quarantined
-    FROM px
-    """,
-)
-def image_tiff_planar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PLANAR-CONFIGURATION-2 TIFF decode (round 16 — the separate
-    R/G/B plane layout scientific and scanner TIFFs write): per
-    document, digest samples (8-bit RGB on odd media_ids, full 16-bit
-    samples in the file's byte order on even ones) written as
-    planar-2 strips — ALL of component 0's strips, then component
-    1's, then 2's, with Predictor 2 differencing single-sample rows —
-    and decoded back through the production image path.
-
-    Oracle-pinned: geometry/bits/compression digest arithmetic;
-    ``n_strips`` = 3 × strips-per-image (the planar layout's
-    signature); ``rgb_md5`` — md5 of the decoded pixels' hex (HIGH
-    byte of each sample for 16-bit, matching the tiled lane's
-    convention); ``roundtrip_exact=1``; ``probe_agrees=1``;
-    ``patched_interleaved_quarantined=1`` — an interleaved fixture
-    patched to PlanarConfiguration 2 has the wrong strip count for
-    the planar layout and must refuse rather than decode garbage.
-
-    Scale shape: mapInPandas, payloads never shuffle — same as every
-    media lane."""
-    import pandas as pd
-
-    docs = load_table(spark, sf_dir, "documents").filter(
-        F.col("doc_id") < TIFF_DOCS
-    )
-
-    def build_and_decode(batches):
-        import hashlib
-        import struct as st
-
-        import numpy as np
-
-        from reindexer_spark.codecs import MediaFormatError
-        from reindexer_spark.tiff import (
-            TAG_PLANAR,
-            decode_tiff,
-            encode_tiff,
-            probe_tiff,
-        )
-
-        def patch_planar(payload: bytes, val: int) -> bytes:
-            le = payload[:2] == b"II"
-            f = "<" if le else ">"
-            buf = bytearray(payload)
-            (ifd,) = st.unpack_from(f + "I", buf, 4)
-            (n,) = st.unpack_from(f + "H", buf, ifd)
-            for i in range(n):
-                e = ifd + 2 + 12 * i
-                if st.unpack_from(f + "H", buf, e)[0] == TAG_PLANAR:
-                    st.pack_into(f + "H", buf, e + 8, val)
-                    return bytes(buf)
-            raise MediaFormatError("fixture lacks a PlanarConfig tag")
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                mid = int(r.doc_id)
-                dg = hashlib.sha256(r.text.encode("utf-8")).hexdigest()
-                w = 15 + int(dg[0:2], 16) % 24
-                h = 11 + int(dg[2:4], 16) % 18
-                bits = 16 if mid % 2 == 0 else 8
-                le = mid % 3 != 0
-                rps = 4 + int(dg[4:6], 16) % 6
-                comp, cname, pred = (
-                    (1, "none", 1),
-                    (5, "lzw", 2),
-                    (32773, "packbits", 1),
-                    (8, "deflate", 2),
-                )[mid % 4]
-                nbytes = w * h * 3 * (bits // 8)
-                src = bytes.fromhex(
-                    "".join(
-                        hashlib.sha256(f"{dg}-{i}".encode()).hexdigest()
-                        for i in range((nbytes + 31) // 32)
-                    )[: 2 * nbytes]
-                )
-                if bits == 16:
-                    dt = "<u2" if le else ">u2"
-                    expected = (
-                        np.frombuffer(src, dtype=dt).astype(np.uint16)
-                        >> 8
-                    ).astype(np.uint8).tobytes()
-                else:
-                    expected = src
-                payload = encode_tiff(
-                    w, h, src, le=le, bits=bits, compression=comp,
-                    predictor=pred, planar=2, rows_per_strip=rps,
-                )
-                dw, dh, out = decode_tiff(payload)
-                pm = probe_tiff(payload)
-                n_strips = 3 * ((h + rps - 1) // rps)
-                agrees = int(
-                    pm["kind"] == "tiff"
-                    and pm["width"] == dw
-                    and pm["height"] == dh
-                    and pm["n_strips"] == n_strips
-                )
-                # an interleaved fixture patched to planar 2 refuses
-                inter = encode_tiff(
-                    w, h, src, le=le, bits=bits, compression=comp,
-                    predictor=pred, rows_per_strip=rps,
-                )
-                try:
-                    decode_tiff(patch_planar(inter, 2))
-                    pq = 0
-                except MediaFormatError:
-                    pq = 1
-                rows.append(
-                    {
-                        "media_id": mid,
-                        "width": dw,
-                        "height": dh,
-                        "byte_order": "II" if le else "MM",
-                        "bits": bits,
-                        "compression": cname,
-                        "predictor": pred,
-                        "n_strips": n_strips,
-                        "rgb_md5": hashlib.md5(
-                            out.hex().encode()
-                        ).hexdigest(),
-                        "roundtrip_exact": int(out == expected),
-                        "probe_agrees": agrees,
-                        "patched_interleaved_quarantined": pq,
-                    }
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "width", "height", "byte_order",
-                    "bits", "compression", "predictor", "n_strips",
-                    "rgb_md5", "roundtrip_exact", "probe_agrees",
-                    "patched_interleaved_quarantined",
-                ],
-            )
-
-    return docs.select("doc_id", "text").repartition(TIFF_DOCS).mapInPandas(
-        build_and_decode,
-        "media_id bigint, width int, height int, byte_order string, "
-        "bits int, compression string, predictor int, n_strips int, "
-        "rgb_md5 string, roundtrip_exact int, probe_agrees int, "
-        "patched_interleaved_quarantined int",
     )

@@ -57,6 +57,10 @@ RUNTIME_CONFS = {
     # the ndjson_chunks Python DataSource implements pushFilters;
     # Spark 4.1 gates Python-source pushdown behind this flag
     "spark.sql.python.filterPushdown.enabled": "true",
+    # INT64 TIMESTAMP(NANOS) parquet columns (older events.parquet
+    # vintages) read as raw longs instead of failing the scan;
+    # catalog.load_table and streaming.stream_events convert them
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
 
 

@@ -24,6 +24,7 @@ from __future__ import annotations
 
 import uuid
 
+from pyspark.errors.exceptions.captured import CapturedException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
@@ -32,8 +33,9 @@ from pyspark.sql.streaming.listener import StreamingQueryProgress
 # parquet matches columns by name; `ts` arrives either as a proper
 # TIMESTAMP(MICROS) column (current generator) or as TIMESTAMP(NANOS),
 # which Spark's vectorized reader only accepts as a raw long under the
-# legacy nanosAsLong conf.  The writer's choice is probed from the file
-# footer so both vintages of the testdata stream correctly.
+# legacy nanosAsLong conf (session.RUNTIME_CONFS).  The writer's choice
+# is probed from the file footer so both vintages of the testdata
+# stream correctly.
 EVENTS_SCHEMA_TS = (
     "event_id bigint, ts timestamp, user_id bigint, event_type string, "
     "value double, props string"
@@ -108,7 +110,6 @@ def stream_events(
     microsecond TIMESTAMP regardless of the writer's physical unit
     (same adaptivity as catalog.load_table's batch path)."""
     if _events_ts_is_nanos(sf_dir):
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         raw = _stream_table_source(
             spark, sf_dir, "events", EVENTS_SCHEMA_NANOS,
             max_files_per_trigger,
@@ -152,7 +153,7 @@ def drive_stream(
     stream only (a restarted checkpoint keeps the count it was created
     with); the query is stopped and joined, and its terminated-query
     record dropped, whether it finished or failed — a failure re-raises
-    here."""
+    here, its message ending with its innermost cause's."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     try:
@@ -166,8 +167,23 @@ def drive_stream(
             finally:
                 spark.streams.resetTerminated()
         return q.recentProgress
+    except CapturedException as exc:
+        _name_root_cause(exc)
+        raise
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+def _name_root_cause(exc: CapturedException) -> None:
+    """Append the innermost cause's message to ``exc``'s own.  A failed
+    stream raises STREAM_FAILED naming only the failing operator's
+    error class; what went wrong (e.g. a checkpoint file that fails its
+    checksum, and its path) is in the text of a cause further down."""
+    root = exc
+    while root._cause is not None:
+        root = root._cause
+    if root is not exc:
+        exc._desc = f"{exc._desc}\nCaused by: {root._desc}"
 
 
 def run_stream_to_memory(

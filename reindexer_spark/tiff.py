@@ -7,17 +7,24 @@ layout (§15 — TileWidth/TileLength multiples of 16, edge tiles
 padded), 8-bit or 16-bit samples (16-bit scanned/scientific crawls;
 decode returns the high byte, predictor 2 differences whole 16-bit
 samples in the file's byte order), grayscale (Photometric 1, also
-0 = WhiteIsZero) or RGB (PI 2), chunky planar configuration, both
-byte orders, with Compression 1 (none), 5 (LZW, §13 — MSB-first
-codes with the EarlyChange width rule, encoder+decoder below,
-hand-computed code vector pinned in tests), 8/32946 (Deflate,
-stdlib zlib) and 32773 (PackBits, §9), plus
-horizontal-differencing Predictor 2 (§14).  Everything outside
-raises MediaFormatError — the repo's quarantine contract, never a
-wrong image: CCITT (2/3/4) and JPEG-in-TIFF (6/7) compression,
-planar=2, float/32-bit samples, palettes with 16-bit indices.
-Palette-color images (PI 3, 8-bit indices + 3x256 16-bit ColorMap)
-decode since round 15.
+0 = WhiteIsZero), RGB (PI 2) or palette color (PI 3, 8-bit indices
+into a 3x256 16-bit ColorMap), chunky or planar (PlanarConfiguration
+2, strips only) layout, both byte orders, with Compression 1 (none),
+5 (LZW, §13 — MSB-first codes with the EarlyChange width rule,
+encoder+decoder below, hand-computed code vector pinned in tests),
+8/32946 (Deflate, stdlib zlib) and 32773 (PackBits, §9), plus
+horizontal-differencing Predictor 2 (§14); new-style JPEG-in-TIFF
+(Compression 7, TIFF Technical Note 2: per-strip/tile baseline JPEG
+with optional JPEGTables); and bilevel CCITT — Modified Huffman (2),
+Group 3 1-D/2-D (3) and Group 4 (4), either FillOrder.  Everything
+outside raises MediaFormatError — the repo's quarantine contract,
+never a wrong image: old-style JPEG-in-TIFF (Compression 6),
+float/32-bit samples, palettes with 16-bit indices, planar 2 with
+tiles, CMYK/YCbCr photometrics, RGB-space JPEG and the T.4/T.6
+uncompressed mode.
+
+``TIFF_VARIANTS`` (end of module) is the one table of the shapes the
+writers produce; the ``image_tiff_matrix`` lane decodes one of each.
 
 EXIF scope: parse Make/Model/Orientation/DateTime from IFD0,
 DateTimeOriginal from the Exif sub-IFD, latitude/longitude from the
@@ -619,24 +626,13 @@ def encode_tiff(
             (GPS_LON, 5, _deg_to_rationals(abs(gps_lon_milli))),
         ])
     block, offs = _write_ifds(le, ifds)
-    # strip data appended after the IFD block; patch the offsets
-    data_off = len(block)
-    strip_offs = []
-    pos = data_off
-    for s in strips:
-        strip_offs.append(pos)
-        pos += len(s)
-    block = bytearray(block)
-    _patch_values(
-        block,
-        offs[0],
-        TAG_TILE_OFFSETS if tile is not None else TAG_STRIP_OFFSETS,
-        strip_offs,
-        le,
-    )
     if len(offs) > 1:
-        _patch_values(block, offs[0], TAG_GPS_IFD, [offs[1]], le)
-    return bytes(block) + b"".join(strips)
+        block = patch_entry(block, TAG_GPS_IFD, [offs[1]])
+    return _append_chunks(
+        block,
+        TAG_TILE_OFFSETS if tile is not None else TAG_STRIP_OFFSETS,
+        strips,
+    )
 
 
 def encode_tiff_palette(
@@ -685,16 +681,8 @@ def encode_tiff_palette(
         (TAG_PLANAR, 3, [1]),
         (TAG_COLORMAP, 3, list(colormap)),
     ]
-    block, offs = _write_ifds(le, [tags])
-    data_off = len(block)
-    strip_offs = []
-    pos = data_off
-    for s in strips:
-        strip_offs.append(pos)
-        pos += len(s)
-    block = bytearray(block)
-    _patch_values(block, offs[0], TAG_STRIP_OFFSETS, strip_offs, le)
-    return bytes(block) + b"".join(strips)
+    block, _offs = _write_ifds(le, [tags])
+    return _append_chunks(block, TAG_STRIP_OFFSETS, strips)
 
 
 def _entry_bytes(f: str, typ: int, values) -> bytes:
@@ -752,23 +740,49 @@ def _write_ifds(le: bool, ifds: list[list[tuple]]) -> tuple[bytes, list]:
     return b"".join(chunks) + bytes(data_area), ifd_offs
 
 
-def _patch_values(block: bytearray, ifd_off: int, tag: int, values, le):
-    """Rewrite an existing LONG-typed entry's values in place."""
+_PACK_CODE = {1: "B", 3: "H", 4: "I", 7: "B"}
+
+
+def patch_entry(tiff: bytes, tag: int, values=None, count=None) -> bytes:
+    """Copy of the TIFF block ``tiff`` with IFD0's ``tag`` entry
+    rewritten in the block's own byte order: its first ``len(values)``
+    values, packed as the entry's type (BYTE, SHORT, LONG or
+    UNDEFINED), and/or its ``count`` field.  The one IFD0 patcher:
+    the writers fill in offsets with it, fault fixtures break a tag
+    with it.  Raises MediaFormatError when IFD0 lacks the tag."""
+    le, off = _tiff_header(tiff)
     f = _fmt(le)
-    (n,) = struct.unpack_from(f + "H", block, ifd_off)
+    block = bytearray(tiff)
+    (n,) = struct.unpack_from(f + "H", block, off)
     for i in range(n):
-        e = ifd_off + 2 + 12 * i
+        e = off + 2 + 12 * i
         t, typ, cnt = struct.unpack_from(f + "HHI", block, e)
         if t != tag:
             continue
-        raw = struct.pack(f + "%dI" % len(values), *values)
-        if len(raw) <= 4:
-            block[e + 8 : e + 8 + len(raw)] = raw
-        else:
-            (voff,) = struct.unpack_from(f + "I", block, e + 8)
-            block[voff : voff + len(raw)] = raw
-        return
+        if values is not None:
+            if typ not in _PACK_CODE:
+                raise MediaFormatError(f"cannot patch TIFF type {typ}")
+            voff = e + 8
+            if _TYPE_SIZE[typ] * cnt > 4:
+                (voff,) = struct.unpack_from(f + "I", block, voff)
+            struct.pack_into(
+                f + "%d%s" % (len(values), _PACK_CODE[typ]), block, voff,
+                *values,
+            )
+        if count is not None:
+            struct.pack_into(f + "I", block, e + 4, count)
+        return bytes(block)
     raise MediaFormatError("patch target tag not found")
+
+
+def _append_chunks(block: bytes, tag: int, chunks: list[bytes]) -> bytes:
+    """The IFD block with ``chunks`` (strips or tiles) appended and
+    their offsets written into IFD0's ``tag``."""
+    offsets, pos = [], len(block)
+    for c in chunks:
+        offsets.append(pos)
+        pos += len(c)
+    return patch_entry(block, tag, offsets) + b"".join(chunks)
 
 
 # ---------------------------------------------------------------------------
@@ -824,11 +838,10 @@ def build_exif_app1(
         ifd0.append((TAG_GPS_IFD, 4, [0]))
         ifds.append(gps_tags)
     block, offs = _write_ifds(le, ifds)
-    block = bytearray(block)
-    _patch_values(block, offs[0], TAG_EXIF_IFD, [offs[1]], le)
+    block = patch_entry(block, TAG_EXIF_IFD, [offs[1]])
     if gps_tags:
-        _patch_values(block, offs[0], TAG_GPS_IFD, [offs[2]], le)
-    body = _EXIF_HEAD + bytes(block)
+        block = patch_entry(block, TAG_GPS_IFD, [offs[2]])
+    body = _EXIF_HEAD + block
     if len(body) + 2 > 0xFFFF:
         raise MediaFormatError("EXIF block too large for one APP1")
     return b"\xff\xe1" + struct.pack(">H", len(body) + 2) + body
@@ -1801,15 +1814,8 @@ def encode_tiff_jpeg(
     ]
     if tables_mode:
         tags.append((TAG_JPEG_TABLES, 7, list(tables_stream)))
-    block, offs = _write_ifds(le, [tags])
-    block = bytearray(block)
-    pos = len(block)
-    strip_offs = []
-    for s in strips:
-        strip_offs.append(pos)
-        pos += len(s)
-    _patch_values(block, offs[0], TAG_STRIP_OFFSETS, strip_offs, le)
-    return bytes(block) + b"".join(strips)
+    block, _offs = _write_ifds(le, [tags])
+    return _append_chunks(block, TAG_STRIP_OFFSETS, strips)
 
 
 def _decode_tiff_jpeg(
@@ -2059,12 +2065,82 @@ def encode_tiff_g4(
         (TAG_ROWS_PER_STRIP, 3, [min(rps, 65535)]),
         (TAG_STRIP_COUNTS, 4, [len(s) for s in strips]),
     ]
-    block, offs = _write_ifds(le, [tags])
-    block = bytearray(block)
-    pos = len(block)
-    strip_offs = []
-    for s in strips:
-        strip_offs.append(pos)
-        pos += len(s)
-    _patch_values(block, offs[0], TAG_STRIP_OFFSETS, strip_offs, le)
-    return bytes(block) + b"".join(strips)
+    block, _offs = _write_ifds(le, [tags])
+    return _append_chunks(block, TAG_STRIP_OFFSETS, strips)
+
+
+# ---------------------------------------------------------------------------
+# Variant table: the one map from a TIFF shape's name to the writer call
+# ---------------------------------------------------------------------------
+
+# (name, compression, predictor) of the four lossless strip/tile codecs
+_LOSSLESS = (("none", 1, 1), ("lzw", 5, 2), ("packbits", 32773, 1),
+             ("deflate", 8, 2))
+
+
+def _tiff_variants() -> dict[str, tuple]:
+    """name → (writer, kwargs, pixels, fault).  The writer is called as
+    ``writer(width, height, data, **kwargs)`` plus the fixture's
+    geometry; ``pixels`` names what ``data`` is: "chain" (8-bit RGB,
+    8-bit gray as r=g=b RGB, or 16-bit samples in the file's byte
+    order), "palette" (8-bit indices; the fixture adds ``colormap``) or
+    "page" (bilevel, 1 = black); ``patch_entry(payload, *fault)`` makes
+    decode refuse while probe_tiff still reads the dims."""
+    out: dict[str, tuple] = {}
+    for i, (cname, comp, pred) in enumerate(_LOSSLESS):
+        codec = {"compression": comp, "predictor": pred}
+        # 8-bit strips: II on none/packbits, MM on lzw/deflate
+        order = "ii" if i % 2 == 0 else "mm"
+        for gray in (False, True):
+            out[f"strips-{'gray' if gray else 'rgb'}8-{order}-{cname}"] = (
+                encode_tiff, {"le": i % 2 == 0, "gray": gray, **codec},
+                "chain", (TAG_COMPRESSION, [2]),
+            )
+        if pred == 2:
+            # 16-bit strips: Predictor 2 differences whole samples in
+            # the file's byte order (II on lzw, MM on deflate)
+            out[f"strips-rgb16-{'ii' if i == 1 else 'mm'}-{cname}"] = (
+                encode_tiff, {"le": i == 1, "bits": 16, **codec},
+                "chain", (TAG_COMPRESSION, [2]),
+            )
+        # tiles and planar strips: 16-bit samples on none/packbits
+        bits = 16 if i % 2 == 0 else 8
+        for le in (True, False):
+            tail = f"rgb{bits}-{'ii' if le else 'mm'}-{cname}"
+            out[f"tiles-{tail}"] = (
+                encode_tiff,
+                {"le": le, "bits": bits, "tile": (16, 16), **codec},
+                "chain", (TAG_TILE_WIDTH, [20]),
+            )
+            out[f"planar-{tail}"] = (
+                encode_tiff, {"le": le, "bits": bits, "planar": 2, **codec},
+                "chain", (TAG_PLANAR, [1]),
+            )
+        out[f"palette-ii-{cname}"] = (
+            encode_tiff_palette, {"compression": comp},
+            "palette", (TAG_COLORMAP, None, 300),
+        )
+    for mode in ("tables", "inline"):
+        out[f"jpeg-{mode}"] = (
+            encode_tiff_jpeg, {"tables_mode": mode == "tables"},
+            "chain", (TAG_COMPRESSION, [6]),
+        )
+    for fillorder, fname in ((1, "msb"), (2, "lsb")):
+        page = {"fillorder": fillorder}
+        out[f"g4-{fname}"] = (
+            encode_tiff_g4, {"compression": 4, **page},
+            "page", (TAG_COMPRESSION, [3]),
+        )
+        out[f"mh-{fname}"] = (
+            encode_tiff_g4, {"compression": 2, **page},
+            "page", (TAG_COMPRESSION, [3]),
+        )
+        out[f"g3-{'2d' if fillorder == 1 else '1d'}-{fname}"] = (
+            encode_tiff_g4,
+            {"compression": 3, "t4_2d": fillorder == 1, **page},
+            "page", (TAG_T4_OPTIONS, [2]),
+        )
+    return out
+
+
+TIFF_VARIANTS = _tiff_variants()

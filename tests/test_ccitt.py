@@ -30,7 +30,15 @@ from reindexer_spark.ccitt import (
     g4_encode,
 )
 from reindexer_spark.codecs import MediaFormatError
-from reindexer_spark.tiff import decode_tiff, encode_tiff_g4, probe_tiff
+from reindexer_spark.tiff import (
+    TAG_STRIP_COUNTS,
+    TAG_STRIP_OFFSETS,
+    decode_tiff,
+    encode_tiff_g4,
+    patch_entry,
+    probe_tiff,
+    read_ifd,
+)
 
 
 def test_published_codewords_pin():
@@ -167,27 +175,14 @@ def test_tiff_g4_strip_seam_all_orders():
 
 
 def test_tiff_g4_quarantines():
-    import struct
-
     flat = bytearray(12 * 10)
     p = encode_tiff_g4(12, 10, flat)
-
-    def patch_short(payload, tag, value):
-        buf = bytearray(payload)
-        (ifd,) = struct.unpack_from("<I", buf, 4)
-        (n,) = struct.unpack_from("<H", buf, ifd)
-        for i in range(n):
-            e = ifd + 2 + 12 * i
-            if struct.unpack_from("<H", buf, e)[0] == tag:
-                struct.pack_into("<H", buf, e + 8, value)
-                return bytes(buf)
-        raise AssertionError("tag missing")
 
     # T.6 uncompressed mode bit
     from reindexer_spark.tiff import TAG_T6_OPTIONS
 
     with pytest.raises(MediaFormatError, match="uncompressed"):
-        decode_tiff(patch_short(p, TAG_T6_OPTIONS, 2))
+        decode_tiff(patch_entry(p, TAG_T6_OPTIONS, [2]))
     # G3 proper (Compression 3) stays quarantined BY NAME; a G4
     # stream patched to Compression 2 hits the MH decoder, which
     # either refuses or decodes garbage — the fuzz contract, never a
@@ -195,10 +190,10 @@ def test_tiff_g4_quarantines():
     from reindexer_spark.tiff import TAG_COMPRESSION
 
     with pytest.raises(MediaFormatError, match="G3"):
-        decode_tiff(patch_short(p, TAG_COMPRESSION, 3))
-    assert probe_tiff(patch_short(p, TAG_COMPRESSION, 3))["width"] == 12
+        decode_tiff(patch_entry(p, TAG_COMPRESSION, [3]))
+    assert probe_tiff(patch_entry(p, TAG_COMPRESSION, [3]))["width"] == 12
     try:
-        decode_tiff(patch_short(p, TAG_COMPRESSION, 2))
+        decode_tiff(patch_entry(p, TAG_COMPRESSION, [2]))
     except MediaFormatError:
         pass
 
@@ -247,6 +242,9 @@ def test_mh_in_tiff_both_fillorders_and_strips():
                 (a[:, :, 0] == 0).astype(np.uint8), bits
             )
             assert probe_tiff(p)["compression"] == 2
+            # the MH strips undercut the packed 1-bit raster
+            counts = read_ifd(p, 8, le)[0][TAG_STRIP_COUNTS]["values"]
+            assert sum(counts) < ((31 + 7) // 8) * 22
 
 
 def test_mh_fuzz_quarantine_contract():
@@ -337,8 +335,6 @@ def test_g3_eol_framing_and_desync_quarantine():
 
 
 def test_g3_in_tiff_and_uncompressed_option_quarantines():
-    import struct
-
     bits = np.zeros((26, 37), np.uint8)
     bits[5:18, 4:30] = 1
     flat = bytearray(bits.reshape(-1).tolist())
@@ -351,15 +347,11 @@ def test_g3_in_tiff_and_uncompressed_option_quarantines():
         a = np.frombuffer(rgb, np.uint8).reshape(26, 37, 3)
         assert np.array_equal((a[:, :, 0] == 0).astype(np.uint8), bits)
         assert probe_tiff(p)["compression"] == 3
+        # every strip opens with an EOL (000000000001), no fill first
+        for s0 in read_ifd(p, 8, True)[0][TAG_STRIP_OFFSETS]["values"]:
+            assert (p[s0] << 4 | p[s0 + 1] >> 4) == 1
     # T4Options uncompressed-mode bit quarantines by name
     from reindexer_spark.tiff import TAG_T4_OPTIONS
 
-    buf = bytearray(p)
-    (ifd,) = struct.unpack_from("<I", buf, 4)
-    (n,) = struct.unpack_from("<H", buf, ifd)
-    for i in range(n):
-        e = ifd + 2 + 12 * i
-        if struct.unpack_from("<H", buf, e)[0] == TAG_T4_OPTIONS:
-            struct.pack_into("<I", buf, e + 8, 2)
     with pytest.raises(MediaFormatError, match="uncompressed"):
-        decode_tiff(bytes(buf))
+        decode_tiff(patch_entry(p, TAG_T4_OPTIONS, [2]))

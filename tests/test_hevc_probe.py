@@ -94,15 +94,22 @@ def test_container_probe_depth_and_keyframes(container):
 
 @pytest.mark.parametrize("container", ["mp4", "mkv"])
 def test_default_fixture_bytes_unchanged_semantics(container):
-    """sync_every=1 (the default every existing caller uses) must
-    keep fixture bytes identical to the pre-round-14 encoders — no
-    stss box, mkv flags untouched."""
+    """sync_every=1 is the default: no stss box in mp4 (every sample
+    sync), and mkv flags every block keyframe — the two containers
+    index the same keyframes."""
     enc = encode_mp4_coded if container == "mp4" else encode_mkv_coded
     assert enc(100, 64, codec="hevc") == enc(
         100, 64, codec="hevc", sync_every=1
     )
     if container == "mp4":
         assert b"stss" not in enc(100, 64, codec="hevc")
+    assert mkv_block_keyframes(
+        encode_mkv_coded(100, 64, codec="hevc", n_frames=5)
+    ) == mp4_keyframe_index(
+        encode_mp4_coded(100, 64, codec="hevc", n_frames=5)
+    ) == [1, 2, 3, 4, 5]
+    with pytest.raises(ValueError):
+        enc(100, 64, codec="hevc", sync_every=0)
 
 
 def test_mp4_keyframe_index_no_stss_means_all_sync():

@@ -5,16 +5,56 @@ queries must execute and return a stable schema."""
 from __future__ import annotations
 
 import pytest
+from conftest import FOLDED_TIFF_LANES
 
 from reindexer_spark import all_queries
-from reindexer_spark.oracle import compare_query
+from reindexer_spark.oracle import (
+    canonicalize,
+    compare_query,
+    run_oracle_duckdb,
+    value_hash,
+)
+from reindexer_spark.registry import get_query
+from reindexer_spark.tiff import TIFF_VARIANTS
 
 QUERY_NAMES = sorted(all_queries())
 
+_TIFF_MATRIX: dict[str, tuple] = {}
 
-@pytest.mark.parametrize("name", QUERY_NAMES)
+
+def tiff_family_problems(spark, sf_dir: str, family: str) -> list[str]:
+    """Oracle parity of one variant family's rows of image_tiff_matrix:
+    every variant of the family present, each row equal to the
+    oracle's.  Both sides are computed once per sf_dir."""
+    if sf_dir not in _TIFF_MATRIX:
+        q = get_query("image_tiff_matrix")
+        _TIFF_MATRIX[sf_dir] = (
+            canonicalize(q.fn(spark, sf_dir).toPandas()),
+            canonicalize(run_oracle_duckdb(q.oracle, sf_dir)),
+        )
+    names = sorted(n for n in TIFF_VARIANTS if n.startswith(family + "-"))
+    spdf, opdf = (
+        pdf[pdf["variant"].isin(names)].reset_index(drop=True)
+        for pdf in _TIFF_MATRIX[sf_dir]
+    )
+    problems = []
+    if sorted(spdf["variant"]) != names:
+        problems.append(f"variants: spark={sorted(spdf['variant'])} "
+                        f"table={names}")
+    if value_hash(spdf) != value_hash(opdf):
+        problems.append(
+            f"rows differ: spark={spdf.to_dict('records')!r} "
+            f"oracle={opdf.to_dict('records')!r}"
+        )
+    return problems
+
+
+@pytest.mark.parametrize("name", sorted(QUERY_NAMES + list(FOLDED_TIFF_LANES)))
 def test_query_matches_oracle(spark, sf_dir, name):
-    problems = compare_query(spark, name, sf_dir)
+    if name in FOLDED_TIFF_LANES:
+        problems = tiff_family_problems(spark, sf_dir, FOLDED_TIFF_LANES[name])
+    else:
+        problems = compare_query(spark, name, sf_dir)
     assert not problems, f"{name}: " + "; ".join(p[:500] for p in problems)
 
 

@@ -10,6 +10,7 @@ import datetime as dt
 import time
 
 import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
@@ -141,6 +142,47 @@ def test_stream_events_source_matches_batch_count(spark, sf_dir):
         spark.read.parquet(f"{sf_dir}/events.parquet")
     )
     assert out.agg(F.sum("count")).collect()[0][0] == batch.count()
+
+
+def test_nanos_events_read_without_setting_session_confs(spark, tmp_path):
+    """An events.parquet whose ts is INT64 TIMESTAMP(NANOS): building
+    the batch table and the stream sets no session conf (the session
+    declares nanosAsLong up front), and both read ``ts: timestamp`` at
+    the exact microseconds."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from reindexer_spark.catalog import load_table
+    from reindexer_spark.session import tune
+    from reindexer_spark.streaming.runner import _events_ts_is_nanos
+
+    # past 2^53 ns: a double division would round the microseconds
+    ns = [1_700_000_000_123_456_789, 1_700_000_123_000_001_999]
+    pq.write_table(
+        pa.table({
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([7, 8], pa.int64()),
+            "event_type": ["a", "b"],
+            "value": [1.0, 2.0],
+            "props": ["{}", "{}"],
+        }),
+        tmp_path / "events.parquet",
+    )
+    sf_dir = str(tmp_path)
+    assert _events_ts_is_nanos(sf_dir)
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    tune(spark)
+    before = spark.conf.getAll
+    batch = load_table(spark, sf_dir, "events")
+    stream = stream_events(spark, sf_dir)
+    assert spark.conf.getAll == before
+    assert dict(batch.dtypes)["ts"] == dict(stream.dtypes)["ts"] == "timestamp"
+    micros = [(1, ns[0] // 1000), (2, ns[1] // 1000)]
+    pick = ["event_id", F.unix_micros("ts").alias("us")]
+    assert sorted(map(tuple, batch.select(*pick).collect())) == micros
+    streamed = run_stream_to_memory(stream.select(*pick), output_mode="append")
+    assert sorted(map(tuple, streamed.collect())) == micros
 
 
 def test_stateful_quota_alerts_across_batches(spark, tmp_path):
@@ -1056,15 +1098,10 @@ def test_cdc_dedup_restart_refuses_a_corrupted_state_file(spark, tmp_path):
     data[len(data) // 2] ^= 0xFF
     victim.write_bytes(bytes(data))
     _append_doc_batch(spark, root, 2, [(20, _unique_text(20, 20))])
-    with pytest.raises(Exception) as failed:
+    with pytest.raises(StreamingQueryException) as failed:
         run()
-    # the task's error reaches the driver as text inside the job-abort
-    # message, one link down the JVM cause chain pyspark keeps in _cause
-    messages, err = [], failed.value
-    while err is not None:
-        messages.append(str(err))
-        err = err._cause
-    assert "[CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED]" in "\n".join(messages)
+    # drive_stream names the innermost cause in the error it re-raises
+    assert "[CHECKPOINT_FILE_CHECKSUM_VERIFICATION_FAILED]" in str(failed.value)
 
 
 def test_minhash_dedup_state_survives_restart(spark, tmp_path):
